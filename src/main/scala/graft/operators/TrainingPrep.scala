@@ -672,17 +672,6 @@ object TrainingPrep {
     BpeTrain.ensureMergesPinned(s, d)
   }
 
-  /** The admission gate chain for ONE ingest batch (doc_id, text, lang)
-    * against the frozen at-rest artifacts — ONE shared body for the
-    * batch query ([[corpusPrepDelta]]) and the streaming twin
-    * ([[graft.streaming.StreamPipelines.streamingCorpusAdmission]]), the
-    * [[corpusPrepChain]] stance: the served path cannot drift from the
-    * oracle-verified one. Every gate is per-document against frozen
-    * state (quality thresholds are stateless; exact/near-dup probe the
-    * bucketed index; the benchmark gram set is fixed; BPE merges are
-    * frozen), so verdicts are independent of how ingest is batched —
-    * StreamingSpec pins that batch-boundary invariance adversarially.
-    */
   /** Distinct word 5-grams of the frozen benchmark split — fixed state
     * every admission gate probes (the chain's scaladoc: "the benchmark
     * gram set is fixed"), cached per (session, corpus version) like the
@@ -701,6 +690,24 @@ object TrainingPrep {
         .barrier("distinct 5-grams of the fixed benchmark split (gram-vocab-bound)")
     }
 
+  /** The admission gate chain for ONE ingest batch (doc_id, text, lang)
+    * against the frozen at-rest artifacts — ONE shared body for the
+    * batch query ([[corpusPrepDelta]]) and the streaming admission
+    * stage ([[graft.streaming.StreamPipelines.admissionStage]]), the
+    * [[corpusPrepChain]] stance: the served path cannot drift from the
+    * oracle-verified one. Every gate is per-document against frozen
+    * state (quality thresholds are stateless; exact/near-dup probe the
+    * bucketed index; the benchmark gram set is fixed; BPE merges are
+    * frozen), so verdicts are independent of how ingest is batched —
+    * StreamingSpec pins that batch-boundary invariance adversarially.
+    *
+    * The returned frame is LAZY: its two pins are `eager = false`, so
+    * nothing is read until a consumer runs it. A caller must let its
+    * sink consume the frame before it mutates any table the chain
+    * probes (the `<prefix>_*` dedup-index tables, e.g. via
+    * [[Dedup.appendDedupIndex]]) — a sink that ran after such an append
+    * would judge the batch against the grown index.
+    */
   private[graft] def deltaAdmissionChain(
       s: SparkSession, d: String, batch: DataFrame,
       prefix: String = "deltadx"): DataFrame = {

@@ -68,13 +68,7 @@ object StreamPipelines {
       parsed.withWatermark("timestamp", w)
         .dropDuplicatesWithinWatermark("request_id")
     }
-    deduped
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(sink)
-      .start()
+    appendStream(deduped, checkpoint, trigger)(sink)
   }
 
   /** A5 made real: per-key event-time tumbling-window counts with a
@@ -489,17 +483,113 @@ object StreamPipelines {
         OutputMode.Append())
   }
 
+  private type Sink = (DataFrame, Long) => Unit
+
+  /** Starts `df` as an append-mode foreachBatch query with its
+    * checkpoint and trigger — the wiring every append stream here
+    * shares. `body` is the whole per-batch work, emptiness check
+    * included where the stream wants one.
+    */
+  private def appendStream(df: DataFrame, checkpoint: String, trigger: Trigger)(
+      body: Sink): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+      .start()
+
+  /** Pairs an ANN drift sink with the frozen at-rest cell stats it
+    * compares against. A mis-wired stream (a drift sink without stats)
+    * fails here, at wiring time, rather than starting cleanly and
+    * dying on its first non-empty batch.
+    */
+  private def annDriftWiring(what: String, driftSink: Option[Sink],
+      atRestStats: Option[DataFrame]): Option[(Sink, DataFrame)] = {
+    require(driftSink.isEmpty || atRestStats.nonEmpty,
+      s"$what requires atRestStats (AnnMaintain.atRestCellStats at wiring time)")
+    driftSink.zip(atRestStats)
+  }
+
+  /** Admission stage of one corpus micro-batch: the admitted rows of
+    * `admitIn` with their token accounting
+    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]]) go to
+    * `sink`, which must consume them before the caller appends to any
+    * table the chain probes (the chain's pins are lazy). Then the
+    * per-lang tokenizer-drift flags of `docs` under the frozen BPE
+    * merges and unigram pieces — the same drift bodies and retrain
+    * rules as the batch audits. Every artifact is frozen, so the stage
+    * holds no state and its cost is ∝ batch words.
+    */
+  private def admissionStage(sfDir: String, admitIn: DataFrame, docs: DataFrame,
+      id: Long, sink: Sink, driftSink: Option[Sink], uniDriftSink: Option[Sink]): Unit = {
+    val s = docs.sparkSession
+    sink(graft.operators.TrainingPrep.deltaAdmissionChain(s, sfDir, admitIn), id)
+    driftSink.foreach(ds =>
+      ds(graft.operators.BpeTrain.vocabDriftOf(s, sfDir, docs), id))
+    uniDriftSink.foreach(ds =>
+      ds(graft.operators.UnigramLm.unigramDriftOf(s, sfDir, docs), id))
+  }
+
+  /** Split stage of one corpus micro-batch of (doc_id, text) `docs`:
+    *   1. split-bridge flags — batch docs whose verified anchors span
+    *      ≥2 at-rest clusters — computed BEFORE the fold grows the
+    *      state, from the same bucketed index and split table the
+    *      assignment probes;
+    *   2. the assignment ([[graft.operators.Dedup.splitAssignDeltaCore]])
+    *      against the current split table, pinned once and sunk;
+    *   3. the fold of the assignments into the split table and the
+    *      append of the batch's dedup-index rows.
+    * Replay guard: Structured Streaming delivers a micro-batch at least
+    * once, and a crash between the sink and the appends re-delivers it
+    * too, so every at-rest append is guarded by the target table's own
+    * membership (an anti-join on its key) — the split fold here, each
+    * of the index's three tables inside `appendDedupIndex` — and a
+    * redelivery re-appends exactly the tables it missed.
+    */
+  private def splitStage(docs: DataFrame, prefix: String, id: Long,
+      sink: Sink, driftSink: Option[Sink]): Unit = {
+    val s = docs.sparkSession
+    driftSink.foreach(ds =>
+      ds(graft.operators.Dedup.splitBridgeMonitor(s, docs, prefix), id))
+    val assigned = graft.operators.Dedup.splitAssignDeltaCore(
+        s, docs, s.table(s"${prefix}_split"), prefix)
+      .barrier("one row per micro-batch doc")
+    sink(assigned, id)
+    val seenSplit = s.table(s"${prefix}_split").select(col("doc_id"))
+    graft.operators.Dedup.foldSplitAssign(s,
+      assigned.join(seenSplit, Seq("doc_id"), "left_anti"), prefix)
+    graft.operators.Dedup.appendDedupIndex(
+      docs.select(col("doc_id"), col("text")), prefix,
+      replayGuarded = true)
+  }
+
+  /** ANN stage of one micro-batch of (vec_id, v) `vecs`: the rows
+    * encoded under the FROZEN quantizers
+    * ([[graft.operators.AnnMaintain.encodeBatch]]) go to `sink`, then —
+    * when wired — the batch's per-cell occupancy/distance drift flags
+    * against the frozen at-rest stats, through the same driftReport
+    * tail as the batch audit. No streaming state; cost ∝ batch rows.
+    */
+  private def annStage(vecs: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+      id: Long, sink: Sink, drift: Option[(Sink, DataFrame)]): Unit = {
+    sink(graft.operators.AnnMaintain.encodeBatch(vecs, centroids, codebooks), id)
+    drift.foreach { case (ds, stats) =>
+      ds(graft.operators.AnnMaintain.driftReportFromStats(stats, vecs, centroids), id)
+    }
+  }
+
   /** Streaming twin of [[graft.operators.AnnMaintain.annIndexAppend]] —
     * continuous inverted-list maintenance: each micro-batch of newly
-    * arrived embeddings (vec_id, v array<double>) is assigned to its
-    * nearest FROZEN coarse centroid and PQ-encoded with the FROZEN
-    * codebooks, and the encoded rows go to the sink (the at-rest
-    * inverted-list appender). The quantizers are plan constants, so
-    * state is EMPTY — per-batch cost ∝ batch rows, the same
+    * arrived embeddings (vec_id, v array<double>) runs [[annStage]],
+    * and the encoded rows go to the sink (the at-rest inverted-list
+    * appender). The quantizers are plan constants, so state is EMPTY —
+    * per-batch cost ∝ batch rows, the same
     * [[graft.operators.AnnMaintain.encodeBatch]] core as the batch
     * query, and exactly how a production vector pipeline keeps its ANN
-    * index fresh between rebuilds (the drift monitor stays a batch
-    * job over the at-rest table).
+    * index fresh between rebuilds. `driftSink` requires `atRestStats`
+    * (computed once at wiring time); without them the call fails
+    * before the stream starts.
     */
   def streamingAnnAppend(
       vecs: DataFrame,
@@ -509,32 +599,16 @@ object StreamPipelines {
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
       driftSink: Option[(DataFrame, Long) => Unit] = None,
-      atRestStats: Option[DataFrame] = None): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.operators.AnnMaintain.encodeBatch(batch, centroids, codebooks), id)
-          // per-batch drift flags (VERDICT r14 item 7): the batch's
-          // per-cell occupancy/distance vs the FROZEN at-rest stats
-          // (computed once at wiring time — a deterministic function of
-          // the at-rest table and the centroid sidecar), through the
-          // SAME driftReport tail the batch audit runs. Zero new
-          // streaming state; per-batch cost is batch-side only.
-          driftSink.foreach(ds => ds(graft.operators.AnnMaintain
-            .driftReportFromStats(atRestStats.getOrElse(sys.error(
-              "streamingAnnAppend: driftSink requires atRestStats " +
-                "(AnnMaintain.atRestCellStats at wiring time)")),
-              batch, centroids), id))
-        }
-      }
-      .start()
+      atRestStats: Option[DataFrame] = None): StreamingQuery = {
+    val drift = annDriftWiring("streamingAnnAppend: driftSink", driftSink, atRestStats)
+    appendStream(vecs, checkpoint, trigger) { (batch, id) =>
+      if (!batch.isEmpty) annStage(batch, centroids, codebooks, id, sink, drift)
+    }
+  }
 
   /** Streaming twin of [[graft.operators.TrainingPrep.corpusPrepDelta]]
-    * — incremental corpus ADMISSION at ingest time (VERDICT r12 item
-    * 8): each micro-batch of (doc_id, text, lang) documents runs the
+    * — incremental corpus ADMISSION at ingest time: each micro-batch
+    * of (doc_id, text, lang) documents runs [[admissionStage]], the
     * FULL admission gate chain — stateless quality gate, exact-dup drop
     * vs the bucketed digest sidecar, near-dup probe vs the bucketed
     * minhash index, benchmark 5-gram decontamination, BPE token
@@ -557,34 +631,16 @@ object StreamPipelines {
       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
       driftSink: Option[(DataFrame, Long) => Unit] = None,
       uniDriftSink: Option[(DataFrame, Long) => Unit] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          sink(graft.operators.TrainingPrep.deltaAdmissionChain(s, sfDir, batch), id)
-          // per-batch tokenizer-drift flags (VERDICT r14 item 7): the
-          // batch's per-lang fertility under the FROZEN merges vs the
-          // cached at-rest counters — the SAME vocabDrift body and
-          // integer cross-multiplied retrain rule as the batch audit.
-          // Zero new streaming state; per-batch cost ∝ batch words.
-          driftSink.foreach(ds =>
-            ds(graft.operators.BpeTrain.vocabDriftOf(s, sfDir, batch), id))
-          // the unigram tokenizer's twin (VERDICT r15 item 4): same
-          // shared drift body, frozen trained-piece token table
-          uniDriftSink.foreach(ds =>
-            ds(graft.operators.UnigramLm.unigramDriftOf(s, sfDir, batch), id))
-        }
-      }
-      .start()
+    appendStream(docs, checkpoint, trigger) { (batch, id) =>
+      if (!batch.isEmpty)
+        admissionStage(sfDir, batch, batch, id, sink, driftSink, uniDriftSink)
+    }
 
   /** Streaming twin of [[graft.operators.Dedup.splitAssignDelta2]] —
     * leakage-free split assignment at INGEST time, with the
-    * generation loop run per micro-batch: each batch of (doc_id,
-    * text) documents is assigned against the CURRENT stored split
-    * table and bucketed dedup index (shared
+    * generation loop run per micro-batch ([[splitStage]]): each batch
+    * of (doc_id, text) documents is assigned against the CURRENT
+    * stored split table and bucketed dedup index (shared
     * [[graft.operators.Dedup.splitAssignDeltaCore]] body — the served
     * path cannot drift from the oracle-verified one), the assignments
     * go to the sink, and THEN the batch's rows are folded into the
@@ -611,64 +667,28 @@ object StreamPipelines {
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
       driftSink: Option[(DataFrame, Long) => Unit] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // per-batch split-bridge flags (VERDICT r14 item 7): batch
-          // docs whose verified anchors span ≥2 at-rest clusters — the
-          // event that becomes a q_split_drift row at the next version
-          // bump — flagged BEFORE the fold grows the state, from the
-          // same bucketed index + split table the assignment probes.
-          driftSink.foreach(ds =>
-            ds(graft.operators.Dedup.splitBridgeMonitor(s, batch, prefix), id))
-          val assigned = graft.operators.Dedup.splitAssignDeltaCore(
-              s, batch, s.table(s"${prefix}_split"), prefix)
-            .barrier("one row per micro-batch doc")
-          sink(assigned, id)
-          // replay guard (ADVICE r14/r15): Structured Streaming retries
-          // a micro-batch at-least-once, and a crash between sink() and
-          // the folds re-delivers it too — so EVERY at-rest append is
-          // guarded by THE TARGET TABLE'S OWN membership (anti-join on
-          // its key): the split fold here, and each of the dedup
-          // index's three tables inside appendDedupIndex
-          // (replayGuarded), so a crash between ANY two appends
-          // re-appends exactly the missed tables on redelivery. Each
-          // guard scans one bucketed key column per batch; the probe
-          // itself already reads the same tables.
-          val seenSplit = s.table(s"${prefix}_split").select(col("doc_id"))
-          graft.operators.Dedup.foldSplitAssign(s,
-            assigned.join(seenSplit, Seq("doc_id"), "left_anti"), prefix)
-          graft.operators.Dedup.appendDedupIndex(
-            batch.select(col("doc_id"), col("text")), prefix,
-            replayGuarded = true)
-        }
-      }
-      .start()
+    appendStream(docs, checkpoint, trigger) { (batch, id) =>
+      if (!batch.isEmpty) splitStage(batch, prefix, id, sink, driftSink)
+    }
 
-  /** ONE production ingest (VERDICT r15 item 6): each micro-batch of
-    * (doc_id, text, lang, v) documents runs — in dependency order
-    * inside a SINGLE foreachBatch body — the three loops a deployment
-    * otherwise wires separately: corpus ADMISSION
-    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]]), leakage-free
+  /** ONE production ingest: each micro-batch of (doc_id, text, lang, v)
+    * documents runs — in dependency order inside a SINGLE foreachBatch
+    * body — the three stages a deployment otherwise wires as separate
+    * streams: corpus ADMISSION ([[admissionStage]]), leakage-free
     * SPLIT assignment with its at-rest fold + dedup-index append
-    * ([[graft.operators.Dedup.splitAssignDeltaCore]]), and ANN
-    * inverted-list maintenance
-    * ([[graft.operators.AnnMaintain.encodeBatch]]), plus every per-batch
-    * drift flag (tokenizer ×2, split-bridge, ANN cell, and — when the
-    * gate is wired — the Moore-Lewis n_oov share). Each stage calls
-    * the SAME shared chain body as its standalone loop, so
-    * unified-vs-separate equality is structural (StreamingSpec pins it
-    * on identical slices); one append transaction per at-rest table per
-    * batch; split-bridge flags are computed BEFORE the fold grows the
-    * state; the index appends keep the standalone loop's per-table
-    * replay guards, so at-least-once redelivery is a no-op here too.
+    * ([[splitStage]]), and ANN inverted-list maintenance
+    * ([[annStage]]), plus every per-batch drift flag (tokenizer ×2,
+    * split-bridge, ANN cell, and — when the gate is wired — the
+    * Moore-Lewis n_oov share). The standalone streams call the SAME
+    * stage functions, so unified-vs-separate equality is structural
+    * (StreamingSpec pins it on identical slices); one append
+    * transaction per at-rest table per batch; split-bridge flags are
+    * computed BEFORE the fold grows the state; the index appends keep
+    * their per-table replay guards, so at-least-once redelivery is a
+    * no-op here too.
     *
-    * Optional stage 0 (VERDICT r17 item 2): the frozen-LM Moore-Lewis
-    * admission gate. `mlGateSink` receives each batch's
+    * Optional stage 0: the frozen-LM Moore-Lewis admission gate.
+    * `mlGateSink` receives each batch's
     * [[graft.operators.CorpusAudit.mooreLewisGateBatch]] verdicts
     * (scored against the `${prefix}_ml_llr` / `${prefix}_ml_unk`
     * sidecar [[graft.operators.CorpusAudit.writeMooreLewisLm]] pinned
@@ -682,7 +702,7 @@ object StreamPipelines {
     * identical verdicts and the crash-recovery property is unchanged
     * (StreamingSpec's injected-crash spec runs with the gate wired).
     *
-    * `mlGateRule` picks the gate's keep rule (VERDICT r18 item 3):
+    * `mlGateRule` picks the gate's keep rule:
     * `threshold` (the sign rule — [[graft.operators.CorpusAudit.mooreLewisDelta]]'s
     * form) or `budget` — each batch cut at the FROZEN at-rest cutpoint
     * `${prefix}_ml_cut` that [[graft.operators.CorpusAudit.writeMooreLewisLm]]
@@ -694,15 +714,19 @@ object StreamPipelines {
     * construction, so sustained batch drift from ~200000 micros means
     * the corpus moved and the sidecar wants re-pinning.
     *
-    * Withholding scopes to the ADMISSION chain only — a deliberate
-    * choice, not an oversight (ADVICE r18): stages 2/3 still fold every
-    * batch doc into the split table, dedup grams/digests index, and ANN
-    * inverted lists, so rejected documents leave at-rest footprints.
+    * Withholding scopes to the ADMISSION chain only, by design: the
+    * split and ANN stages still fold every batch doc into the split
+    * table, dedup grams/digests index, and ANN inverted lists, so
+    * rejected documents leave at-rest footprints.
     * That is what keeps a rejected doc VISIBLE to the engine — later
     * near-dup probes, leakage checks, and ANN queries still see it, and
     * a re-adjudication after a sidecar re-pin needs no re-ingest. The
     * gate controls what enters the training corpus, not what the
     * pipeline remembers having seen.
+    *
+    * Mis-wiring fails at start, never on a later batch: an ANN drift
+    * sink without `atRestStats`, a gate without its pinned sidecar, an
+    * unknown rule, or the budget rule without a valid pinned cutpoint.
     *
     * State posture: all stages probe frozen-or-bucketed at-rest
     * artifacts; streaming state is EMPTY and per-batch cost stays
@@ -727,14 +751,8 @@ object StreamPipelines {
       mlGateSink: Option[(DataFrame, Long) => Unit] = None,
       mlDriftSink: Option[(DataFrame, Long) => Unit] = None,
       mlGateRule: String = "threshold"): StreamingQuery = {
-    // fail at WIRING time, not on the first non-empty batch (ADVICE
-    // r16): a mis-wired stream must not start cleanly and die later
-    require(annDriftSink.isEmpty || atRestStats.nonEmpty,
-      "streamingCorpusIngest: annDriftSink requires atRestStats " +
-        "(AnnMaintain.atRestCellStats at wiring time)")
-    // the frozen-LM admission gate (VERDICT r17 item 2) probes the
-    // sidecar CorpusAudit.writeMooreLewisLm pins — same wiring-time
-    // stance: a gate wired without its artifacts must not start
+    val annDrift = annDriftWiring("streamingCorpusIngest: annDriftSink",
+      annDriftSink, atRestStats)
     require(mlGateSink.isEmpty && mlDriftSink.isEmpty ||
       (docs.sparkSession.catalog.tableExists(s"${prefix}_ml_llr") &&
         docs.sparkSession.catalog.tableExists(s"${prefix}_ml_unk")),
@@ -750,84 +768,55 @@ object StreamPipelines {
       s"streamingCorpusIngest: mlGateRule='budget' requires the pinned " +
         s"cutpoint table ${prefix}_ml_cut (re-pin with the current " +
         s"CorpusAudit.writeMooreLewisLm('$prefix'))")
-    // the frozen cutpoint is a wiring-time scalar like the LM tables —
-    // read ONCE here through the validating helper (ADVICE r19: a NULL
-    // pinned cut — percentile over an empty at-rest candidate set —
-    // refuses to wire with a re-pin message instead of an opaque NPE),
-    // then threaded into every per-batch gateBatch call so verdicts
-    // and monitor judge against the SAME value even if the sidecar is
-    // re-pinned while the stream runs
+    // the frozen cutpoint is a wiring-time scalar like the LM tables,
+    // read ONCE through the validating helper (a NULL pinned cut — a
+    // percentile over an empty at-rest candidate set — refuses to wire
+    // with a re-pin message), then threaded into every per-batch
+    // gateBatch call so verdicts and monitor judge against the SAME
+    // value even if the sidecar is re-pinned while the stream runs
     val mlCut: Option[Double] =
       if (mlGated && mlGateRule == "budget")
         Some(graft.operators.CorpusAudit.mooreLewisCut(docs.sparkSession, prefix))
       else None
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // one materialization of the batch — the stages and up to
-          // five drift flags all re-read it (bound: micro-batch rows)
-          val b = batch.barrier("one micro-batch of ingest docs")
-          val docsB = b.select(col("doc_id"), col("text"), col("lang"))
-          // 0. frozen-LM admission gate (optional; stateless — frozen
-          //    artifacts, so a replayed batch re-derives identical
-          //    verdicts): score candidates against the pinned sidecar,
-          //    emit verdicts + the n_oov monitor row, and — only when
-          //    mlGateSink is wired (enforcement; mlDriftSink alone is
-          //    shadow mode) — withhold the REJECTED docs from the
-          //    admission chain. Docs the gate has no verdict for
-          //    (`en` — in-domain by definition — or wordless) pass
-          //    through: no evidence is not rejection, and the
-          //    downstream quality gates still see them.
-          val admitIn = if (!mlGated) docsB else {
-            val scored = graft.operators.CorpusAudit
-              .mooreLewisGateBatch(s,
-                b.select(col("doc_id"), col("lang"), col("text")), prefix,
-                rule = mlGateRule, cut = mlCut)
-              .barrier("one row per scored batch candidate")
-            mlGateSink.foreach(gs => gs(scored, id))
-            // the monitor's attribution rides the verdict rows'
-            // score_keep column (VERDICT r19 item 2) — nothing to pair
-            mlDriftSink.foreach(ds =>
-              ds(graft.operators.CorpusAudit.mooreLewisGateMonitor(scored), id))
-            if (mlGateSink.isEmpty) docsB
-            else docsB.join(scored.filter(!col("keep")).select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-          }
-          // 1. admission + tokenizer drift (frozen artifacts, stateless)
-          admitSink(graft.operators.TrainingPrep.deltaAdmissionChain(s, sfDir, admitIn), id)
-          vocabDriftSink.foreach(ds =>
-            ds(graft.operators.BpeTrain.vocabDriftOf(s, sfDir, docsB), id))
-          uniDriftSink.foreach(ds =>
-            ds(graft.operators.UnigramLm.unigramDriftOf(s, sfDir, docsB), id))
-          // 2. split assignment: bridge flags first, then assign, fold,
-          //    append — the streamingSplitAssign body verbatim
-          val idDocs = b.select(col("doc_id"), col("text"))
-          splitDriftSink.foreach(ds =>
-            ds(graft.operators.Dedup.splitBridgeMonitor(s, idDocs, prefix), id))
-          val assigned = graft.operators.Dedup.splitAssignDeltaCore(
-              s, idDocs, s.table(s"${prefix}_split"), prefix)
-            .barrier("one row per micro-batch doc")
-          splitSink(assigned, id)
-          val seenSplit = s.table(s"${prefix}_split").select(col("doc_id"))
-          graft.operators.Dedup.foldSplitAssign(s,
-            assigned.join(seenSplit, Seq("doc_id"), "left_anti"), prefix)
-          graft.operators.Dedup.appendDedupIndex(idDocs, prefix,
-            replayGuarded = true)
-          // 3. ANN maintenance on the batch's embeddings (frozen
-          //    quantizers) — the streamingAnnAppend body verbatim
-          val vecs = b.select(col("doc_id").as("vec_id"), col("v"))
-          annSink(graft.operators.AnnMaintain.encodeBatch(vecs, centroids, codebooks), id)
-          annDriftSink.foreach(ds => ds(graft.operators.AnnMaintain
-            .driftReportFromStats(atRestStats.getOrElse(sys.error(
-              "unreachable: checked by require at wiring time")),
-              vecs, centroids), id))
+    appendStream(docs, checkpoint, trigger) { (batch, id) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        // one materialization of the batch — the stages and up to
+        // five drift flags all re-read it (bound: micro-batch rows)
+        val b = batch.barrier("one micro-batch of ingest docs")
+        val docsB = b.select(col("doc_id"), col("text"), col("lang"))
+        // 0. frozen-LM admission gate (optional; stateless — frozen
+        //    artifacts, so a replayed batch re-derives identical
+        //    verdicts): score candidates against the pinned sidecar,
+        //    emit verdicts + the n_oov monitor row, and — only when
+        //    mlGateSink is wired (enforcement; mlDriftSink alone is
+        //    shadow mode) — withhold the REJECTED docs from the
+        //    admission chain. Docs the gate has no verdict for
+        //    (`en` — in-domain by definition — or wordless) pass
+        //    through: no evidence is not rejection, and the
+        //    downstream quality gates still see them.
+        val admitIn = if (!mlGated) docsB else {
+          val scored = graft.operators.CorpusAudit
+            .mooreLewisGateBatch(s,
+              b.select(col("doc_id"), col("lang"), col("text")), prefix,
+              rule = mlGateRule, cut = mlCut)
+            .barrier("one row per scored batch candidate")
+          mlGateSink.foreach(gs => gs(scored, id))
+          // the monitor's attribution rides the verdict rows'
+          // score_keep column — nothing to pair
+          mlDriftSink.foreach(ds =>
+            ds(graft.operators.CorpusAudit.mooreLewisGateMonitor(scored), id))
+          if (mlGateSink.isEmpty) docsB
+          else docsB.join(scored.filter(!col("keep")).select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
         }
+        admissionStage(sfDir, admitIn, docsB, id, admitSink, vocabDriftSink, uniDriftSink)
+        splitStage(b.select(col("doc_id"), col("text")), prefix, id,
+          splitSink, splitDriftSink)
+        annStage(b.select(col("doc_id").as("vec_id"), col("v")),
+          centroids, codebooks, id, annSink, annDrift)
       }
-      .start()
+    }
   }
 
   /** Streaming twin of [[graft.operators.Retrieval.bm25Indexed]] — the
@@ -848,15 +837,10 @@ object StreamPipelines {
       sink: (DataFrame, Long) => Unit,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery =
-    queries.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(graft.operators.Retrieval.bm25ProbeBatch(
-          batch, postings, termStats, stats), id)
-      }
-      .start()
+    appendStream(queries, checkpoint, trigger) { (batch, id) =>
+      sink(graft.operators.Retrieval.bm25ProbeBatch(
+        batch, postings, termStats, stats), id)
+    }
 
   /** Streaming twin of [[graft.operators.ScaleOps.ngramDecontaminate]]
     * — benchmark decontamination AT INGEST TIME, before a contaminated
@@ -875,20 +859,15 @@ object StreamPipelines {
       sink: (DataFrame, Long) => Unit,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(
-          graft.operators.ScaleOps.wordGramsOf(batch)
-            .join(broadcast(benchGrams), Seq("g"))
-            .groupBy(col("doc_id"))
-            .agg(countDistinct(col("g")).as("n_grams_hit"),
-              count(lit(1)).as("n_positions")),
-          id)
-      }
-      .start()
+    appendStream(docs, checkpoint, trigger) { (batch, id) =>
+      sink(
+        graft.operators.ScaleOps.wordGramsOf(batch)
+          .join(broadcast(benchGrams), Seq("g"))
+          .groupBy(col("doc_id"))
+          .agg(countDistinct(col("g")).as("n_grams_hit"),
+            count(lit(1)).as("n_positions")),
+        id)
+    }
 }
 
 /** One verified near-dup hit of [[StreamPipelines.streamingNearDedup]]:
@@ -989,6 +968,22 @@ class EndpointSessionsProcessor(gapMs: Long)
   }
 }
 
+/** Epoch-microsecond timestamps for the event-time processors below.
+  * They carry times as MICROS, the events table's precision after
+  * Tables.events' nanos truncation: millis would silently equate
+  * distinct event times.
+  */
+private object EventMicros {
+  def micros(t: java.sql.Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  def toTs(m: Long): java.sql.Timestamp = {
+    val t = new java.sql.Timestamp(math.floorDiv(m, 1000000L) * 1000L)
+    t.setNanos((math.floorMod(m, 1000000L) * 1000L).toInt)
+    t
+  }
+}
+
 /** One per-user update of [[StreamPipelines.streamingFunnel]]: the
   * funnel-so-far after a batch touched this user. `seq` counts the
   * updates emitted for the key — the consumer's "latest row wins"
@@ -1014,6 +1009,7 @@ case class FunnelUpdate(
 class StreamingFunnelProcessor
     extends StatefulProcessor[Long, (Long, String, java.sql.Timestamp), FunnelUpdate] {
   import org.apache.spark.sql.Encoders
+  import EventMicros.{micros, toTs}
 
   @transient private var minView: ValueState[Long] = _
   @transient private var clicks: ListState[Long] = _
@@ -1025,18 +1021,6 @@ class StreamingFunnelProcessor
     clicks = getHandle.getListState[Long]("clicks", Encoders.scalaLong, TTLConfig.NONE)
     purchases = getHandle.getListState[Long]("purchases", Encoders.scalaLong, TTLConfig.NONE)
     updates = getHandle.getValueState[Long]("updates", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  // timestamps are carried as epoch MICROS (the events table's
-  // precision after Tables.events' nanos truncation) — millis would
-  // silently equate distinct event times
-  private def micros(t: java.sql.Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def toTs(m: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(math.floorDiv(m, 1000000L) * 1000L)
-    t.setNanos((math.floorMod(m, 1000000L) * 1000L).toInt)
-    t
   }
 
   override def handleInputRows(key: Long,
@@ -1111,6 +1095,7 @@ case class AsOfUpdate(
 class StreamingAsOfProcessor
     extends StatefulProcessor[Long, (Long, Long, String, java.sql.Timestamp), AsOfUpdate] {
   import org.apache.spark.sql.Encoders
+  import EventMicros.{micros, toTs}
 
   @transient private var maxOldClick: ValueState[Long] = _
   @transient private var recentClicks: ListState[Long] = _
@@ -1175,17 +1160,6 @@ class StreamingAsOfProcessor
     openTimer.clear()
     armTimer(keep.map(_._2).minOption)
     out.iterator
-  }
-
-  // epoch micros, as in StreamingFunnelProcessor (millis would equate
-  // distinct event times at the fixture's microsecond precision)
-  private def micros(t: java.sql.Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def toTs(m: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(math.floorDiv(m, 1000000L) * 1000L)
-    t.setNanos((math.floorMod(m, 1000000L) * 1000L).toInt)
-    t
   }
 
   override def handleInputRows(key: Long,

@@ -97,6 +97,13 @@ class AnnMaintainSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Double])](spark)
     val drift = scala.collection.mutable.Set.empty[Seq[Any]]
     val cp = java.nio.file.Files.createTempDirectory("graft-anndrift-cp").toString
+    // a drift sink wired without its at-rest stats is refused before
+    // the stream starts, not on its first non-empty batch
+    assertThrows[IllegalArgumentException] {
+      graft.streaming.StreamPipelines.streamingAnnAppend(
+        mem.toDF().toDF("vec_id", "v"), cdf, bdf, (_, _) => (), cp,
+        driftSink = Some((_, _) => ()))
+    }
     val q = graft.streaming.StreamPipelines.streamingAnnAppend(
       mem.toDF().toDF("vec_id", "v"), cdf, bdf,
       (_, _) => (), cp,
@@ -190,7 +197,8 @@ class AnnMaintainSpec extends SparkSpec {
     // a constant offset — a region the frozen quantizers never saw.
     // Half the batch arrives now (triggers the rebuild), half arrives
     // after (proves the new generation absorbed the shift). The 0.5
-    // magnitude is the DriftProbeMain-measured regime where the frozen
+    // magnitude is the regime measured by an offset sweep (0.2, 0.35,
+    // 0.5, 0.8 on the sf0.001 embeddings) where the frozen
     // Voronoi boundaries cut the drifted region into ~3 cells (recall
     // collapses at nprobe=1) while a rebuild gives it one dedicated
     // cell — larger offsets degenerate the OTHER way (the whole batch
