@@ -98,6 +98,104 @@ class PlanGuardSpec extends SparkSpec {
         s"documented allowlist: $offenders")
   }
 
+  /** The physical plan AQE wraps: `AdaptiveSparkPlanExec` is a leaf, so
+    * a typed walk of `executedPlan` sees nothing under it. Its
+    * `inputPlan` holds every exchange the query asked for
+    * (`repartition`), before AQE adds the ones a sort or join requires.
+    */
+  private def wrappedPlan(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+  }
+
+  /** A global sort that runs in one task: its child has one partition. */
+  private def sortsInOneTask(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.SortExec
+    wrappedPlan(df).exists {
+      case s: SortExec => s.global && s.child.outputPartitioning == SinglePartition
+      case _ => false
+    }
+  }
+
+  /** Single-task ordered results (mostly `Tables.sortInOneTask`), each
+    * with the bound that makes one sort task no dearer than collecting
+    * the result. A query that sorts
+    * in one task without an entry here fails the guard below, and so
+    * does an entry whose query no longer sorts in one task.
+    */
+  private val singleTaskSorts = Map(
+    "q_hourly_traffic"      -> "one row per (hour, event_type)",
+    "q_zscore_anomaly"      -> "one row per (user, hour) of the current day",
+    "q_time_range_scan"     -> "error events of a two-day window",
+    "q_session_stats"       -> "one row per user",
+    "q_latency_percentiles" -> "one row per event_type",
+    "q_moving_avg"          -> "one row per (event_type, day)",
+    "q_user_retention"      -> "one row per day",
+    "q_funnel"              -> "one row per user with a view",
+    "q1_lineitem_agg"       -> "one row per (returnflag, linestatus)",
+    "q_json_extract_agg"    -> "one row per event_type",
+    "q_value_class"         -> "one row per (event_type, value class)",
+    "q_latency_percentiles_approx" -> "one row per event_type",
+    "q_stats_profile"       -> "one row per event_type",
+    "q_mad_anomaly"         -> "one row per event_type",
+    "q_revenue_by_region"   -> "one row per region",
+    "q_pivot_daily"         -> "one row per day",
+    // sorts whose child is already one partition, not the helper's
+    "q_pmi_pairs"           -> "PmiTopPairs rows (a global limit)",
+    "q_rt_model_score"      -> "the golden slice's GoldenRows rows")
+
+  /** The `log_dashboard` read path: each query's final ordering must be
+    * planned without the range exchange, whose sampling job re-runs the
+    * sort's child stage.
+    */
+  private val dashboardQueries = Seq("q_hourly_traffic", "q_zscore_anomaly",
+    "q_time_range_scan", "q_session_stats", "q_latency_percentiles",
+    "q_moving_avg", "q_user_retention", "q_funnel")
+
+  private def executesRangeExchange(df: org.apache.spark.sql.DataFrame): Boolean = {
+    df.collect()
+    // after execution the rendered tree is AQE's final plan
+    df.queryExecution.executedPlan.toString.contains("rangepartitioning")
+  }
+
+  test("the dashboard queries execute with no range-partitioning exchange") {
+    val offenders = dashboardQueries.filter(q =>
+      executesRangeExchange(SparkEntry.queries(q)(spark, sf)))
+    assert(offenders.isEmpty, s"dashboard queries sampling for a range exchange: $offenders")
+  }
+
+  test("every single-task ordered result is on the allowlist with its bound") {
+    val sorting = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        try { if (sortsInOneTask(fn(spark, sf))) Some(name) else None }
+        catch { case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})") }
+    }.toSet
+    assert(singleTaskSorts.values.forall(_.nonEmpty))
+    val undocumented = sorting -- singleTaskSorts.keySet
+    assert(undocumented.isEmpty,
+      s"single-task ordered results without a stated bound: ${undocumented.toSeq.sorted}")
+    val stale = singleTaskSorts.keySet -- sorting
+    assert(stale.isEmpty, s"allowlisted queries that no longer sort in one task: ${stale.toSeq.sorted}")
+  }
+
+  test("the single-task-sort and range-exchange detectors fire through the AQE wrapper (positive control)") {
+    import org.apache.spark.sql.functions.col
+    val shuffled = spark.range(1000).toDF("x").repartition(4)
+    val oneTask = Tables.sortInOneTask(shuffled, "control", col("x"))
+    assert(sortsInOneTask(oneTask), "detector missed a sort over repartition(1)")
+    assert(!sortsInOneTask(shuffled.orderBy(col("x"))),
+      "detector false-positived on a range-partitioned sort")
+    assert(executesRangeExchange(shuffled.orderBy(col("x"))),
+      "detector missed the range exchange of a plain orderBy")
+    assert(!executesRangeExchange(oneTask),
+      "a sort over repartition(1) still planned a range exchange")
+    assert(oneTask.collect().map(_.getLong(0)).toSeq == (0L until 1000L))
+  }
+
   test("the cartesian detector fires through the AQE wrapper (positive control)") {
     // Non-vacuousness proof: a deliberate cartesian (broadcast disabled,
     // cross join, both sides shuffled so AQE wraps the plan) must be

@@ -1,0 +1,141 @@
+package graft
+
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
+
+/** `Tables.table` resolves the parquet schema from one footer on the
+  * driver instead of Spark's schema-inference job. The schema must be
+  * exactly the one `spark.read.parquet(path)` infers, in every fixture
+  * layout, building the frame must run no job, and nothing may be kept
+  * between reads: a table that gains a column is read with it.
+  */
+class TablesSpec extends SparkSpec {
+  /** The sf0.01 fixture, beside the session's default scale factor. */
+  private val Sf001 = new java.io.File(TestSession.Sf).getParent + "/sf0.01"
+  private val FixtureTables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Spark jobs started while `body` runs on this thread. The listener
+    * bus is asynchronous, so a marker job in its own group runs last and
+    * the count is read once the marker has been delivered.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("tables-spec-body", "body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("tables-spec-marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("tables-spec-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("tables-spec-marker"), "marker job never reached the listener")
+      seen.asScala.count(_ == "tables-spec-body")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** An events table in the TIMESTAMP(NANOS) layout, which Spark cannot
+    * write itself; `ts` values sit a few nanos off whole micros.
+    */
+  private def nanosEventsDir(): String = {
+    val dir = Files.createTempDirectory("graft-nanos-events").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val conf = new Configuration()
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in nanos
+    try for (i <- 0 until 10)
+      writer.write(groups.newGroup()
+        .append("event_id", i.toLong)
+        .append("ts", base + i * 3600L * 1000000000L + 789L)
+        .append("user_id", (i % 3).toLong)
+        .append("event_type", "view")
+        .append("value", i * 1.5)
+        .append("props", s"""{"k": $i}"""))
+    finally writer.close()
+    dir
+  }
+
+  test("the resolved schema equals spark.read.parquet's for every sf0.01 fixture table") {
+    for (t <- FixtureTables) {
+      val got = Tables.table(spark, Sf001, t).schema
+      assert(got == spark.read.parquet(s"$Sf001/$t.parquet").schema, t)
+    }
+  }
+
+  test("the resolved schema equals spark.read.parquet's for events in the NANOS layout") {
+    val dir = nanosEventsDir()
+    val events = Tables.events(spark, dir) // sets nanosAsLong for the session
+    val raw = Tables.table(spark, dir, "events").schema
+    assert(raw == spark.read.parquet(s"$dir/events.parquet").schema)
+    assert(raw("ts").dataType == LongType, raw)
+    assert(events.schema("ts").dataType == TimestampType)
+    val micros = events.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).sorted
+    assert(micros.toSeq == (0 until 10).map(i => 1704067200000000L + i * 3600L * 1000000L),
+      "nanos not truncated to micros")
+  }
+
+  test("building a table's DataFrame runs no Spark job") {
+    val jobs = jobsDuring {
+      FixtureTables.foreach(t => Tables.table(spark, Sf001, t).schema)
+      Tables.events(spark, Sf001).schema
+    }
+    assert(jobs == 0, s"$jobs job(s) ran while building the frames")
+    // Positive control: Spark's own inference runs a job the listener sees.
+    assert(jobsDuring(spark.read.parquet(s"$Sf001/region.parquet").schema) > 0,
+      "the job counter missed spark.read.parquet's inference job")
+  }
+
+  test("a table directory that gains a file with an added column is read with the new schema") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-evolving")
+    val table = s"$root/t.parquet"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1).write.parquet(table)
+    assert(Tables.table(spark, root.toString, "t").columns.toSeq == Seq("id", "name"))
+
+    // Spark infers from the first data file in path order, so the new
+    // file is named to sort first.
+    val staging = s"$root/staging"
+    Seq((3L, "c", 30.0)).toDF("id", "name", "score").coalesce(1).write.parquet(staging)
+    val part = Files.list(java.nio.file.Paths.get(staging)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, java.nio.file.Paths.get(table, "part-00000-0-added.parquet"),
+      StandardCopyOption.ATOMIC_MOVE)
+
+    val df = Tables.table(spark, root.toString, "t")
+    assert(df.schema == spark.read.parquet(table).schema)
+    assert(df.columns.toSeq == Seq("id", "name", "score"))
+    val rows = df.orderBy("id").collect().map(r =>
+      (r.getLong(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Double])))
+    assert(rows.toSeq == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(30.0))))
+  }
+}
