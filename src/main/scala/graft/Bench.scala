@@ -255,12 +255,22 @@ object Bench {
     var ctlMid: Option[Double] = None
     var diskMid: Option[Double] = None
     val half = qseq.size / 2
+    // A query measures a WARM pinned index by design (min-of-2 plus the
+    // session and artifact memos); a first timed run that built a pin
+    // (Pins.builds moved) is also recorded as its cold-start number. The
+    // sf0.001 warm-up pass builds no pin at sfDir: pins are keyed by it.
+    val cold = scala.collection.mutable.LinkedHashMap.empty[String, Option[Double]]
     val allTimes = qseq.zipWithIndex.map { case ((name, fn), i) =>
       if (i == half && qseq.size > 1) { ctlMid = controlTime(); diskMid = diskTime() }
-      val times = (1 to 2).flatMap { _ =>
+      val times = (1 to 2).flatMap { run =>
+        val built0 = Pins.builds
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case NonFatal(_) => errors += name; None }
+        try {
+          fn(spark, sfDir).count()
+          val t = (System.nanoTime() - t0) / 1e9
+          if (run == 1 && Pins.builds > built0) cold(name) = Some(t)
+          Some(t)
+        } catch { case NonFatal(_) => errors += name; None }
       }
       name -> times
     }.toMap
@@ -303,23 +313,6 @@ object Bench {
         case Some((s, Some(p))) => Some(math.min(s, p))
         case _                  => t
       })
-    }
-    // Artifact-backed queries measure a WARM pinned index by design
-    // (min-of-2 + writeOnce memo); their first timed run at sfDir is
-    // the one that BUILDS the artifact, so record it as the cold-start
-    // number beside the steady-state one (VERDICT r11 item 6). The
-    // sf0.001 warmup pass doesn't touch these caches — they're keyed
-    // by sfDir.
-    val coldTracked = Set(
-      "q_bpe_train", "q_bpe_train_deep", "q_embedding_lsh", "q_embedding_ivf",
-      "q_embedding_pq", "q_embedding_ivfpq", "q_ann_index_append", "q_ann_index_append2",
-      "q_ann_index_drift",
-      "q_corpus_prep_delta", "q_corpus_prep_delta2", "q_bm25_indexed", "q_bm25_append2",
-      "q_split_assign_delta",
-      "q_knn_classify_ivf", "q_pagerank", "q_rt_model_score",
-      "q_unigram_lm_train", "q_unigram_lm_apply")
-    val cold = allTimes.collect {
-      case (n, ts) if coldTracked(n) && ts.nonEmpty => n -> Some(ts.head)
     }
     def fmt(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def qJson(m: Seq[(String, Option[Double])]): String =

@@ -94,40 +94,6 @@ object Tables {
     df.repartition(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, key)
 
-  /** THE materialization barrier — the one place the engine cuts
-    * lineage and pins an intermediate frame, so the checkpoint mode
-    * below is chosen once for every site instead of per call.
-    *
-    * Local mode (default): an eager `localCheckpoint` — blocks live on
-    * executors, which on local[n] is the driver JVM; correct and the
-    * fastest barrier there is. On a REAL cluster an executor loss (or
-    * dynamic-allocation scale-in) makes a locally-checkpointed frame
-    * unrecoverable mid-job, so a deployment sets
-    * `graft.barrier.mode=reliable` (plus
-    * `sparkContext.setCheckpointDir` to durable storage) and every
-    * barrier becomes a RELIABLE eager checkpoint — same semantics,
-    * fault-tolerant blocks — with no call-site changes. Sites whose
-    * pinned frame must outlive the session entirely use
-    * [[graft.Artifacts.writeOnce]] instead (the parquet pin).
-    *
-    * `bound` documents the INPUT-CARDINALITY BOUND that keeps the
-    * pinned frame small (vocab-bound, batch-bound, k-bound, …): every
-    * barrier must state why its materialization cannot grow with the
-    * corpus — frames without such a bound have no business being
-    * pinned and should stay lazy plans. The string is kept (not just a
-    * comment) so misuse reads loud at the call site.
-    *
-    * `eager = false` is the lazy variant ([[graft.storage.LogStore]]'s
-    * read-isolation cut: lineage truncation only, materialized by the
-    * caller's next action).
-    */
-  def barrier(df: DataFrame, bound: String, eager: Boolean = true): DataFrame = {
-    require(bound.nonEmpty, "state the input-cardinality bound")
-    if (df.sparkSession.conf.getOption("graft.barrier.mode").contains("reliable"))
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-  }
-
   /** The final ordering of a bounded result, sorted in ONE task. A plain
     * global `orderBy` range-partitions its input, and planning that
     * exchange runs a sampling job over the sort's child stage first: a
@@ -139,7 +105,7 @@ object Tables {
     * One task is acceptable because the result is bounded by its group
     * keys (or by a selective filter) and is collected whole: one sort
     * task over the rows the driver receives anyway costs no more than the
-    * collect. `bound` states that bound, as for [[barrier]]; a result that
+    * collect. `bound` states that bound, as for [[Pins.frame]]; a result that
     * grows with the input, or is consumed in parallel, keeps `orderBy`.
     * PlanGuardSpec keeps every single-task ordered result on an
     * allowlist with its bound.
@@ -149,12 +115,8 @@ object Tables {
     df.repartition(1).orderBy(cols: _*)
   }
 
-  /** Chainable forms of [[barrier]] and [[sortInOneTask]]
-    * (`import graft.Tables.BarrierOps`).
-    */
-  implicit class BarrierOps(private val df: DataFrame) extends AnyVal {
-    def barrier(bound: String, eager: Boolean = true): DataFrame =
-      Tables.barrier(df, bound, eager)
+  /** Chainable [[sortInOneTask]] (`import graft.Tables.SortOps`). */
+  implicit class SortOps(private val df: DataFrame) extends AnyVal {
     def sortInOneTask(bound: String, cols: Column*): DataFrame =
       Tables.sortInOneTask(df, bound, cols: _*)
   }

@@ -15,17 +15,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // force every registry (and its Artifacts.path registrations) to
+    // force every registry (and its Pins.artifact registrations) to
     // initialize, THEN delete all oracle artifact dirs: a query that
     // fails before its pinning write leaves no file, so its oracle
     // fails loudly instead of consuming a stale artifact from a prior
-    // run or scale factor (ADVICE r7)
+    // run or scale factor
     // dev-loop filter (comma-separated names); the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    Artifacts.cleanAll()
+    Pins.cleanAll()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

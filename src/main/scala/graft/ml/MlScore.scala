@@ -41,8 +41,8 @@ object MlScore {
     */
   val TrainRows = 20000
 
-  val ForestNodesPath: String = graft.Artifacts.path("rf_forest_nodes")
-  val GoldenFeaturesPath: String = graft.Artifacts.path("rf_golden_features")
+  val ForestNodesPath: String = graft.Pins.artifact("rf_forest_nodes")
+  val GoldenFeaturesPath: String = graft.Pins.artifact("rf_golden_features")
 
   /** Deterministic nginx-shaped features from the events fixture: the
     * same field mapping the analytics surface uses (event_type as the
@@ -71,7 +71,7 @@ object MlScore {
       keep = Seq("event_id"))
       .withColumnRenamed("event_id", "rid")
 
-  private val modelCache = new graft.SessionCache[String, (PipelineModel, DataFrame)]()
+  private val modelCache = graft.Pins.session[String, (PipelineModel, DataFrame)]()
 
   /** Flatten one tree to (node_id, feat, thr, cats, left, right, pred,
     * is_leaf) rows in preorder (root = 0).
@@ -115,7 +115,7 @@ object MlScore {
       val m = ResponseTimePipeline.build().fit(feats)
       (m, feats.orderBy(col("rid")).limit(GoldenRows))
     }
-    graft.Artifacts.writeOnce(s, d, "rf_score") {
+    graft.Pins.writeArtifact(s, d, "rf_score") {
       import s.implicits._
       val rf = model.stages.last.asInstanceOf[RandomForestRegressionModel]
       rf.trees.zipWithIndex.flatMap { case (t, ti) =>

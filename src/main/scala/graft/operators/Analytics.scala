@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
+import graft.Tables.SortOps
 
 /** Reference-parity batch analytics surface.
   *
@@ -147,9 +148,9 @@ object Analytics {
     * J3 enrichment join) consume the same per-(user, hour) scored
     * frame; built once, the family scans events once per (session,
     * sfDir) instead of ~5× per bench pass when each consumer re-derives
-    * it from the raw scan. This is the [[Similarity]] `ivfCache` pattern
-    * applied to the baseline: built once per (session, sfDir), persisted
-    * MEMORY_AND_DISK, materialized at build. At 100 TB the artifact is a
+    * it from the raw scan. Like the [[Similarity]] IVF index, the
+    * baseline is a session pin per (session, sfDir) over a frame pin,
+    * materialized at build. At 100 TB the artifact is a
     * small per-key parquet table refreshed by a scheduled job — which is
     * also what the reference SHOULD have done instead of re-querying
     * Postgres for the full history on every micro-batch
@@ -158,7 +159,7 @@ object Analytics {
     * The cached frame carries the FINAL rounded columns, so every
     * consumer sees bit-identical values to the pre-cache formulation.
     */
-  private val anomalyCache = new graft.SessionCache[String, DataFrame]()
+  private val anomalyCache = graft.Pins.session[String, DataFrame]()
 
   private def anomalyBaseline(s: SparkSession, d: String): DataFrame =
     anomalyCache.getOrBuild(s, d) {
@@ -168,7 +169,7 @@ object Analytics {
         .agg(count(lit(1)).as("request_count"))
       val histCnt = when(col("hour") < lit(CurrentStart), col("request_count"))
       val u = Window.partitionBy("user_id")
-      val base = graft.streaming.StreamPipelines.zscoreLabel(
+      graft.streaming.StreamPipelines.zscoreLabel(
         counts
           .withColumn("avg_requests", avg(histCnt).over(u))
           .withColumn("stddev_requests", stddev_samp(histCnt).over(u))
@@ -179,9 +180,7 @@ object Analytics {
           round(col("stddev_requests"), 4).as("stddev_requests"),
           round(col("z_score"), 4).as("z_score"),
           col("is_anomaly"), col("anomaly_reason"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      base.count() // materialize: one events scan serves the whole family
-      base
+        .pin("one row per (user, hour) of the current day")
     }
 
   /** Anomalous keys only (reference filter :75 `is_anomaly == True`). */
@@ -814,7 +813,7 @@ object Analytics {
     * wire RENDERING (to_json field order being engine-specific) is
     * pinned as data; the parse is independently recomputed by DuckDB.
     */
-  val WireLogsPath: String = graft.Artifacts.path("wire_logs")
+  val WireLogsPath: String = graft.Pins.artifact("wire_logs")
 
   /** End-to-end log ingest at scale-factor volume: events rendered to
     * the nginx JSON wire format (to_json over the 38-field shape), then
@@ -852,7 +851,7 @@ object Analytics {
       // The wire artifact is a second, deterministic evaluation of the
       // same render — pinned once per (session, sfDir) for the oracle
       // while the engine keeps the fused in-memory path.
-    graft.Artifacts.writeOnce(s, d, "wire_logs") {
+    graft.Pins.writeArtifact(s, d, "wire_logs") {
       wire.write.mode("overwrite").text(WireLogsPath)
     }
     graft.parse.LogParse.ingestChain(wire)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Incremental ANN index maintenance (ADVICE r9 item 4) — the at-rest
   * index operation a 100 TB vector pipeline runs between rebuilds:
@@ -45,14 +45,14 @@ object AnnMaintain {
     * of the delta from these, exactly the artifact set a deployment
     * stores beside its inverted lists.
     */
-  val CentroidsPath: String = graft.Artifacts.path("annx_centroids")
-  val CodebooksPath: String = graft.Artifacts.path("annx_codebooks")
+  val CentroidsPath: String = graft.Pins.artifact("annx_centroids")
+  val CodebooksPath: String = graft.Pins.artifact("annx_codebooks")
 
   private[graft] final case class Frozen(
       centroids: Seq[(Int, Seq[Double])],
       codebooks: Seq[(Int, Int, Seq[Double])])
 
-  private val frozenCache = new graft.SessionCache[String, Frozen]()
+  private val frozenCache = graft.Pins.session[String, Frozen]()
 
   /** KMeans cell fit (k=8, seeded) over `df`'s `v` column — the coarse
     * quantizer. Spec-visible so the rebuild comparison can refit on the
@@ -103,7 +103,7 @@ object AnnMaintain {
     }
 
   private def pinFrozen(s: SparkSession, d: String, fz: Frozen): Unit =
-    graft.Artifacts.writeOnce(s, d, "annx_frozen") {
+    graft.Pins.writeArtifact(s, d, "annx_frozen") {
       s.createDataFrame(fz.centroids).toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(CentroidsPath)
       s.createDataFrame(fz.codebooks).toDF("m", "c", "centroid")
@@ -199,14 +199,14 @@ object AnnMaintain {
     * [[encodeBatch]]; AnnMaintainSpec pins append-then-probe ==
     * rebuild-then-probe on exactly this construction.
     */
-  private val grownListsCache = new graft.SessionCache[String, DataFrame]()
+  private val grownListsCache = graft.Pins.session[String, DataFrame]()
   private def grownLists(s: SparkSession, d: String,
       cdf: DataFrame, bdf: DataFrame): DataFrame =
     grownListsCache.getOrBuild(s, d) {
       val vecs = Similarity.vecs(s, d).select(col("vec_id"), col("v"))
       encodeBatch(vecs.filter(!isDelta && !isQueryB), cdf, bdf)
         .unionByName(encodeBatch(vecs.filter(isDelta), cdf, bdf))
-        .barrier("one M-byte PQ code row per vector — the at-rest encoded lists")
+        .pin("one M-byte PQ code row per vector — the at-rest encoded lists")
     }
 
   /** IVF-PQ probe of a (vec_id, v) query batch against inverted lists
@@ -313,7 +313,7 @@ object AnnMaintain {
     * at-rest re-assignment scan is the one corpus-wide job (the same
     * scan the index build paid); everything else is 8-row arithmetic.
     */
-  private val atRestStatsCache = new graft.SessionCache[String, DataFrame]()
+  private val atRestStatsCache = graft.Pins.session[String, DataFrame]()
 
   def annIndexDrift(s: SparkSession, d: String): DataFrame = {
     val fz = frozen(s, d)
@@ -325,7 +325,7 @@ object AnnMaintain {
     // stance applied to the batch audit's repeat probes)
     val stats = atRestStatsCache.getOrBuild(s, d)(
       atRestCellStats(v.filter(!isDelta), cdf)
-        .barrier("one row per frozen cell"))
+        .pin("one row per frozen cell"))
     driftReportFromStats(stats, v.filter(isDelta), cdf)
   }
 

@@ -75,8 +75,8 @@ object BpeTrain {
     */
   val DriverVocabCap: Int = 10000000
 
-  val MergesPath: String = graft.Artifacts.path("bpe_merges")
-  val DeepMergesPath: String = graft.Artifacts.path("bpe_merges_deep")
+  val MergesPath: String = graft.Pins.artifact("bpe_merges")
+  val DeepMergesPath: String = graft.Pins.artifact("bpe_merges_deep")
 
   /** Distinct lowercase words with corpus frequency and initial
     * char-split state. The single corpus-scale shuffle. Shared with
@@ -92,7 +92,7 @@ object BpeTrain {
 
   final case class Merge(round: Int, lft: String, rgt: String, cnt: Long)
 
-  private val mergeCache = new graft.SessionCache[String, Seq[Merge]]()
+  private val mergeCache = graft.Pins.session[String, Seq[Merge]]()
 
   /** Freq-weighted all-adjacent pair counts of the current states. */
   private def pairCounts(states: DataFrame): DataFrame =
@@ -311,11 +311,11 @@ object BpeTrain {
     * ([[TrainingPrep.corpusPrepDelta]], [[bpeApply]]'s accounting twins)
     * call this so the pin holds under any query execution order — the
     * same guarantee-the-pin stance as [[Dedup.ensureMinhashPinned]].
-    * Cheap on repeat: the merges come from the session cache and
-    * [[graft.Artifacts.writeOnce]] skips the I/O.
+    * Cheap on repeat: the merges come from a session pin and
+    * [[graft.Pins.writeArtifact]] skips the I/O.
     */
   private[operators] def ensureMergesPinned(s: SparkSession, d: String): Unit =
-    graft.Artifacts.writeOnce(s, d, "bpe_merges") {
+    graft.Pins.writeArtifact(s, d, "bpe_merges") {
       mergesDf(s, learnMerges(s, d))
         .coalesce(1).write.mode("overwrite").parquet(MergesPath)
     }
@@ -332,7 +332,7 @@ object BpeTrain {
     */
   def bpeTrainDeep(s: SparkSession, d: String): DataFrame = {
     val out = mergesDf(s, learnMerges(s, d, DeepRounds))
-    graft.Artifacts.writeOnce(s, d, "bpe_merges_deep") {
+    graft.Pins.writeArtifact(s, d, "bpe_merges_deep") {
       out.coalesce(1).write.mode("overwrite").parquet(DeepMergesPath)
     }
     out
@@ -374,11 +374,11 @@ object BpeTrain {
     * — (word, n_tok, wchars), vocab-bound; every BPE accounting query
     * joins the corpus to this one table.
     */
-  private val wtcCache = new graft.SessionCache[String, DataFrame]()
+  private val wtcCache = graft.Pins.session[String, DataFrame]()
 
   private[operators] def wordTokenCounts(s: SparkSession, d: String): DataFrame =
     wtcCache.getOrBuild(s, d) {
-      import graft.Tables.BarrierOps
+      import graft.Pins.FramePin
       val ms = learnMerges(s, d)
       ms.foldLeft(vocab(s, d)) { (df, mg) =>
         df.withColumn("seq",
@@ -389,7 +389,7 @@ object BpeTrain {
         // cached + pinned once per (session, corpus): every BPE
         // accounting query joins this table, and the per-micro-batch
         // drift monitor must not re-pay the corpus fold per batch
-        .barrier("one row per distinct corpus word")
+        .pin("one row per distinct corpus word")
     }
 
   private[operators] def bpeTokensOf(
@@ -466,11 +466,11 @@ object BpeTrain {
     * batch-side cost only.
     */
   private val restStatsCache =
-    new graft.SessionCache[String, (DataFrame, DataFrame)]()
+    graft.Pins.session[String, (DataFrame, DataFrame)]()
   private def restVocabStats(s: SparkSession, d: String, kind: String,
       wtc: DataFrame): (DataFrame, DataFrame) =
     restStatsCache.getOrBuild(s, s"$d#$kind") {
-      import graft.Tables.BarrierOps
+      import graft.Pins.FramePin
       val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
       val restWords = Tables.documents(s, d).filter(!isDelta)
         .select(col("lang"),
@@ -478,10 +478,10 @@ object BpeTrain {
       val stats = restWords.join(wtc, Seq("word"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("rest_words"), sum(col("n_tok")).as("rest_tokens"))
-        .barrier("one counter row per language")
+        .pin("one counter row per language")
       val vocabM = restWords.select(col("word")).distinct()
         .withColumn("known", lit(true))
-        .barrier("one row per at-rest distinct word")
+        .pin("one row per at-rest distinct word")
       (stats, vocabM)
     }
 

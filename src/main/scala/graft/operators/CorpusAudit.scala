@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GoldenHash, QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Corpus-management operators: the planning and versioning surface a
   * training-data platform runs BETWEEN pipeline runs — temperature-
@@ -83,7 +83,7 @@ object CorpusAudit {
     val vocab = Tables.documents(s, d)
       .select(col("source"), explode(TextAnalysis.words).as("w"))
       .distinct()
-      .barrier("per-source distinct vocabulary — vocabulary-bound rows")
+      .pin("per-source distinct vocabulary — vocabulary-bound rows")
     val sizes = vocab.groupBy(col("source")).agg(count(lit(1)).as("v"))
     val inter = vocab.toDF("src_a", "w")
       .join(vocab.toDF("src_b", "w"), "w")
@@ -264,7 +264,7 @@ object CorpusAudit {
         round((log((col("t_b") + 1).cast("double") / (col("t_n") + DsirDim)) -
                log((col("r_b") + 1).cast("double") / (col("r_n") + DsirDim))) *
           DsirQ).cast("long").as("llr_q"))
-    // r20 barrier move: the old per-BIGRAM checkpoint materialized one
+    // pin placement: the old per-BIGRAM checkpoint materialized one
     // row per corpus bigram (corpus-bound bytes) to save re-running the
     // then-interpreted expansion; with the fused codegen bucket map the
     // expansion is cheap enough to run once per consumer (buckets fit +
@@ -277,7 +277,7 @@ object CorpusAudit {
       .join(broadcast(llr), Seq("bucket"))
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("llr_q")).as("score_q"))
-      .barrier("one score row per candidate doc")
+      .pin("one score row per candidate doc")
     // Cutpoint: exact interpolated percentile over the hash-sampled
     // top-K (bounded buffer — see DsirCutSample). score_q is cast to
     // DOUBLE before the percentile on BOTH sides so Spark and DuckDB
@@ -366,17 +366,17 @@ object CorpusAudit {
     // (the dsirSelect double-consumption stance)
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), explode(words).as("word"))
-      .barrier("one row per corpus token (the dsirSelect expansion bound)")
+      .pin("one row per corpus token (the dsirSelect expansion bound)")
     // ONE scan fits both distributions: conditional counts per word.
-    // Barrier'd because BOTH `totals` and `llr` consume it and exchange
-    // reuse across the two is planner-dependent (the r17 plan audit
-    // caught the select plan re-running the corpus-sized word aggregate
-    // for the totals side while the delta plan reused its exchange) —
-    // the materialization is vocab-bound, never corpus-bound.
+    // Pinned because BOTH `totals` and `llr` consume it and exchange
+    // reuse across the two is planner-dependent (a plan that does not
+    // reuse the exchange re-runs the corpus-sized word aggregate for the
+    // totals side) — the materialization is vocab-bound, never
+    // corpus-bound.
     val counts = toks.groupBy(col("word")).agg(
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_w"),
       sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("r_w"))
-      .barrier("one row per distinct corpus word (vocab-bound)")
+      .pin("one row per distinct corpus word (vocab-bound)")
     val totals = counts.agg(
       sum(col("t_w")).as("t_n"), sum(col("r_w")).as("r_n"),
       count(lit(1)).as("v"))
@@ -467,14 +467,14 @@ object CorpusAudit {
     */
   private[graft] def mooreLewisFit(atRest: DataFrame): (DataFrame, DataFrame) = {
     val words = expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
-    // barrier'd for the totals/llr double-consumption reason
+    // pinned for the totals/llr double-consumption reason
     // [[mooreLewisSelect]] documents (vocab-bound materialization)
     val counts = atRest
       .select(col("lang"), explode(words).as("word"))
       .groupBy(col("word")).agg(
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_w"),
         sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("r_w"))
-      .barrier("one row per distinct at-rest word (vocab-bound)")
+      .pin("one row per distinct at-rest word (vocab-bound)")
     val totals = counts.agg(
       sum(col("t_w")).as("t_n"), sum(col("r_w")).as("r_n"),
       count(lit(1)).as("v"))
@@ -728,7 +728,7 @@ object CorpusAudit {
     * TakeOrderedAndProject over the at-rest scores (the shared
     * [[mooreLewisCutpointOf]] machinery) broadcast as a one-row plan
     * constant — per-delta cost stays ∝ batch. The LLR sidecar is
-    * barrier'd here because BOTH scoring passes (at-rest for the cut,
+    * pinned here because BOTH scoring passes (at-rest for the cut,
     * delta for the verdicts) consume it.
     */
   def mooreLewisBudgetDelta(s: SparkSession, d: String): DataFrame =
@@ -745,7 +745,7 @@ object CorpusAudit {
     val atRest = flagged.filter(!col("is_delta"))
       .select(col("doc_id"), col("lang"), col("text"))
     val (llr0, unk) = mooreLewisFit(atRest)
-    val llr = llr0.barrier("one row per at-rest vocab word (two scoring consumers)")
+    val llr = llr0.pin("one row per at-rest vocab word (two scoring consumers)")
     val cut = mooreLewisCutpointOf(mooreLewisScoreCore(atRest, llr, unk))
     mooreLewisScoreCore(flagged.filter(col("is_delta"))
       .select(col("doc_id"), col("lang"), col("text")), llr, unk)
@@ -776,10 +776,10 @@ object CorpusAudit {
     * from a fixed budget; the `budget` rows compare
     * [[mooreLewisBudget]] (same top-~20% quantile cut as DSIR) at EQUAL
     * budget, which is the honest method-agreement number. Both ML rules
-    * read ONE scored frame, barrier'd here because THREE consumers
+    * read ONE scored frame, pinned here because THREE consumers
     * re-read it (the threshold rows, the budget cutpoint sample, and
-    * the budget filter) and the frame is candidate-bound — the r17
-    * double-consumption stance.
+    * the budget filter) and the frame is candidate-bound (the
+    * [[mooreLewisSelect]] double-consumption stance).
     *
     * Composition stance (the [[corpusDatacard]] precedent): the engine
     * composes the SAME builders the oracle-checked constituents run,
@@ -791,7 +791,7 @@ object CorpusAudit {
     */
   def selectionCompare(s: SparkSession, d: String): DataFrame = {
     val scored = mooreLewisSelect(s, d)
-      .barrier("one row per candidate doc (worded non-en)")
+      .pin("one row per candidate doc (worded non-en)")
     val budgetKept = mooreLewisBudgetOf(scored)
       .select(col("doc_id"), lit(true).as("b_keep"))
     val dsirKept = dsirSelect(s, d)
@@ -891,12 +891,12 @@ object CorpusAudit {
       .select(col("doc_id"), col("keep").as("pplk"))
     val contam = Dedup.minhashDecontaminate(s, d)
       .select(col("doc_id"), lit(true).as("contam"))
-    // the selection family beside the quality gates (VERDICT r18 item
-    // 4): Moore-Lewis verdicts under BOTH admission rules the
-    // deployment chooses between (VERDICT r19 item 5) — the threshold
+    // the selection family beside the quality gates: Moore-Lewis
+    // verdicts under BOTH admission rules the deployment chooses
+    // between — the threshold
     // sign rule's keep flag and [[mooreLewisBudget]]'s top-~20%
     // quantile cut — reusing the committed replay chains like every
-    // other constituent; the scored frame is barrier'd because three
+    // other constituent; the scored frame is pinned because three
     // consumers re-read it (threshold flags, the budget cutpoint
     // sample, the budget filter — the [[selectionCompare]] stance).
     // Only non-`en` worded docs carry a verdict (the candidate
@@ -905,7 +905,7 @@ object CorpusAudit {
     // denominator would understate the rules' real cut on the docs
     // they actually adjudicate.
     val mlScored = mooreLewisSelect(s, d)
-      .barrier("one row per ML candidate (threshold + budget datacard shares)")
+      .pin("one row per ML candidate (threshold + budget datacard shares)")
     val mls = mlScored.select(col("doc_id"), col("keep").as("mlk"))
     val mlb = mooreLewisBudgetOf(mlScored)
       .select(col("doc_id"), lit(true).as("mlbk"))

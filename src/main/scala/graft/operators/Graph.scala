@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Distributed connected components — min-label propagation run to
   * convergence, extracted from the MinHash dedup pipeline
@@ -211,7 +211,7 @@ object Graph {
   /** One lock per session guarding the conf-pinned loop region, so two
     * concurrent component builds cannot interleave their conf pins.
     */
-  private val confLocks = new graft.SessionCache[Unit, Object]()
+  private val confLocks = graft.Pins.session[Unit, Object]()
 
   /** The budgeted propagation loop shared by [[connectedComponents]]
     * (which throws on budget exhaustion) and [[components]] (which
@@ -266,7 +266,7 @@ object Graph {
       vertices.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
       undirectedRaw.count() / 65536L + 1L)).toInt
     val undirected = undirectedRaw.repartition(loopParts, col("dst"))
-      .barrier("2|E|+|V| loop-pinned edge rows")
+      .pin("2|E|+|V| loop-pinned edge rows")
     undirectedRaw.unpersist(false)
 
     // one hop, label frame referenced once (linear stacking)
@@ -342,7 +342,7 @@ object Graph {
       labels.unpersist(false)
       labels = next
       if (rounds % 4 == 0) {
-        val pinned = labels.barrier("|V| label rows (lineage cut every 4th round)")
+        val pinned = labels.pin("|V| label rows (lineage cut every 4th round)")
         labels.unpersist(false)
         labels = pinned
       }
@@ -351,7 +351,7 @@ object Graph {
     // frame into larger plans, which must not depend on loop-scoped
     // cache entries (checkpointed inside the pinned-width scope so the
     // pinning job is also one job)
-    val out = labels.barrier("|V| label rows")
+    val out = labels.pin("|V| label rows")
     labels.unpersist(false)
     labels = out
     } finally {
@@ -399,7 +399,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .barrier("|E| canonical edge rows")
+      .pin("|E| canonical edge rows")
 
     // large-star: over the SYMMETRIZED neighbor list, every vertex a
     // links its larger neighbors to m = min(N(a) ∪ {a}). One groupBy +
@@ -437,7 +437,7 @@ object Graph {
     var changed = true
     while (changed && rounds < maxRounds) {
       rounds += 1
-      val next = smallStar(largeStar(e)).barrier("<=|E| rewritten edges per star round")
+      val next = smallStar(largeStar(e)).pin("<=|E| rewritten edges per star round")
       // fixpoint = identical canonical edge sets (both are distinct
       // (u,v) with u<v, so two anti-joins decide set equality)
       changed = next.join(e, Seq("u", "v"), "left_anti").limit(1).count() > 0 ||
@@ -515,7 +515,7 @@ object Graph {
     * from the pinned previous round + the edge list, so the pin steers
     * the replay but cannot hide an iteration bug.
     */
-  val PrTrajPath: String = graft.Artifacts.path("pagerank_traj")
+  val PrTrajPath: String = graft.Pins.artifact("pagerank_traj")
 
   /** PageRank over the user↔event-type bipartite click graph (edges =
     * distinct (user, event_type) pairs, symmetrized) — the canonical
@@ -536,7 +536,7 @@ object Graph {
     * trajectory pin is the per-round checkpoint a production run keeps
     * anyway for restartability.
     */
-  private val prCache = new graft.SessionCache[String, DataFrame]()
+  private val prCache = graft.Pins.session[String, DataFrame]()
 
   /** Build the trajectory once per (session, sfDir) — the ivfIndex
     * build-once stance: the loop persists each round lazily, ONE eager
@@ -564,7 +564,7 @@ object Graph {
       val loopParts = math.max(1L, math.min(
         s.conf.get("spark.sql.shuffle.partitions").toLong,
         withDegRaw.count() / 65536L + 1L)).toInt
-      val edges = withDegRaw.repartition(loopParts, col("src")).barrier("|E| loop-pinned weighted edges")
+      val edges = withDegRaw.repartition(loopParts, col("src")).pin("|E| loop-pinned weighted edges")
       withDegRaw.unpersist(false)
       val n = edges.select(col("src")).distinct().count() // loop constant
       val base = 3L * PrScale / (20L * n)
@@ -589,17 +589,17 @@ object Graph {
         .reduce(_ unionByName _)
         .select(col("iter"), col("node"), col("q"),
           round(col("q") / lit(PrScale.toDouble), 6).as("score"))
-        .barrier("|V| x iters score rows") // the one build job; round caches fill inside it
+        .pin("|V| x iters score rows") // the one build job; round caches fill inside it
       frames.foreach(_.unpersist(false))
       out
     }
 
   def pageRank(s: SparkSession, d: String): DataFrame = {
     val traj = pageRankTraj(s, d)
-    // pin OUTSIDE the cache build (ADVICE r12): a session-cache hit
-    // after Artifacts.cleanAll must still re-pin, or the oracle replays
-    // a missing/other-SF trajectory
-    graft.Artifacts.writeOnce(s, d, "pagerank_traj") {
+    // the artifact write sits outside the session-pin build: a session
+    // pin that survives Pins.cleanAll must still re-write, or the oracle
+    // replays a missing or other-scale-factor trajectory
+    graft.Pins.writeArtifact(s, d, "pagerank_traj") {
       traj.select(col("iter"), col("node"), col("q"))
         .write.mode("overwrite").parquet(PrTrajPath)
     }

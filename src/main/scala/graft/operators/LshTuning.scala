@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** LSH calibration audit (`q_lsh_tuning`, VERDICT r16 item 4): the table
   * you'd consult before re-tuning the minhash banding at a new corpus
@@ -60,7 +60,7 @@ object LshTuning {
     */
   val SampleCap = 2000
 
-  val LshTuningPath: String = graft.Artifacts.path("lsh_tuning")
+  val LshTuningPath: String = graft.Pins.artifact("lsh_tuning")
 
   /** Exact `floor(1e6 · (1 − (1 − (n/10)^r)^b))` in BigInt — mirrored by
     * the oracle's HUGEINT recursive-power CTEs.
@@ -97,8 +97,8 @@ object LshTuning {
       .select(Seq(col("doc_id")) ++
         Configs.map { case (b, _) => bandKeyArrayFor(b).as(s"k$b") } ++
         Seq(col("grams")): _*)
-      .barrier(s"≤ $SampleCap sampled docs with per-config band keys")
-    graft.Artifacts.writeOnce(s, d, "lsh_tuning") {
+      .pin(s"≤ $SampleCap sampled docs with per-config band keys")
+    graft.Pins.writeArtifact(s, d, "lsh_tuning") {
       keyed.write.mode("overwrite").parquet(LshTuningPath)
     }
 

@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** A media record: opaque binary payload + typed metadata. At rest this
   * is a parquet BINARY column beside its metadata — the idiomatic Spark
@@ -349,9 +349,9 @@ object Multimodal {
     * WAV codec — the decode stays spec-verified against the generator's
     * true dims/durations), but everything DOWNSTREAM of it — the aspect-ratio
     * resize plan and the per-kind rollup — is scalar algebra DuckDB
-    * re-derives independently over the pinned rows (VERDICT r7 item 5).
+    * re-derives independently over the pinned rows.
     */
-  val MediaFeaturesPath: String = graft.Artifacts.path("media_features")
+  val MediaFeaturesPath: String = graft.Pins.artifact("media_features")
 
   /** Query entry: synthetic corpus → features → resize plan → per-kind
     * rollup. Exercises the full multimodal plumbing: real PNG decode
@@ -364,8 +364,8 @@ object Multimodal {
   def mediaPipeline(s: SparkSession, d: String): DataFrame = {
     val feats = extractFeatures(syntheticMedia(s, 300)).toDF()
       .drop("feature") // per-item embedding: spec-checked, not rollup input
-      .barrier("fixture-bound media items (300)")
-    graft.Artifacts.writeOnce(s, d, "media_features") {
+      .pin("fixture-bound media items (300)")
+    graft.Pins.writeArtifact(s, d, "media_features") {
       feats.write.mode("overwrite").parquet(MediaFeaturesPath)
     }
     resizePlan(feats)
@@ -449,7 +449,7 @@ object Multimodal {
     * verification over the byte-identical signature column (the
     * [[Dedup.SimhashSigsPath]] technique applied to pixels).
     */
-  val ImagePhashPath: String = graft.Artifacts.path("image_phash")
+  val ImagePhashPath: String = graft.Pins.artifact("image_phash")
 
   /** The ONE banded near-dup tail over any (media_id, phash) frame —
     * shared by the image and audio queries, so the two modalities
@@ -498,7 +498,7 @@ object Multimodal {
     * is the expensive stage (the minhashIndex pattern applied to
     * pixels).
     */
-  private val imageHashCache = new graft.SessionCache[String, DataFrame]()
+  private val imageHashCache = graft.Pins.session[String, DataFrame]()
   private def imageHashed(s: SparkSession, d: String): DataFrame =
     imageHashCache.getOrBuild(s, d) {
       import s.implicits._
@@ -508,11 +508,11 @@ object Multimodal {
           it.flatMap(m => ImageIoCodec.decode(m.bytes).map(img => (m.media_id, aHash(img))))
         }
         .toDF("media_id", "phash")
-        .barrier("one 64-bit phash row per image")
+        .pin("one 64-bit phash row per image")
     }
 
   private def ensureImagePhashPinned(s: SparkSession, d: String): Unit =
-    graft.Artifacts.writeOnce(s, d, "image_phash") {
+    graft.Pins.writeArtifact(s, d, "image_phash") {
       imageHashed(s, d).write.mode("overwrite").parquet(ImagePhashPath)
     }
 
@@ -544,7 +544,7 @@ object Multimodal {
     * the sample-level decode is engine-specific, so the hash is pinned
     * as data and everything downstream replays in SQL).
     */
-  val AudioPhashPath: String = graft.Artifacts.path("audio_phash")
+  val AudioPhashPath: String = graft.Pins.artifact("audio_phash")
 
   /** Energy-fingerprint audio near-duplicate pairs — the AUDIO side of
     * the media dedup family: real `javax.sound.sampled` decode →
@@ -554,7 +554,7 @@ object Multimodal {
     * embarrassingly-parallel scan, the banding join the only (tiny,
     * hash-keyed) shuffle.
     */
-  private val audioHashCache = new graft.SessionCache[String, DataFrame]()
+  private val audioHashCache = graft.Pins.session[String, DataFrame]()
   private def audioHashed(s: SparkSession, d: String): DataFrame =
     audioHashCache.getOrBuild(s, d) {
       import s.implicits._
@@ -562,11 +562,11 @@ object Multimodal {
         .mapPartitions(it =>
           it.flatMap(m => AudioCodec.aHash(m.bytes).map(h => (m.media_id, h))))
         .toDF("media_id", "phash")
-        .barrier("one 64-bit phash row per audio clip")
+        .pin("one 64-bit phash row per audio clip")
     }
 
   private def ensureAudioPhashPinned(s: SparkSession, d: String): Unit =
-    graft.Artifacts.writeOnce(s, d, "audio_phash") {
+    graft.Pins.writeArtifact(s, d, "audio_phash") {
       audioHashed(s, d).write.mode("overwrite").parquet(AudioPhashPath)
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GoldenHash, QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 import graft.functions.VectorFunctions
 
 /** Retrieval / classification / distributional-statistics operators —
@@ -134,50 +134,44 @@ object Retrieval {
     * term-set join is partition pruning, and doclens is metadata the
     * index build keeps beside it.
     */
-  val Bm25PostingsPath: String = graft.Artifacts.path("bm25_postings")
-  val Bm25DoclensPath: String = graft.Artifacts.path("bm25_doclens")
+  val Bm25PostingsPath: String = graft.Pins.artifact("bm25_postings")
+  val Bm25DoclensPath: String = graft.Pins.artifact("bm25_doclens")
 
   private final case class Bm25Index(
       postings: DataFrame, doclens: DataFrame, termStats: DataFrame,
       stats: DataFrame)
 
-  private val bm25Cache = new graft.SessionCache[String, Bm25Index]()
+  private val bm25Cache = graft.Pins.session[String, Bm25Index]()
 
-  /** Build (once per session × sfDir) the full-vocabulary inverted
-    * index: ONE corpus scan → postings + the vocab-bound df sidecar +
-    * the 1-row corpus stats — the build-once/probe-many shape of
-    * [[Similarity]]'s IVF index, applied to lexical retrieval.
-    */
-  /** Build an inverted index over any (doc_id, text) frame — the
-    * table-agnostic core shared by the full-corpus index, the at-rest
-    * base of the append story, and the delta batch (whose build cost is
-    * therefore ∝ batch by construction: same code, smaller frame).
+  /** Build an inverted index over any (doc_id, text) frame: postings, the
+    * vocab-bound df sidecar and the one-row corpus stats, each a frame
+    * pin, so probes never re-scan or re-tokenize. One core serves the
+    * full-corpus index, the at-rest base of the append story and the
+    * delta batch (whose build cost is therefore ∝ batch: same code,
+    * smaller frame).
     */
   private def bm25IndexOf(docsIn: DataFrame): Bm25Index = {
-    import org.apache.spark.storage.StorageLevel
     val docs = docsIn.select(col("doc_id"), TextAnalysis.words.as("ws"))
     val postings = docs
       .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .pin("one row per (term, doc): the at-rest postings table's stand-in")
     val doclens = docs.select(col("doc_id"), size(col("ws")).as("dl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    postings.count(); doclens.count() // build pays the scan, probes don't
+      .pin("one row per doc")
     val termStats = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .pin("vocab-bound term stats")
     val stats = doclens.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    termStats.count(); stats.count()
+      .pin("one corpus stats row")
     Bm25Index(postings, doclens, termStats, stats)
   }
 
   private def bm25Index(s: SparkSession, d: String): Bm25Index = {
     val idx = bm25Cache.getOrBuild(s, d)(bm25IndexOf(Tables.documents(s, d)))
-    // pin OUTSIDE the cache build (ADVICE r12): a session-cache hit
-    // after Artifacts.cleanAll must still re-pin, or the oracle reads a
-    // missing/other-SF artifact — the Similarity.pinIvfIndex convention
-    graft.Artifacts.writeOnce(s, d, "bm25_index") {
+    // the artifact write sits outside the session-pin build: a session
+    // pin that survives Pins.cleanAll must still re-write, or the oracle
+    // reads a missing or other-scale-factor artifact
+    graft.Pins.writeArtifact(s, d, "bm25_index") {
       idx.postings.write.mode("overwrite").parquet(Bm25PostingsPath)
       idx.doclens.write.mode("overwrite").parquet(Bm25DoclensPath)
     }
@@ -232,10 +226,10 @@ object Retrieval {
     * tables, re-deriving df and N/avgdl from the base ∪ delta UNION —
     * so a bug in the engine's counter addition breaks the compare.
     */
-  val Bm25BasePostingsPath: String = graft.Artifacts.path("bm25_base_postings")
-  val Bm25BaseDoclensPath: String = graft.Artifacts.path("bm25_base_doclens")
-  val Bm25DeltaPostingsPath: String = graft.Artifacts.path("bm25_delta_postings")
-  val Bm25DeltaDoclensPath: String = graft.Artifacts.path("bm25_delta_doclens")
+  val Bm25BasePostingsPath: String = graft.Pins.artifact("bm25_base_postings")
+  val Bm25BaseDoclensPath: String = graft.Pins.artifact("bm25_base_doclens")
+  val Bm25DeltaPostingsPath: String = graft.Pins.artifact("bm25_delta_postings")
+  val Bm25DeltaDoclensPath: String = graft.Pins.artifact("bm25_delta_doclens")
 
   /** The ingest-batch split for the append story — the same
     * [[graft.GoldenHash]] 5% delta convention as
@@ -243,8 +237,8 @@ object Retrieval {
     */
   private def isBmDelta: Column = GoldenHash.bucket(col("doc_id"), 20) === 7
 
-  private val bm25BaseCache = new graft.SessionCache[String, Bm25Index]()
-  private val bm25DeltaCache = new graft.SessionCache[String, Bm25Index]()
+  private val bm25BaseCache = graft.Pins.session[String, Bm25Index]()
+  private val bm25DeltaCache = graft.Pins.session[String, Bm25Index]()
 
   /** Incremental postings maintenance — the [[AnnMaintain]]
     * frozen-sidecar stance applied to lexical retrieval: the at-rest
@@ -266,7 +260,7 @@ object Retrieval {
       bm25IndexOf(Tables.documents(s, d).filter(!isBmDelta)))
     val delta = bm25DeltaCache.getOrBuild(s, d)(
       bm25IndexOf(Tables.documents(s, d).filter(isBmDelta)))
-    graft.Artifacts.writeOnce(s, d, "bm25_append") {
+    graft.Pins.writeArtifact(s, d, "bm25_append") {
       base.postings.write.mode("overwrite").parquet(Bm25BasePostingsPath)
       base.doclens.write.mode("overwrite").parquet(Bm25BaseDoclensPath)
       delta.postings.write.mode("overwrite").parquet(Bm25DeltaPostingsPath)
@@ -310,15 +304,15 @@ object Retrieval {
     * generations' statistics from the raw pins (never the engine's
     * folded counters), the `q_corpus_prep_delta2` stance.
     */
-  val Bm25G2BasePostingsPath: String = graft.Artifacts.path("bm25_g2_base_postings")
-  val Bm25G2BaseDoclensPath: String = graft.Artifacts.path("bm25_g2_base_doclens")
-  val Bm25G2APostingsPath: String = graft.Artifacts.path("bm25_g2_a_postings")
-  val Bm25G2ADoclensPath: String = graft.Artifacts.path("bm25_g2_a_doclens")
-  val Bm25G2BPostingsPath: String = graft.Artifacts.path("bm25_g2_b_postings")
-  val Bm25G2BDoclensPath: String = graft.Artifacts.path("bm25_g2_b_doclens")
+  val Bm25G2BasePostingsPath: String = graft.Pins.artifact("bm25_g2_base_postings")
+  val Bm25G2BaseDoclensPath: String = graft.Pins.artifact("bm25_g2_base_doclens")
+  val Bm25G2APostingsPath: String = graft.Pins.artifact("bm25_g2_a_postings")
+  val Bm25G2ADoclensPath: String = graft.Pins.artifact("bm25_g2_a_doclens")
+  val Bm25G2BPostingsPath: String = graft.Pins.artifact("bm25_g2_b_postings")
+  val Bm25G2BDoclensPath: String = graft.Pins.artifact("bm25_g2_b_doclens")
 
   private val bm25G2Cache =
-    new graft.SessionCache[String, (Bm25Index, Bm25Index, Bm25Index)]()
+    graft.Pins.session[String, (Bm25Index, Bm25Index, Bm25Index)]()
 
   /** One postings-fold generation — the grown index after admitting one
     * ingest batch: postings by append (at 100 TB: rows into the
@@ -349,22 +343,13 @@ object Retrieval {
     (postings, termStats, counters)
   }
 
-  /** Second-generation probe-after-append (`q_bm25_append2`): batch A
-    * folds into the at-rest postings (gen 1), then batch B folds into
-    * the GROWN index — the gen-2 fold consumes gen-1's FOLDED df/N/Σdl,
-    * so any fold that silently leaned on raw base statistics breaks
-    * here (and breaks the oracle, which re-derives both generations
-    * from the three raw pins). Because base ∪ A ∪ B partitions the
-    * corpus, the probe must equal [[bm25Indexed]] row for row —
-    * RetrievalSpec pins that two-generation append==rebuild invariance.
-    */
+  private val bm25G2FoldedCache =
+    graft.Pins.session[String, (DataFrame, DataFrame, DataFrame)]()
+
   /** The gen-2 folded frames (postings, termStats, stats) — shared by
     * the batch probe below and the streaming twin's wiring, so the
     * served path cannot drift from the oracle-verified one.
     */
-  private val bm25G2FoldedCache =
-    new graft.SessionCache[String, (DataFrame, DataFrame, DataFrame)]()
-
   private[graft] def bm25Append2Frames(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val bucket = GoldenHash.bucket(col("doc_id"), 20)
@@ -373,9 +358,9 @@ object Retrieval {
       bm25IndexOf(docs.filter(bucket =!= 7 && bucket =!= 11)),
       bm25IndexOf(docs.filter(bucket === 7)),
       bm25IndexOf(docs.filter(bucket === 11))))
-    // pin OUTSIDE the cache builds (the r12 convention): a session-cache
-    // hit after Artifacts.cleanAll must still re-pin
-    graft.Artifacts.writeOnce(s, d, "bm25_append2") {
+    // the artifact write sits outside the session-pin build: a session
+    // pin that survives Pins.cleanAll must still re-write
+    graft.Pins.writeArtifact(s, d, "bm25_append2") {
       base.postings.write.mode("overwrite").parquet(Bm25G2BasePostingsPath)
       base.doclens.write.mode("overwrite").parquet(Bm25G2BaseDoclensPath)
       dA.postings.write.mode("overwrite").parquet(Bm25G2APostingsPath)
@@ -392,13 +377,22 @@ object Retrieval {
           coalesce(sum(col("dl")), lit(0L)).as("sdl")))
       val g2 = foldBm25(foldBm25(g0, dA), dB)
       (g2._1,
-        g2._2.barrier("vocab-bound folded df sidecar"),
+        g2._2.pin("vocab-bound folded df sidecar"),
         g2._3.select(col("n"),
           (col("sdl").cast("double") / col("n")).as("avgdl"))
-          .barrier("one folded stats row"))
+          .pin("one folded stats row"))
     }
   }
 
+  /** Second-generation probe-after-append (`q_bm25_append2`): batch A
+    * folds into the at-rest postings (gen 1), then batch B folds into
+    * the GROWN index — the gen-2 fold consumes gen-1's FOLDED df/N/Σdl,
+    * so any fold that silently leaned on raw base statistics breaks
+    * here (and breaks the oracle, which re-derives both generations
+    * from the three raw pins). Because base ∪ A ∪ B partitions the
+    * corpus, the probe must equal [[bm25Indexed]] row for row —
+    * RetrievalSpec pins that two-generation append==rebuild invariance.
+    */
   def bm25Append2Probe(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (postings, termStats, stats) = bm25Append2Frames(s, d)
@@ -546,7 +540,7 @@ object Retrieval {
       // differ only by a null-filter that Catalyst pushes BELOW the
       // aggregate, which defeats exchange reuse and would re-run the
       // corpus explode per consumer
-      .barrier("vocab-bound term stats")
+      .pin("vocab-bound term stats")
     val pairs = counted.filter(col("w2").isNotNull)
       .select(col("w1"), col("w2"), col("cnt").as("c_ab"))
     val uni = counted.filter(col("w2").isNull)

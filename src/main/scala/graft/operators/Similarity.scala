@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 import graft.functions.VectorFunctions
 
 /** Similarity search over the `embeddings` table (ARRAY<FLOAT>, dim 64).
@@ -120,14 +120,14 @@ object Similarity {
     * data; DuckDB independently re-derives banding, star edges, and the
     * exact DOUBLE-cosine verification against the RAW embeddings table.
     */
-  val LshBandsPath: String = graft.Artifacts.path("lsh_bands_16_8")
+  val LshBandsPath: String = graft.Pins.artifact("lsh_bands_16_8")
 
   /** Per-vector sign-LSH band keys, cached per (session, sfDir, params)
     * — the [[graft.operators.Dedup.minhashIndex]] stance: a bucketed
     * ANN index is built once per corpus version and probed by every
     * consumer; at 100 TB this cache IS the at-rest banded index.
     */
-  private val lshKeyCache = new graft.SessionCache[(String, Int, Int), DataFrame]()
+  private val lshKeyCache = graft.Pins.session[(String, Int, Int), DataFrame]()
 
   def lshNearDup(s: SparkSession, d: String, bands: Int, bitsPerBand: Int): DataFrame = {
     // All bands×bitsPerBand sign projections come from ONE fused native
@@ -140,11 +140,11 @@ object Similarity {
     val keyed = lshKeyCache.getOrBuild(s, (d, bands, bitsPerBand))(
       vecs(s, d).select(col("vec_id"),
         VectorFunctions.lshBandKeys(col("v"), bands, bitsPerBand).as("bands"))
-        .barrier("one packed-long band array per vector"))
+        .pin("one packed-long band array per vector"))
     // only the default (16, 8) parameterization — the query surface —
     // pins its keys for the oracle
     if (bands == 16 && bitsPerBand == 8)
-      graft.Artifacts.writeOnce(s, d, "lsh_bands_16_8") {
+      graft.Pins.writeArtifact(s, d, "lsh_bands_16_8") {
         keyed.write.mode("overwrite").parquet(LshBandsPath)
       }
     val banded = keyed.select(col("vec_id"),
@@ -196,19 +196,18 @@ object Similarity {
   }
 
   /** IVF index artifact: KMeans coarse quantizer (fixed seed) +
-    * per-vector cell assignments. An IVF index is built once and probed
-    * many times — round 1 re-fit the KMeans inside every query
-    * invocation (9.9 s of the 48 s bench; VERDICT r1 item 3). At 100 TB
-    * the index is a cell-bucketed parquet table plus a k-row centroid
-    * sidecar, built by one batch job and amortized over every query;
-    * the local stand-in is a persisted (MEMORY_AND_DISK) assignment
-    * DataFrame cached per (session, sfDir, k), materialized at build
-    * time so probe queries never pay the fit.
+    * per-vector cell assignments, built once and probed many times: no
+    * probe query re-fits the KMeans. At 100 TB the index is a
+    * cell-bucketed parquet table plus a k-row centroid sidecar, built by
+    * one batch job and amortized over every query; the local stand-in is
+    * a session pin per (session, sfDir, k) holding the centroids and a
+    * frame pin of the assignments, materialized at build time so probe
+    * queries never pay the fit.
     */
   private[operators] final case class IvfIndex(
       centroids: Seq[(Int, Array[Double])], assigned: DataFrame)
 
-  private val ivfCache = new graft.SessionCache[(String, Int), IvfIndex]()
+  private val ivfCache = graft.Pins.session[(String, Int), IvfIndex]()
 
   private[operators] def ivfIndex(s: SparkSession, d: String, k: Int): IvfIndex =
     ivfCache.getOrBuild(s, (d, k)) {
@@ -222,8 +221,7 @@ object Similarity {
         .setFeaturesCol("fv").setPredictionCol("cell")
       val model = km.fit(v)
       val assigned = model.transform(v).select(col("vec_id"), col("v"), col("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      assigned.count() // materialize: the build pays the fit+assign, probes don't
+        .pin("one row per vector: the at-rest cell-assignment table's stand-in")
       IvfIndex(
         model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq,
         assigned)
@@ -240,16 +238,16 @@ object Similarity {
     * assignment table + centroid sidecar) — the oracle consumes the
     * operational artifact, not a bespoke test dump.
     */
-  val IvfAssignPath: String = graft.Artifacts.path("ivf_assign")
-  val IvfCentroidsPath: String = graft.Artifacts.path("ivf_centroids")
+  val IvfAssignPath: String = graft.Pins.artifact("ivf_assign")
+  val IvfCentroidsPath: String = graft.Pins.artifact("ivf_centroids")
 
   /** Pin the default (k=8) index for the oracles — shared by every query
     * that consumes the IVF index ([[ivfTopK]], [[semanticDedup]],
     * [[prototypePrune]]), so whichever runs first in a session pays the
-    * one write job and the rest reuse it ([[graft.Artifacts.writeOnce]]).
+    * one write job and the rest reuse it ([[graft.Pins.writeArtifact]]).
     */
   private[operators] def pinIvfIndex(s: SparkSession, d: String, idx: IvfIndex): Unit =
-    graft.Artifacts.writeOnce(s, d, "ivf_index") {
+    graft.Pins.writeArtifact(s, d, "ivf_index") {
       idx.assigned.select(col("vec_id"), col("cell"))
         .write.mode("overwrite").parquet(IvfAssignPath)
       s.createDataFrame(idx.centroids).toDF("cell", "centroid")
@@ -391,7 +389,7 @@ object Similarity {
       codebooks: Seq[(Int, Int, Seq[Double])], // (m, c, centroid[PqSubDim])
       codes: DataFrame)                        // (vec_id, codes array<int>[PqM])
 
-  private val pqCache = new graft.SessionCache[String, PqIndex]()
+  private val pqCache = graft.Pins.session[String, PqIndex]()
 
   /** Product-quantization index: per subspace m, a seeded KMeans
     * (K=[[PqK]]) over the 8-dim subvector slices; each vector's code is
@@ -420,8 +418,7 @@ object Similarity {
       val encoded = models.foldLeft(withSubs)((df, mod) => mod.transform(df))
       val codes = encoded.select(col("vec_id"),
         array((0 until PqM).map(m => col(s"code_$m").cast("int")): _*).as("codes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      codes.count() // materialize: the build pays all M fits + encode once
+        .pin("one M-int code row per vector: the at-rest code table's stand-in")
       val books = for {
         (mod, m) <- models.zipWithIndex
         (ctr, c) <- mod.clusterCenters.zipWithIndex
@@ -435,11 +432,11 @@ object Similarity {
     * engine-specific, so the INDEX is pinned and DuckDB independently
     * replays the whole ADC probe from it.
     */
-  val PqCodesPath: String = graft.Artifacts.path("pq_codes")
-  val PqCodebooksPath: String = graft.Artifacts.path("pq_codebooks")
+  val PqCodesPath: String = graft.Pins.artifact("pq_codes")
+  val PqCodebooksPath: String = graft.Pins.artifact("pq_codebooks")
 
   private def pinPqIndex(s: SparkSession, d: String, idx: PqIndex): Unit =
-    graft.Artifacts.writeOnce(s, d, "pq_index") {
+    graft.Pins.writeArtifact(s, d, "pq_index") {
       idx.codes.write.mode("overwrite").parquet(PqCodesPath)
       s.createDataFrame(idx.codebooks).toDF("m", "c", "centroid")
         .write.mode("overwrite").parquet(PqCodebooksPath)
@@ -532,21 +529,19 @@ object Similarity {
     exactReRankL2(s, d, shortlist, q)
   }
 
-  private val invListCache = new graft.SessionCache[(String, Int), DataFrame]()
+  private val invListCache = graft.Pins.session[(String, Int), DataFrame]()
 
   /** Inverted-list table for IVF-PQ: the PQ codes stored beside the
     * coarse cell id — (vec_id, cell, codes). At 100 TB this is ONE
     * cell-bucketed parquet table written by the index build (probes
     * never pay a join); the local stand-in fuses the two cached index
-    * frames once per (session, sfDir, k) and persists the result.
+    * frames once per (session, sfDir, k) and pins the result.
     */
   private def invLists(s: SparkSession, d: String, k: Int): DataFrame =
     invListCache.getOrBuild(s, (d, k)) {
-      val fused = ivfIndex(s, d, k).assigned.select(col("vec_id"), col("cell"))
+      ivfIndex(s, d, k).assigned.select(col("vec_id"), col("cell"))
         .join(pqIndex(s, d).codes, Seq("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fused.count() // materialize: probes read the fused lists, not the join
-      fused
+        .pin("one (cell, codes) row per vector: the at-rest inverted lists' stand-in")
     }
 
   /** Composed IVF-PQ top-k — the full ANN query shape at 100 TB: the
@@ -630,7 +625,7 @@ object Similarity {
     * artifact). A wrong projection — scaled, sheared, or mismatched to
     * its vector id — fails `norm_ok` or the checksums.
     */
-  val PcaProjPath: String = graft.Artifacts.path("pca_proj")
+  val PcaProjPath: String = graft.Pins.artifact("pca_proj")
 
   /** Quantization scale for the PCA checksums (1e-6 resolution — one
     * output-rounding step finer than the artifact's 6dp, so the
@@ -656,12 +651,12 @@ object Similarity {
     * times; repeat query invocations must not re-pay the Gramian+SVD
     * (the [[ivfCache]] stance).
     */
-  private val pcaCache = new graft.SessionCache[(String, Int), DataFrame]()
+  private val pcaCache = graft.Pins.session[(String, Int), DataFrame]()
 
   def embeddingPca(s: SparkSession, d: String, k: Int = 8): DataFrame = {
     val proj = pcaCache.getOrBuild(s, (d, k))(
-      embeddingPcaProjected(s, d, k).barrier("k floats per vector — the PCA projection"))
-    graft.Artifacts.writeOnce(s, d, "pca_proj") {
+      embeddingPcaProjected(s, d, k).pin("k floats per vector — the PCA projection"))
+    graft.Pins.writeArtifact(s, d, "pca_proj") {
       proj.write.mode("overwrite").parquet(PcaProjPath)
     }
     val p = proj

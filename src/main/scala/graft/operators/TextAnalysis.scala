@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Text-analysis operators for an LLM-training-data pipeline, over the
   * `documents` fixture table: token counting, quality scoring, language
@@ -133,7 +133,7 @@ object TextAnalysis {
         col("stopword_ratio"), col("distinct_ratio"), col("weak_label"))
   }
 
-  private val qualityLrCache = new graft.SessionCache[String, Seq[Double]]()
+  private val qualityLrCache = graft.Pins.session[String, Seq[Double]]()
 
   /** Hard cap on the number of documents the quality-classifier fit
     * sees. Above it the fit trains on a DETERMINISTIC hash-mod slice of
@@ -179,10 +179,10 @@ object TextAnalysis {
     * [[qualityFeatures]] column order) — the tiny model artifact the
     * oracle replays scoring from.
     */
-  val QualityWeightsPath: String = graft.Artifacts.path("quality_weights")
+  val QualityWeightsPath: String = graft.Pins.artifact("quality_weights")
 
   private def pinQualityWeights(s: SparkSession, d: String, ws: Seq[Double]): Unit =
-    graft.Artifacts.writeOnce(s, d, "quality_weights") {
+    graft.Pins.writeArtifact(s, d, "quality_weights") {
       s.createDataFrame(ws.zipWithIndex.map { case (w, i) => (i, w) })
         .toDF("idx", "w").coalesce(1)
         .write.mode("overwrite").parquet(QualityWeightsPath)
@@ -207,11 +207,11 @@ object TextAnalysis {
     * materializes beside its pinned weights, and it is probed by every
     * consumer ([[modelQuality]], [[qualityCalibration]],
     * [[TrainingPrep.corpusPrep5]]'s calibration gate,
-    * [[graft.operators.Dedup]]'s canonical selection). Before r21 each
-    * consumer re-ran the full feature scan — corpusPrep5 twice per run
-    * (cutpoint sample + drop-set filter).
+    * [[graft.operators.Dedup]]'s canonical selection), so no consumer
+    * re-runs the full feature scan (corpusPrep5 reads it twice per run:
+    * cutpoint sample and drop-set filter).
     */
-  private val mqScoredCache = new graft.SessionCache[String, DataFrame]()
+  private val mqScoredCache = graft.Pins.session[String, DataFrame]()
 
   private[operators] def modelQualityScored(s: SparkSession, d: String): DataFrame =
     mqScoredCache.getOrBuild(s, d) {
@@ -234,7 +234,7 @@ object TextAnalysis {
           col("stopword_ratio"), col("distinct_ratio"),
           round(col("lin"), 6).as("quality_logit"),
           (col("lin") >= 0).as("keep"))
-        .barrier("one scored row per doc (the classifier's at-rest scored table)")
+        .pin("one scored row per doc (the classifier's at-rest scored table)")
     }
 
   def modelQuality(s: SparkSession, d: String): DataFrame =
@@ -262,7 +262,7 @@ object TextAnalysis {
       .join(Tables.documents(s, d).select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("quality_logit").as("ql"),
         (col("lang") === "en").as("is_en"))
-      .barrier("two scalars per doc (logit, is_en)")
+      .pin("two scalars per doc (logit, is_en)")
     val cutCols = (1 to 9).map(k =>
       round(expr(s"percentile(ql, 0.$k)"), 6).as(s"c$k"))
     // K-bounded golden-hash cut sample — per-document input, the
@@ -597,7 +597,7 @@ object TextAnalysis {
     * 100 TB this is the at-rest scored table the reference-corpus
     * variant would materialize beside the count-table model.
     */
-  private val lmScoredCache = new graft.SessionCache[String, DataFrame]()
+  private val lmScoredCache = graft.Pins.session[String, DataFrame]()
 
   private def lmScored(s: SparkSession, d: String): DataFrame =
     lmScoredCache.getOrBuild(s, d) {
@@ -623,7 +623,7 @@ object TextAnalysis {
             (coalesce(col("c1"), lit(0L)) + col("v"))))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"), round(avg(col("ll")), 4).as("avg_ll"))
-        .barrier("one LL rollup row per doc")
+        .pin("one LL rollup row per doc")
     }
 
   private def lmToks(s: SparkSession, d: String): DataFrame =

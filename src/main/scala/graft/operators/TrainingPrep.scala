@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Training-data preparation operators — the corpus-shaping steps a
   * large-scale LLM data pipeline runs between raw ingest and
@@ -255,7 +255,7 @@ object TrainingPrep {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .barrier("doc x distinct-term TF rows, shared by both consumers")
+      .pin("doc x distinct-term TF rows, shared by both consumers")
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("doc_id")
@@ -432,13 +432,12 @@ object TrainingPrep {
     * corpus-level duplicate-shingle MODEL (the chain scaladoc's own
     * framing: the shingle set is trained on the full corpus like the
     * bigram LM), so the doc-id verdict is pinned per (session, corpus
-    * version) like [[TextAnalysis.lmScored]] — before r21 every prep4/5
-    * run re-ran the whole [[Dedup.substringSpans]] shingle pass
-    * (scan-spread + shingle window + island merge) to re-derive a fixed
-    * drop list. The standalone q_substring_spans query is untouched and
-    * still recomputes per run.
+    * version) like [[TextAnalysis.lmScored]]: no prep4/5 run re-runs
+    * the whole [[Dedup.substringSpans]] shingle pass (scan-spread +
+    * shingle window + island merge) to re-derive a fixed drop list. The
+    * standalone q_substring_spans query still recomputes per run.
     */
-  private val spanHeavyCache = new graft.SessionCache[String, DataFrame]()
+  private val spanHeavyCache = graft.Pins.session[String, DataFrame]()
 
   private def spanHeavyDrops(s: SparkSession, d: String): DataFrame =
     spanHeavyCache.getOrBuild(s, d) {
@@ -448,7 +447,7 @@ object TrainingPrep {
           length(col("text")).cast("bigint").as("len_chars")), Seq("doc_id"))
         .filter(col("dup_chars") * 2 > col("len_chars"))
         .select(col("doc_id"))
-        .barrier("doc-id drop set: docs with dup-span cover > 1/2 (≤ one row per doc)")
+        .pin("doc-id drop set: docs with dup-span cover > 1/2 (≤ one row per doc)")
     }
 
   private def prep4Drops(s: SparkSession, d: String): Seq[DataFrame] = {
@@ -514,7 +513,7 @@ object TrainingPrep {
       .withColumn("rk", row_number().over(cw))
       .filter(col("rk") <= ScaleOps.SourceCapN)
       .drop("rk")
-      .barrier("≤ SourceCapN docs per source")
+      .pin("≤ SourceCapN docs per source")
     val boilDrop = ScaleOps.boilerplateOf(capped)
       .filter(col("n_boilerplate") * 10 > col("n_grams") * 8)
       .select(col("doc_id"))
@@ -523,9 +522,9 @@ object TrainingPrep {
     // not a semi join against the reporting query's frame, which
     // re-scanned the corpus and paid the gate's aggregates once per
     // chain reference. Same keep set by the shared-predicate argument.
-    // Drop-set joins carry an explicit broadcast hint (r21): the sets
+    // Drop-set joins carry an explicit broadcast hint: the sets
     // are doc-id lists small by construction — the chain's documented
-    // posture — but two of them hang off barrier'd ExistingRDD frames
+    // posture — but two of them hang off frame-pinned ExistingRDD frames
     // whose unknown size estimate made the planner fall back to a
     // sort-merge anti join (two exchanges plus two sorts of the
     // survivor frame for a membership test).
@@ -646,7 +645,7 @@ object TrainingPrep {
     * round-tripping the engine-written artifact the same way the minhash
     * oracle replays the pinned band keys.
     */
-  val DeltaDigestPath: String = graft.Artifacts.path("delta_digests")
+  val DeltaDigestPath: String = graft.Pins.artifact("delta_digests")
 
   def corpusPrepDelta(s: SparkSession, d: String): DataFrame = {
     ensureDeltaArtifacts(s, d)
@@ -663,7 +662,7 @@ object TrainingPrep {
     */
   private[graft] def ensureDeltaArtifacts(s: SparkSession, d: String): Unit = {
     val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
-    graft.Artifacts.writeOnce(s, d, "delta_dedup_index") {
+    graft.Pins.writeArtifact(s, d, "delta_dedup_index") {
       Dedup.writeDedupIndex(Tables.documents(s, d).filter(!isDelta), "deltadx")
       s.table("deltadx_digests")
         .write.mode("overwrite").parquet(DeltaDigestPath)
@@ -680,14 +679,14 @@ object TrainingPrep {
     * RUN, and the streaming twin paid it PER MICRO-BATCH, to rebuild a
     * set that cannot change between batches.
     */
-  private val benchGramsCache = new graft.SessionCache[String, DataFrame]()
+  private val benchGramsCache = graft.Pins.session[String, DataFrame]()
 
   private def benchGramSet(s: SparkSession, d: String): DataFrame =
     benchGramsCache.getOrBuild(s, d) {
       ScaleOps.wordGramsOf(
         Tables.documents(s, d).filter(graft.GoldenHash.isTestDoc(col("doc_id"))))
         .select(col("g")).distinct()
-        .barrier("distinct 5-grams of the fixed benchmark split (gram-vocab-bound)")
+        .pin("distinct 5-grams of the fixed benchmark split (gram-vocab-bound)")
     }
 
   /** The admission gate chain for ONE ingest batch (doc_id, text, lang)
@@ -701,44 +700,33 @@ object TrainingPrep {
     * frozen), so verdicts are independent of how ingest is batched —
     * StreamingSpec pins that batch-boundary invariance adversarially.
     *
-    * The returned frame is LAZY: its two pins are `eager = false`, so
-    * nothing is read until a consumer runs it. A caller must let its
-    * sink consume the frame before it mutates any table the chain
-    * probes (the `<prefix>_*` dedup-index tables, e.g. via
-    * [[Dedup.appendDedupIndex]]) — a sink that ran after such an append
-    * would judge the batch against the grown index.
+    * Every probe of the `<prefix>_*` dedup-index tables runs before this
+    * returns: both probe verdicts are eager frame pins, and the rest of
+    * the chain reads only frozen state (benchmark grams, BPE merges). So
+    * the returned frame's rows are fixed at return, and a caller may
+    * append to the index (e.g. [[Dedup.appendDedupIndex]] of this very
+    * batch) before its sink consumes the frame; TrainingPrepSpec pins
+    * this.
     */
   private[graft] def deltaAdmissionChain(
       s: SparkSession, d: String, batch: DataFrame,
       prefix: String = "deltadx"): DataFrame = {
-    // r20 shape fix: each stage references its predecessor 2+ times (the
-    // keep side AND the probe side of every gate), so the unmaterialized
-    // chain re-planned the whole prefix per reference — 2⁴ ≈ 16 leaf
-    // scans of the batch, the digest probe and the signature pass run
-    // twice each. Stage outputs are batch-bounded by construction (the
-    // gates only ever DROP rows), so each multi-referenced verdict is
-    // pinned once and every later gate probes the pinned rows. The
-    // quality gate itself is stateless per-row
-    // ([[TextAnalysis.qualityOkPred]]) — a FILTER, not a semi join
-    // against a second scan of the batch.
-    //
-    // r21 de-serialization (VERDICT r20 item 1): the r20 form was four
-    // SEQUENTIAL eager localCheckpoint jobs — a materialize-wait-
-    // materialize critical path that made the chain core-count-blind.
-    // Now only the genuinely multi-referenced stage outputs pin
-    // (exactClean, nearClean), both LAZILY (eager = false): the blocks
-    // materialize inside the first consumer's job instead of via a
-    // dedicated count pass each. `admitted` is single-referenced since
-    // [[BpeTrain.bpeTokensOf]] carries `lang` through its per-doc
-    // aggregate (doc_id determines lang), so its barrier and the
-    // join-back are gone outright.
+    // Each gate references its predecessor twice (the keep side and the
+    // probe side), so an unpinned chain re-plans the whole prefix per
+    // reference. Stage outputs are batch-bounded (gates only DROP rows),
+    // so the two multi-referenced verdicts (exactClean, nearClean) are
+    // pinned once and every later gate reads the pinned rows. `admitted`
+    // is single-referenced ([[BpeTrain.bpeTokensOf]] carries `lang`
+    // through its per-doc aggregate), so it stays a plan. The quality
+    // gate is a stateless per-row FILTER ([[TextAnalysis.qualityOkPred]]),
+    // not a semi join against a second scan of the batch.
     val qualityOk = batch.filter(TextAnalysis.qualityOkPred)
     val exactClean = Dedup.incrementalExactClean(s, qualityOk, prefix)
-      .barrier("quality+exact-clean batch rows (cost ∝ batch)", eager = false)
+      .pin("quality+exact-clean batch rows (cost ∝ batch)")
     val nearClean = exactClean.join(
       Dedup.incrementalNearDups(s, exactClean, prefix).select(col("doc_id")),
       Seq("doc_id"), "left_anti")
-      .barrier("near-clean batch rows (cost ∝ batch)", eager = false)
+      .pin("near-clean batch rows (cost ∝ batch)")
     val admitted = nearClean.join(
       ScaleOps.wordGramsOf(nearClean).join(broadcast(benchGramSet(s, d)), Seq("g"))
         .select(col("doc_id")).distinct(),
@@ -761,8 +749,8 @@ object TrainingPrep {
     * is now a near-dup — neither was before the append.
     *
     * Scale shape: generation 1 (index build + A's admission + the
-    * append) runs ONCE per corpus version ([[graft.Artifacts
-    * .writeOnce]]); the steady state is generation 2's probe, whose
+    * append) runs ONCE per corpus version ([[graft.Pins
+    * .writeArtifact]]); the steady state is generation 2's probe, whose
     * cost is ∝ batch B against the grown-but-never-rewritten index.
     * The oracle replays BOTH generations end-to-end from the pinned
     * minhash/merges artifacts and raw text only — it derives
@@ -779,7 +767,7 @@ object TrainingPrep {
     val batchB = docs.filter(bucket === 11)
     Dedup.ensureMinhashPinned(s, d)
     BpeTrain.ensureMergesPinned(s, d)
-    graft.Artifacts.writeOnce(s, d, "delta2_index") {
+    graft.Pins.writeArtifact(s, d, "delta2_index") {
       Dedup.writeDedupIndex(docs.filter(bucket =!= 7 && bucket =!= 11), "delta2dx")
       // admit A against the fresh index, then append the admitted docs'
       // own rows; checkpoint first — the admitted set is DERIVED from
@@ -787,7 +775,7 @@ object TrainingPrep {
       val admittedA = batchA.join(
         deltaAdmissionChain(s, d, batchA, "delta2dx").select(col("doc_id")),
         Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("text")).barrier("admitted batch-A docs")
+        .select(col("doc_id"), col("text")).pin("admitted batch-A docs")
       Dedup.appendDedupIndex(admittedA, "delta2dx")
     }
     deltaAdmissionChain(s, d, batchB, "delta2dx")

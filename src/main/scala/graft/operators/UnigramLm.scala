@@ -155,7 +155,7 @@ object UnigramLm {
       .map { case (p, c) => Piece(p, c, logqZ(c, totalF, nF)) }
   }
 
-  private val emCache = new graft.SessionCache[String, Array[Piece]]()
+  private val emCache = graft.Pins.session[String, Array[Piece]]()
 
   private[graft] def trainedPieces(s: SparkSession, d: String): Array[Piece] =
     emCache.getOrBuild(s, d) {
@@ -191,7 +191,7 @@ object UnigramLm {
     * cached per (session, corpus); both accounting queries join the
     * corpus word stream to this one vocab-bound map.
     */
-  private val uniTokCache = new graft.SessionCache[String, DataFrame]()
+  private val uniTokCache = graft.Pins.session[String, DataFrame]()
   private def uniWordTok(s: SparkSession, d: String): DataFrame =
     uniTokCache.getOrBuild(s, d) {
       import s.implicits._

@@ -44,17 +44,17 @@ object FileFormats {
     * one sequential Verify-then-DuckDB pass per scale factor on one
     * machine, so a single writer owns each path at a time (the same
     * single-writer assumption as the dedup/simhash oracle artifacts).
-    * Registered with [[graft.Artifacts]] so Verify deletes them at
+    * Registered with [[graft.Pins.artifact]] so Verify deletes them at
     * startup — a stale slice from a prior run/scale factor fails loud.
     */
-  val CsvPath: String = graft.Artifacts.path("csv_events")
-  val OrcPath: String = graft.Artifacts.path("orc_events")
+  val CsvPath: String = graft.Pins.artifact("csv_events")
+  val OrcPath: String = graft.Pins.artifact("orc_events")
 
   /** The deterministic ~1% slice both round trips write: a codec check
     * needs ROW COVERAGE (every field shape, all event types, micros
     * timestamps, negative/fractional doubles), not sf-scale VOLUME — the
     * full-table write made the bench hostage to /tmp disk contention
-    * (6.3 s driver vs 0.65 s isolated at r7; VERDICT r7 item 2). The
+    * (6.3 s in a full bench run vs 0.65 s isolated). The
     * mod-filter is replicated verbatim in the ORC oracle (the CSV oracle
     * reads the artifact itself, which IS the slice), so the three-way
     * check is unchanged — only the written volume shrinks.
@@ -83,7 +83,7 @@ object FileFormats {
     * parses the same CSV files with DuckDB's reader.
     */
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    graft.Artifacts.writeOnce(s, d, "csv_events") {
+    graft.Pins.writeArtifact(s, d, "csv_events") {
       sliced(typedEvents(s, d))
         .coalesce(1)
         .write.mode("overwrite")
@@ -107,7 +107,7 @@ object FileFormats {
     * the hash compare.
     */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    graft.Artifacts.writeOnce(s, d, "orc_events") {
+    graft.Pins.writeArtifact(s, d, "orc_events") {
       sliced(typedEvents(s, d))
         .coalesce(1)
         .write.mode("overwrite").orc(OrcPath)

@@ -2,7 +2,7 @@ package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Columnar at-rest storage for log/event tables.
   *
@@ -237,18 +237,18 @@ object LogStore {
     val tieCols = merged.columns.filterNot(_ == "__side").map(col).toSeq
     val w = Window.partitionBy(col("event_date"), col(keyCol))
       .orderBy(col(seqCol).desc, col("__side").desc, xxhash64(tieCols: _*).asc)
-    // EAGER barrier: the compacted frame must be fully materialized
+    // EAGER frame pin: the compacted frame must be fully materialized
     // BEFORE the dynamic-partition overwrite replaces its own source
     // partitions — lazy lineage-cut would let the overwrite job itself
     // read the partitions it is replacing, making isolation depend on
     // the window's shuffle stage happening to complete before the
-    // commit (ADVICE r15). The materialized set is only the touched
+    // commit. The materialized set is only the touched
     // partitions' rows (broadcast-semi-pruned above).
     merged
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__side")
-      .barrier("touched partitions' rows — materialize before self-overwrite")
+      .pin("touched partitions' rows — materialize before self-overwrite")
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("event_date")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.Row
 import graft.parse.LogParse
-import graft.Tables.BarrierOps
+import graft.Pins.FramePin
 
 /** Structured Streaming surface: sources (S4), watermarked tumbling
   * windows (A5), foreachBatch sinks (K1-K5, U2), and the streaming
@@ -513,9 +513,8 @@ object StreamPipelines {
 
   /** Admission stage of one corpus micro-batch: the admitted rows of
     * `admitIn` with their token accounting
-    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]]) go to
-    * `sink`, which must consume them before the caller appends to any
-    * table the chain probes (the chain's pins are lazy). Then the
+    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]], whose rows
+    * are fixed before the caller appends to the index) go to `sink`. Then the
     * per-lang tokenizer-drift flags of `docs` under the frozen BPE
     * merges and unigram pieces — the same drift bodies and retrain
     * rules as the batch audits. Every artifact is frozen, so the stage
@@ -554,7 +553,7 @@ object StreamPipelines {
       ds(graft.operators.Dedup.splitBridgeMonitor(s, docs, prefix), id))
     val assigned = graft.operators.Dedup.splitAssignDeltaCore(
         s, docs, s.table(s"${prefix}_split"), prefix)
-      .barrier("one row per micro-batch doc")
+      .pin("one row per micro-batch doc")
     sink(assigned, id)
     val seenSplit = s.table(s"${prefix}_split").select(col("doc_id"))
     graft.operators.Dedup.foldSplitAssign(s,
@@ -783,7 +782,7 @@ object StreamPipelines {
         val s = batch.sparkSession
         // one materialization of the batch — the stages and up to
         // five drift flags all re-read it (bound: micro-batch rows)
-        val b = batch.barrier("one micro-batch of ingest docs")
+        val b = batch.pin("one micro-batch of ingest docs")
         val docsB = b.select(col("doc_id"), col("text"), col("lang"))
         // 0. frozen-LM admission gate (optional; stateless — frozen
         //    artifacts, so a replayed batch re-derives identical
@@ -800,7 +799,7 @@ object StreamPipelines {
             .mooreLewisGateBatch(s,
               b.select(col("doc_id"), col("lang"), col("text")), prefix,
               rule = mlGateRule, cut = mlCut)
-            .barrier("one row per scored batch candidate")
+            .pin("one row per scored batch candidate")
           mlGateSink.foreach(gs => gs(scored, id))
           // the monitor's attribution rides the verdict rows'
           // score_keep column — nothing to pair

@@ -23,7 +23,7 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val df = (1L to 100L).toDF("id").withColumn("x", col("id") * 2)
     // local mode (default): same rows, truncated plan
-    val local = Tables.barrier(df, "100 fixture rows")
+    val local = Pins.frame(df, "100 fixture rows")
     assert(local.count() == 100 &&
       local.queryExecution.optimizedPlan.collectLeaves().size == 1)
     // reliable mode: eager checkpoint to the configured dir — the
@@ -32,14 +32,14 @@ class LayoutSpec extends SparkSpec {
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("graft.barrier.mode", "reliable")
     try {
-      val reliable = Tables.barrier(df, "100 fixture rows")
+      val reliable = Pins.frame(df, "100 fixture rows")
       assert(reliable.count() == 100)
       assert(new java.io.File(dir).listFiles().nonEmpty, "checkpoint dir empty")
     } finally {
       spark.conf.unset("graft.barrier.mode")
       spark.sparkContext.setCheckpointDir(suiteCheckpointDir)
     }
-    intercept[IllegalArgumentException](Tables.barrier(df, ""))
+    intercept[IllegalArgumentException](Pins.frame(df, ""))
   }
 
   test("reliable barrier carries a real composed pipeline: minhashDedup parity + checkpoint on disk") {
@@ -49,8 +49,8 @@ class LayoutSpec extends SparkSpec {
     // dedup composition (fused index barrier → banding → candidates →
     // exact verify → connected components → labels). Baseline rows from
     // the main session (local barriers — the oracle-checked path), then
-    // the SAME query in a FRESH session (SessionCache keys on the
-    // session object, so every cached builder and its barriers re-run)
+    // the SAME query in a FRESH session (session pins key on the
+    // session object, so every pinned builder and its frame pins re-run)
     // under graft.barrier.mode=reliable with a checkpoint dir:
     // identical rows and at least one reliable checkpoint on disk.
     graft.functions.NgramJaccardFunctions.register(spark)

@@ -12,20 +12,29 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
   * which Catalyst folds away — is caught too.
   */
 class PlanGuardSpec extends SparkSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Every registered query, built once and shared by the four
+    * whole-surface guards: building runs a query's frame pins, and each
+    * frame plans once (its QueryExecution caches the plans). None of the
+    * four guards executes a frame.
+    */
+  private lazy val built: Seq[(String, Either[Throwable, DataFrame])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(fn(spark, sf)) catch { case e: Throwable => Left(e) })
+    }
+
+  /** The registered queries `bad` flags, plus any that fail to build or plan. */
+  private def flagged(bad: DataFrame => Boolean): Seq[String] =
+    built.flatMap { case (name, df) =>
+      try { if (bad(df.fold(e => throw e, identity))) Some(name) else None }
+      catch { case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})") }
+    }
 
   test("no registered query compiles to an unpartitioned global window") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, sf).queryExecution.optimizedPlan
-          val bad = plan.collect {
-            case w: LogicalWindow if w.partitionSpec.isEmpty => w
-          }
-          if (bad.nonEmpty) Some(name) else None
-        } catch {
-          case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})")
-        }
-    }
+    val offenders = flagged(_.queryExecution.optimizedPlan.collect {
+      case w: LogicalWindow if w.partitionSpec.isEmpty => w
+    }.nonEmpty)
     assert(offenders.isEmpty,
       s"single-partition global-window plans (the lmQuality-ntile scale " +
         s"trap class): $offenders")
@@ -39,7 +48,7 @@ class PlanGuardSpec extends SparkSpec {
     * adaptive wrapper (and through subquery plans), so match on that,
     * like the sibling window-guard matches the logical plan.
     */
-  private def plansCartesian(df: org.apache.spark.sql.DataFrame): Boolean =
+  private def plansCartesian(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("CartesianProduct")
 
   test("no registered query executes a non-broadcast cartesian product") {
@@ -49,14 +58,7 @@ class PlanGuardSpec extends SparkSpec {
     // scale and fatal at 100 TB. The two documented exact all-pairs
     // baselines (Similarity.nearDupPairs / bruteTopK) broadcast their
     // small side too, so NO query is exempt.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          if (plansCartesian(fn(spark, sf))) Some(name) else None
-        } catch {
-          case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})")
-        }
-    }
+    val offenders = flagged(plansCartesian)
     assert(offenders.isEmpty,
       s"non-broadcast cartesian-product plans: $offenders")
   }
@@ -79,20 +81,11 @@ class PlanGuardSpec extends SparkSpec {
       "q_mad_anomaly",         // row-scale per event_type; documented approx swap
       "q_skew_profile",        // one row per distinct key; documented approx swap
       "q_user_deciles")        // one row per distinct user; documented approx swap
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, sf).queryExecution.optimizedPlan
-          val unbounded = plan.collect {
-            case a: Aggregate if a.aggregateExpressions
-              .exists(_.exists(_.isInstanceOf[Percentile])) =>
-              a.child.collectFirst { case _: GlobalLimit => () }.isEmpty
-          }
-          if (unbounded.exists(identity) && !documented(name)) Some(name) else None
-        } catch {
-          case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})")
-        }
-    }
+    val offenders = flagged(_.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.aggregateExpressions
+        .exists(_.exists(_.isInstanceOf[Percentile])) =>
+        a.child.collectFirst { case _: GlobalLimit => () }.isEmpty
+    }.exists(identity)).filterNot(documented)
     assert(offenders.isEmpty,
       s"exact percentile over non-limit-bounded input outside the " +
         s"documented allowlist: $offenders")
@@ -103,7 +96,7 @@ class PlanGuardSpec extends SparkSpec {
     * `inputPlan` holds every exchange the query asked for
     * (`repartition`), before AQE adds the ones a sort or join requires.
     */
-  private def wrappedPlan(df: org.apache.spark.sql.DataFrame) = {
+  private def wrappedPlan(df: DataFrame) = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.inputPlan
@@ -112,7 +105,7 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   /** A global sort that runs in one task: its child has one partition. */
-  private def sortsInOneTask(df: org.apache.spark.sql.DataFrame): Boolean = {
+  private def sortsInOneTask(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.SortExec
     wrappedPlan(df).exists {
@@ -156,7 +149,7 @@ class PlanGuardSpec extends SparkSpec {
     "q_time_range_scan", "q_session_stats", "q_latency_percentiles",
     "q_moving_avg", "q_user_retention", "q_funnel")
 
-  private def executesRangeExchange(df: org.apache.spark.sql.DataFrame): Boolean = {
+  private def executesRangeExchange(df: DataFrame): Boolean = {
     df.collect()
     // after execution the rendered tree is AQE's final plan
     df.queryExecution.executedPlan.toString.contains("rangepartitioning")
@@ -169,11 +162,7 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("every single-task ordered result is on the allowlist with its bound") {
-    val sorting = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { if (sortsInOneTask(fn(spark, sf))) Some(name) else None }
-        catch { case e: Throwable => Some(s"$name (planning failed: ${e.getMessage})") }
-    }.toSet
+    val sorting = flagged(sortsInOneTask).toSet
     assert(singleTaskSorts.values.forall(_.nonEmpty))
     val undocumented = sorting -- singleTaskSorts.keySet
     assert(undocumented.isEmpty,

@@ -175,26 +175,23 @@ class QuerySurfaceSpec extends SparkSpec {
 
   test("anomaly family is served by one shared cached baseline") {
     // The per-(user,hour) scored baseline is built once per (session,
-    // sfDir) — one events scan, one pass for BOTH windows — persisted,
-    // and every family member reads the cache. Plan strings embed the
-    // cached relation's own build plan, so outer-query assertions look
-    // only at the text BEFORE the first InMemoryRelation marker.
+    // sfDir) — one events scan, one pass for BOTH windows — frame-pinned,
+    // and every family member reads the pin. A frame pin cuts lineage, so
+    // the pinned relation prints as an RDD scan with no build plan under it.
     val z = operators.Analytics.zscoreAnomaly(spark, sf)
     z.collect()
     val zPlan = z.queryExecution.executedPlan.toString
-    val zOuter = zPlan.split("InMemoryRelation")(0)
-    assert(zOuter.contains("InMemoryTableScan"), zPlan.take(1500))
-    assert("Scan parquet".r.findAllIn(zOuter).isEmpty,
+    assert(zPlan.contains("Scan ExistingRDD"), zPlan.take(1500))
+    assert("Scan parquet".r.findAllIn(zPlan).isEmpty,
       s"z-score table rescans parquet:\n${zPlan.take(1500)}")
 
     // the enrichment join scans events once (the row-sample side) and
-    // takes the anomaly metadata from the same cache, not a re-derivation
+    // takes the anomaly metadata from the same pin, not a re-derivation
     val e = operators.Analytics.anomalyEnriched(spark, sf)
     e.collect()
     val ePlan = e.queryExecution.executedPlan.toString
-    val eOuter = ePlan.split("InMemoryRelation")(0)
-    assert(eOuter.contains("InMemoryTableScan"), ePlan.take(1500))
-    assert("Scan parquet".r.findAllIn(eOuter).size == 1, ePlan.take(2000))
+    assert(ePlan.contains("Scan ExistingRDD"), ePlan.take(1500))
+    assert("Scan parquet".r.findAllIn(ePlan).size == 1, ePlan.take(2000))
   }
 
   test("typed sessionization agrees with the window-function formulation") {

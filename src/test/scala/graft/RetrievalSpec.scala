@@ -55,11 +55,10 @@ class RetrievalSpec extends SparkSpec {
     val flat = Retrieval.bm25TopK(spark, sf).collect().map(_.toSeq)
     val indexed = Retrieval.bm25Indexed(spark, sf).collect().map(_.toSeq)
     assert(indexed.toSeq == flat.toSeq)
-    // and the probe is served from the cached index (InMemoryTableScan),
-    // not a fresh corpus tokenize — the cached relation's plan STRING
-    // still prints its build lineage, so assert on the scan node type
+    // and the probe is served from the pinned index (the frame pins'
+    // RDD scans), not a fresh corpus tokenize
     val plan = Retrieval.bm25Indexed(spark, sf).queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"),
+    assert(plan.contains("Scan ExistingRDD"),
       s"indexed probe did not read the cached postings:\n$plan")
   }
 

@@ -302,6 +302,29 @@ class TrainingPrepSpec extends SparkSpec {
     assert(out2.nonEmpty, "degenerate: generation 2 admitted nothing at spec SF")
   }
 
+  test("deltaAdmissionChain's rows are fixed before an append of the same batch") {
+    // a sink may consume the chain's frame AFTER the caller appended the
+    // batch's admitted docs to the index the chain probes; the frame must
+    // still hold the verdicts against the index as it was
+    val docs = Tables.documents(spark, sf)
+    val bucket = GoldenHash.bucket(col("doc_id"), 20)
+    val batch = docs.filter(bucket === 7)
+    Dedup.writeDedupIndex(docs.filter(bucket =!= 7), "racechk")
+    val before = TrainingPrep.deltaAdmissionChain(spark, sf, batch, "racechk")
+      .collect().map(_.toSeq).toSeq
+    assert(before.nonEmpty, "degenerate: the batch admitted nothing at spec SF")
+    // the append's input must not run the chain: its first action would
+    // materialize any lazy pin before the append
+    val admitted = before.map(_.head.asInstanceOf[Long])
+    val chain = TrainingPrep.deltaAdmissionChain(spark, sf, batch, "racechk")
+    Dedup.appendDedupIndex(
+      batch.filter(col("doc_id").isin(admitted: _*)).select(col("doc_id"), col("text")),
+      "racechk")
+    val after = chain.collect().map(_.toSeq).toSeq
+    assert(after == before,
+      s"collected after the append: ${after.size} rows, before it: ${before.size}")
+  }
+
   test("corpusPrepDelta admission agrees with its constituent gates") {
     val docs = Tables.documents(spark, sf)
     val isDelta = GoldenHash.bucket(col("doc_id"), 20) === 7
