@@ -13,7 +13,15 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
   * (reference: postgres/init.sql:80-84).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    readParquet(spark, s"$dir/$name.parquet", nanosAsLong = None)
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    * `nanosAsLong`, when given, decides how the footer's
+    * TIMESTAMP(NANOS) columns convert instead of the session setting.
+    */
+  private def readParquet(spark: SparkSession, path: String,
+      nanosAsLong: Option[Boolean]): DataFrame = {
     // Fixture timestamps are parquet TIMESTAMP(MICROS,
     // isAdjustedToUTC=false), which Spark 4 infers as TIMESTAMP_NTZ by
     // default. The engine standardizes on ONE timestamp type,
@@ -27,8 +35,7 @@ object Tables {
     // that reads one footer, most of the cost of building the frame; the
     // bridge reads that footer on the driver with the same file choice
     // and converter, and keeps nothing between calls.
-    val path = s"$dir/$name.parquet"
-    GraftParquetBridge.footerSchema(spark, path) match {
+    GraftParquetBridge.footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
@@ -44,16 +51,19 @@ object Tables {
   /** `events.parquet` has shipped with `ts` in two physical layouts
     * across fixture generations: parquet TIMESTAMP(NANOS) — which
     * Spark's vectorized reader rejects ([PARQUET_TYPE_ILLEGAL]) — and
-    * plain TIMESTAMP(MICROS). Branch on the footer schema: a MICROS
-    * column is a native TimestampType scan (filters push down
-    * untouched); a NANOS column is read as a LONG (legacy conf) and
-    * truncated to microseconds with integer DIV — identical to DuckDB's
-    * nanos→micros truncation, so the oracle sees the same values, with
-    * [[graft.plans.NanosPushdown]] restoring time-range pushdown
-    * through the conversion.
+    * plain TIMESTAMP(MICROS). The footer is converted with NANOS read as
+    * LONG, which tells the layouts apart: a MICROS column is a native
+    * TimestampType scan (filters push down untouched) and leaves the
+    * session's settings as it found them; a NANOS column is read as a
+    * LONG, which sets `spark.sql.legacy.parquet.nanosAsLong` on the
+    * session for the scan, and truncated to microseconds with integer
+    * DIV — identical to DuckDB's nanos→micros truncation, so the oracle
+    * sees the same values, with [[graft.plans.NanosPushdown]] restoring
+    * time-range pushdown through the conversion. (With schema merging on,
+    * Spark infers the schema itself, and a NANOS table fails loudly
+    * unless the caller has set the legacy option.)
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Keep the nanos pushdown rule installed regardless of layout: it
     // only matches the MicrosToTimestamp(ts DIV 1000) pattern, so it is
     // a no-op on native-micros plans. Append-if-absent so
@@ -61,9 +71,10 @@ object Tables {
     if (!s.experimental.extraOptimizations.contains(graft.plans.NanosPushdown))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ graft.plans.NanosPushdown
-    val raw = table(s, d, "events")
+    val raw = readParquet(s, s"$d/events.parquet", nanosAsLong = Some(true))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr("ts DIV 1000L")))
       case _ => raw // native TIMESTAMP(MICROS) fixture layout

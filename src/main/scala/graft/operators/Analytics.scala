@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
@@ -312,21 +312,73 @@ object Analytics {
       .orderBy(col("user_id"), col("rn"))
   }
 
-  /** Sessionization via lag() — gap > 30 min opens a new session; counts
-    * sessions per key. The Window shuffle partitions by user_id —
-    * exactly one exchange, reused by the downstream groupBy(user_id).
+  /** One output row per user from an ordered walk over that user's rows.
+    *
+    * `rows` carries `user_id` plus the columns `order` reads. It is
+    * hash-partitioned on `user_id` through [[Tables.scanSpread]] (a bare
+    * `repartition(col)` is coalesced by AQE into one task), each partition
+    * is sorted on (`user_id`, `order`...) with nulls first, and the rows
+    * are decoded as `I`. `user` reads a row's `user_id` (a NULL is its
+    * own run); `foldRun` is handed each user and that user's run in order,
+    * and returns the user's row or None for no row.
+    *
+    * Scale contract: a task holds one user's running state, which is what
+    * `foldRun` keeps (a few longs), never a user's rows or a partition's
+    * output: runs are handed over as lazy iterators and rows are emitted
+    * one at a time. The only per-key buffer is Spark's external sort, so a
+    * key with 90% of the rows spills as a window over it would, and costs
+    * one long task rather than memory.
+    */
+  private def foldByUser[I: Encoder, O: Encoder](rows: DataFrame, order: Column*)(
+      user: I => Option[Long])(foldRun: (Option[Long], Iterator[I]) => Option[O]): Dataset[O] =
+    Tables.scanSpread(rows, col("user_id"))
+      .sortWithinPartitions(col("user_id") +: order: _*)
+      .as[I]
+      .mapPartitions { it =>
+        val in = it.buffered
+        new Iterator[Option[O]] {
+          def hasNext: Boolean = in.hasNext
+          def next(): Option[O] = {
+            val u = user(in.head)
+            val run = new Iterator[I] {
+              def hasNext: Boolean = in.hasNext && user(in.head) == u
+              def next(): I = in.next()
+            }
+            val out = foldRun(u, run)
+            run.foreach(_ => ()) // a fold may stop before its run ends
+            out
+          }
+        }.flatten
+      }
+
+  /** Sessions and events per user; NULL `user_id` is one group. A row
+    * starts a session when it is the user's first row, when the row
+    * before it has a NULL `ts`, or when it is strictly more than 30 min
+    * after the row before it (a gap of exactly 30 min continues the
+    * session); rows are ordered by `ts` with NULL first, so each NULL-`ts`
+    * row starts a session and so does the first timed row after them.
+    * `n_events` counts every row of the user. Ties on `ts` are not
+    * ordered: a zero gap never starts a session.
+    *
+    * One ordered fold ([[foldByUser]]): one hash exchange on `user_id`,
+    * one partition sort, and two counters per user.
     */
   def sessionStats(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          (unix_micros(col("ts")) - unix_micros(col("prev_ts"))) > 1800L * 1000000L, 1L)
-          .otherwise(0L))
-      .groupBy(col("user_id"))
-      .agg(sum(col("new_session")).as("n_sessions"),
-        count(lit(1)).as("n_events"))
+    import s.implicits._
+    val rows = Tables.events(s, d)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
+    val gap = TypedSessions.GapMicros
+    foldByUser[(Option[Long], Option[Long]), (Option[Long], Long, Long)](
+        rows, col("ts_us"))(_._1) { (user, run) =>
+      var prev: Option[Long] = None
+      var sessions = 0L
+      var events = 0L
+      run.foreach { case (_, ts) =>
+        if (prev.isEmpty || ts.exists(_ - prev.get > gap)) sessions += 1
+        prev = ts; events += 1
+      }
+      Some((user, sessions, events))
+    }.toDF("user_id", "n_sessions", "n_events")
       .sortInOneTask("one row per user", col("user_id"))
   }
 
@@ -786,22 +838,23 @@ object Analytics {
       .orderBy(col("event_type"), col("hour"))
   }
 
-  /** Day-over-day retention: users active on a day AND the next —
-    * cohort analytics over the log stream. Two distincts + a self-join
-    * on (user, day+1); the distinct frames are (users × days)-sized,
-    * far below event volume, and co-partitioned on user_id.
+  /** Day-over-day retention: per day, the users active on that day and
+    * on the next (UTC days). Each user's set of active days is collected
+    * once (`collect_set`, bounded by the user's distinct days, not by
+    * events); each day whose next day is in the same set counts that
+    * user. Rows with a NULL `user_id` or `ts` count for no one. No join:
+    * one aggregation by user, then one by day.
     */
-  def userRetention(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .select(col("user_id"), date_trunc("day", col("ts")).cast("date").as("day"))
-      .distinct()
-    val next = daily.select(col("user_id").as("uid2"), col("day").as("next_day"))
-    daily.join(next,
-        col("user_id") === col("uid2") && date_add(col("day"), 1) === col("next_day"))
+  def userRetention(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("user_id").isNotNull)
+      .groupBy(col("user_id"))
+      .agg(collect_set(date_trunc("day", col("ts")).cast("date")).as("days"))
+      .select(col("days"), explode(col("days")).as("day"))
+      .filter(array_contains(col("days"), date_add(col("day"), 1)))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("retained_users"))
       .sortInOneTask("one row per day", col("day"))
-  }
 
   /** Artifact path shared by [[logIngest]] and its DuckDB oracle: the
     * rendered JSON-lines wire payload, pinned once per (session, sfDir)
@@ -862,20 +915,12 @@ object Analytics {
       .orderBy(col("endpoint"), col("status_code"))
   }
 
-  /** Ordered conversion funnel: per user, the earliest view, then the
-    * earliest click AT-OR-AFTER that view, then the earliest purchase
-    * at-or-after that click — sequence-constrained matching, not three
-    * independent mins.
-    *
-    * Formulation: three STACKED partition-wide window aggregates over
-    * the same user_id partitioning — each stage's conditional min can
-    * reference the previous stage's column because window expressions
-    * compose. Plan: ONE scan of events (event_type IN pushed to
-    * parquet), ONE hash exchange, three Window ops sharing a single
-    * sort, and a groupBy(user_id) that reuses the partitioning with no
-    * further exchange. (Aggregating the three stages separately and
-    * joining plans SIX pruned scans + five joins; the window form
-    * replaces all of it with one pass.)
+  /** Ordered conversion funnel, one row per user with a view: the
+    * user's first view, the first click at or after it, and the first
+    * purchase at or after that click (sequence-constrained matching, not
+    * three independent mins); `stage` is 1, 2 or 3 for how far the user
+    * got. Rows with a NULL `ts` or an `event_type` outside the three take
+    * no part; a NULL `user_id` is one user.
     */
   def funnel(s: SparkSession, d: String): DataFrame =
     funnelOf(Tables.events(s, d))
@@ -884,28 +929,37 @@ object Analytics {
     * shared by the batch query above and the streaming twin's spec
     * ([[graft.streaming.StreamPipelines.streamingFunnel]] must converge
     * to exactly this output on the same data).
+    *
+    * One ordered fold ([[foldByUser]]) over each user's rows sorted by
+    * `ts`, ties broken by type rank view < click < purchase, so an event
+    * at the instant of the step before it still counts (`ts >=` the
+    * previous step). The walk keeps three optional instants per user: the
+    * first view sets the view, the first click after it the click, and
+    * the first purchase after that the purchase.
     */
   def funnelOf(events: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-    events
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withColumn("view_ts",
-        min(when(col("event_type") === "view", col("ts"))).over(w))
-      .withColumn("click_ts",
-        min(when(col("event_type") === "click" && col("ts") >= col("view_ts"),
-          col("ts"))).over(w))
-      .withColumn("purchase_ts",
-        min(when(col("event_type") === "purchase" && col("ts") >= col("click_ts"),
-          col("ts"))).over(w))
-      .filter(col("view_ts").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(min(col("view_ts")).as("view_ts"),
-        min(col("click_ts")).as("click_ts"),
-        min(col("purchase_ts")).as("purchase_ts"))
-      .select(col("user_id"), col("view_ts"), col("click_ts"), col("purchase_ts"),
-        when(col("purchase_ts").isNotNull, 3)
-          .when(col("click_ts").isNotNull, 2)
+    import events.sparkSession.implicits._
+    val rows = events
+      .filter(col("event_type").isin("view", "click", "purchase") && col("ts").isNotNull)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        when(col("event_type") === "view", 0)
+          .when(col("event_type") === "click", 1).otherwise(2).as("rank"))
+    foldByUser[(Option[Long], Long, Int), (Option[Long], Long, Option[Long], Option[Long])](
+        rows, col("ts_us"), col("rank"))(_._1) { (user, run) =>
+      var view, click, purchase: Option[Long] = None
+      run.foreach { case (_, ts, rank) =>
+        if (rank == 0 && view.isEmpty) view = Some(ts)
+        else if (rank == 1 && view.nonEmpty && click.isEmpty) click = Some(ts)
+        else if (rank == 2 && click.nonEmpty && purchase.isEmpty) purchase = Some(ts)
+      }
+      view.map(v => (user, v, click, purchase))
+    }.toDF("user_id", "view_us", "click_us", "purchase_us")
+      .select(col("user_id"),
+        timestamp_micros(col("view_us")).as("view_ts"),
+        timestamp_micros(col("click_us")).as("click_ts"),
+        timestamp_micros(col("purchase_us")).as("purchase_ts"),
+        when(col("purchase_us").isNotNull, 3)
+          .when(col("click_us").isNotNull, 2)
           .otherwise(1).as("stage"))
       .sortInOneTask("one row per user with a view", col("user_id"))
   }

@@ -20,8 +20,9 @@ case class Session(user_id: Long, session_start: java.sql.Timestamp,
   * Scale contract: state per task is ONE user's events (the group
   * iterator is materialized to sort) — fine when per-key cardinality is
   * bounded, which is the log-analytics case. For unbounded keys use the
-  * window-function formulation ([[Analytics.sessionStats]]), which
-  * sorts via the shuffle instead of the heap.
+  * sorted fold behind [[Analytics.sessionStats]], which sorts through
+  * the shuffle's external sort and holds one user's counters, not the
+  * user's events.
   *
   * Per-session totals are exact cent sums (fold order is deterministic
   * here, but the DuckDB oracle's SUM order is not — integer cents make

@@ -27,12 +27,16 @@ object GraftParquetBridge {
     * without merging: the first `_common_metadata`, else the first
     * `_metadata`, else the first data file, in path order. The converter
     * takes the five settings `mergeSchemasInParallel` reads from the
-    * session conf and the constructor defaults for the rest. Nothing is
+    * session conf and the constructor defaults for the rest; `nanosAsLong`,
+    * when given, replaces the session's
+    * `spark.sql.legacy.parquet.nanosAsLong` (a TIMESTAMP(NANOS) column
+    * converts to LONG under it and fails without it). Nothing is
     * kept between calls: every call lists the path and reads the footer
     * afresh, so a table that gains or replaces a file is read as it
     * stands.
     */
-  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  def footerSchema(spark: SparkSession, path: String,
+      nanosAsLong: Option[Boolean] = None): Option[StructType] = {
     val conf = SessionStateHelper.getSqlConf(spark)
     if (new ParquetOptions(Map.empty[String, String], conf).mergeSchema) return None
     val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
@@ -49,7 +53,7 @@ object GraftParquetBridge {
           assumeBinaryIsString = conf.isParquetBinaryAsString,
           assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
           inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-          nanosAsLong = conf.legacyParquetNanosAsLong,
+          nanosAsLong = nanosAsLong.getOrElse(conf.legacyParquetNanosAsLong),
           respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
         ParquetFileFormat.readSchemaFromFooter(footer, converter)
       }

@@ -185,6 +185,61 @@ class PlanGuardSpec extends SparkSpec {
     assert(oneTask.collect().map(_.getLong(0)).toSeq == (0L until 1000L))
   }
 
+  /** Every node of the plan AQE ran, through its wrapper and query stages. */
+  private def finalPlanNodes(df: DataFrame) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    object Aqe extends AdaptiveSparkPlanHelper
+    Aqe.collect(df.queryExecution.executedPlan) { case p: SparkPlan => p }
+  }
+
+  /** Why a per-user dashboard query's final plan is not one ordered pass:
+    * any window or shuffled or broadcast join, and, where `oneUserExchange`,
+    * anything but one hash exchange on `user_id` besides the single-task
+    * sort's exchange.
+    */
+  private def perUserPlanFaults(df: DataFrame, oneUserExchange: Boolean): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val nodes = finalPlanNodes(df)
+    val banned = nodes.collect {
+      case _: WindowExec => "Window"
+      case _: SortMergeJoinExec => "SortMergeJoin"
+      case _: BroadcastHashJoinExec => "BroadcastHashJoin"
+    }.distinct
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val byUser = exchanges.count {
+      case h: HashPartitioning => h.expressions.exists {
+        case a: Attribute => a.name == "user_id"
+        case _ => false
+      }
+      case _ => false
+    }
+    banned ++ (if (oneUserExchange && (byUser != 1 || exchanges.size != 2))
+      Seq(s"exchanges $exchanges, $byUser of them hashed on user_id") else Nil)
+  }
+
+  test("the per-user dashboard queries run no window and no join; sessions and funnel shuffle once by user") {
+    val faults = Seq("q_session_stats" -> true, "q_funnel" -> true, "q_user_retention" -> false)
+      .flatMap { case (q, one) =>
+        perUserPlanFaults(SparkEntry.queries(q)(spark, sf), one).map(f => s"$q: $f")
+      }
+    assert(faults.isEmpty, faults)
+  }
+
+  test("the per-user plan guard flags the window and self-join formulations (positive control)") {
+    assert(perUserPlanFaults(DashboardReferences.sessionStats(spark, sf), oneUserExchange = true)
+      .contains("Window"))
+    assert(perUserPlanFaults(DashboardReferences.funnel(spark, sf), oneUserExchange = true)
+      .contains("Window"))
+    val retention = perUserPlanFaults(DashboardReferences.userRetention(spark, sf), oneUserExchange = false)
+    assert(retention.exists(_.endsWith("Join")), retention)
+  }
+
   test("the cartesian detector fires through the AQE wrapper (positive control)") {
     // Non-vacuousness proof: a deliberate cartesian (broadcast disabled,
     // cross join, both sides shuffled so AQE wraps the plan) must be

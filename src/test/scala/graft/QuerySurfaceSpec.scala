@@ -194,15 +194,15 @@ class QuerySurfaceSpec extends SparkSpec {
     assert("Scan parquet".r.findAllIn(ePlan).size == 1, ePlan.take(2000))
   }
 
-  test("typed sessionization agrees with the window-function formulation") {
+  test("typed sessionization agrees with the sorted-fold session counts") {
     import org.apache.spark.sql.functions._
-    val fromWindows = operators.Analytics.sessionStats(spark, sf)
+    val fromFold = operators.Analytics.sessionStats(spark, sf)
       .select("user_id", "n_sessions").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fromTyped = operators.TypedSessions.sessionize(spark, sf)
       .groupBy(col("user_id")).count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fromTyped == fromWindows)
+    assert(fromTyped == fromFold)
   }
 
   test("approx percentiles stay within 5% of exact at every quantile") {

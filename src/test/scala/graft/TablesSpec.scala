@@ -92,16 +92,33 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   test("the resolved schema equals spark.read.parquet's for events in the NANOS layout") {
     val dir = nanosEventsDir()
-    val events = Tables.events(spark, dir) // sets nanosAsLong for the session
-    val raw = Tables.table(spark, dir, "events").schema
-    assert(raw == spark.read.parquet(s"$dir/events.parquet").schema)
+    // a session that has read no events: Tables.events sets the option itself
+    val fresh = spark.newSession()
+    assert(!fresh.conf.getAll.contains(NanosAsLong))
+    val events = Tables.events(fresh, dir)
+    assert(fresh.conf.get(NanosAsLong) == "true", "the NANOS scan needs the legacy option")
+    val raw = Tables.table(fresh, dir, "events").schema
+    assert(raw == fresh.read.parquet(s"$dir/events.parquet").schema)
     assert(raw("ts").dataType == LongType, raw)
     assert(events.schema("ts").dataType == TimestampType)
     val micros = events.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).sorted
     assert(micros.toSeq == (0 until 10).map(i => 1704067200000000L + i * 3600L * 1000000L),
       "nanos not truncated to micros")
+  }
+
+  test("reading a MICROS events table leaves the nanos-as-long option as it found it") {
+    for (preset <- Seq(None, Some("true"), Some("false"))) {
+      val s = spark.newSession()
+      preset.foreach(s.conf.set(NanosAsLong, _))
+      val events = Tables.events(s, Sf001)
+      assert(events.schema("ts").dataType == TimestampType)
+      assert(events.limit(3).collect().length == 3)
+      assert(s.conf.getAll.get(NanosAsLong) == preset, s"preset $preset")
+    }
   }
 
   test("building a table's DataFrame runs no Spark job") {
