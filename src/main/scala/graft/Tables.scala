@@ -16,30 +16,25 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet", nanosAsLong = None)
 
-  /** `spark.read.parquet(path)` without its schema-inference job.
+  /** `spark.read.parquet(path)` without its schema-inference job, and
+    * with fixture timestamps — parquet TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false), which Spark 4 infers as TIMESTAMP_NTZ by
+    * default — read as TIMESTAMP_LTZ. With a UTC session the wall-clock
+    * values the DuckDB oracle sees are identical either way. The footer
+    * read ([[GraftParquetBridge.footerSchema]]) decides that, so the
+    * caller's session conf is not touched. Where the bridge defers to
+    * Spark (schema merging on, or no data file), `spark.read.parquet`
+    * infers with the session's own NTZ setting; so does the external
+    * table DDL of `q_catalog_scan`, which reads no timestamp column.
     * `nanosAsLong`, when given, decides how the footer's
     * TIMESTAMP(NANOS) columns convert instead of the session setting.
     */
   private def readParquet(spark: SparkSession, path: String,
-      nanosAsLong: Option[Boolean]): DataFrame = {
-    // Fixture timestamps are parquet TIMESTAMP(MICROS,
-    // isAdjustedToUTC=false), which Spark 4 infers as TIMESTAMP_NTZ by
-    // default. The engine standardizes on ONE timestamp type,
-    // TIMESTAMP_LTZ (session tz pinned UTC everywhere): unix_micros,
-    // watermarks, and window() require it, and with a UTC session the
-    // wall-clock values the DuckDB oracle sees are identical either
-    // way. Disable NTZ inference at the single fixture entry point so
-    // the choice cannot depend on table-read order.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // `spark.read.parquet(path)` would infer the schema with a Spark job
-    // that reads one footer, most of the cost of building the frame; the
-    // bridge reads that footer on the driver with the same file choice
-    // and converter, and keeps nothing between calls.
+      nanosAsLong: Option[Boolean]): DataFrame =
     GraftParquetBridge.footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -54,40 +49,33 @@ object Tables {
     * plain TIMESTAMP(MICROS). The footer is converted with NANOS read as
     * LONG, which tells the layouts apart: a MICROS column is a native
     * TimestampType scan (filters push down untouched) and leaves the
-    * session's settings as it found them; a NANOS column is read as a
-    * LONG, which sets `spark.sql.legacy.parquet.nanosAsLong` on the
-    * session for the scan, and truncated to microseconds with integer
-    * DIV — identical to DuckDB's nanos→micros truncation, so the oracle
-    * sees the same values, with [[graft.plans.NanosPushdown]] restoring
+    * session's settings and optimizer rules as it found them; a NANOS
+    * column is read as a LONG (which sets
+    * `spark.sql.legacy.parquet.nanosAsLong` on the session) and
+    * truncated to microseconds with integer DIV — identical to DuckDB's
+    * nanos→micros truncation, so the oracle sees the same values — and
+    * [[graft.plans.NanosPushdown]] is installed on the session to restore
     * time-range pushdown through the conversion. (With schema merging on,
     * Spark infers the schema itself, and a NANOS table fails loudly
     * unless the caller has set the legacy option.)
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // Keep the nanos pushdown rule installed regardless of layout: it
-    // only matches the MicrosToTimestamp(ts DIV 1000) pattern, so it is
-    // a no-op on native-micros plans. Append-if-absent so
-    // caller-installed rules survive.
-    if (!s.experimental.extraOptimizations.contains(graft.plans.NanosPushdown))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.NanosPushdown
     val raw = readParquet(s, s"$d/events.parquet", nanosAsLong = Some(true))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
+        // only this branch builds the `timestamp_micros(ts DIV 1000)`
+        // shape the pushdown rule matches; append-if-absent so
+        // caller-installed rules survive
+        if (!s.experimental.extraOptimizations.contains(graft.plans.NanosPushdown))
+          s.experimental.extraOptimizations =
+            s.experimental.extraOptimizations :+ graft.plans.NanosPushdown
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr("ts DIV 1000L")))
       case _ => raw // native TIMESTAMP(MICROS) fixture layout
     }
   }
-  // The shared tokenization ([[graft.operators.TextAnalysis.words]]) is
-  // the registered graft_split_words codegen function, and every text
-  // operator starts from this reader: registering here makes the
-  // function available to ALL consumers without a per-builder ensure.
-  def documents(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
-    table(s, d, "documents")
-  }
+  def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** Spread heavy PER-ROW scan work (JSON rendering, fused hashing,

@@ -1,11 +1,9 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -14,10 +12,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * `util.sketch.BloomFilter` — the codegen'd replacement for a Scala
   * UDF closure over a broadcast (which pays per-row UTF8String→String
   * materialization and interpreted dispatch). The filter rides the
-  * plan as a serialized byte literal (deserialized ONCE per expression
-  * instance at construction, referenced from generated code via
-  * `addReferenceObj`) — appropriate for blocklist-sized sketches; a
-  * sketch too big to ship in a plan belongs in a join, not a filter.
+  * plan as a constructor object (serialized with the task, referenced
+  * from generated code via `addReferenceObj`) — appropriate for
+  * blocklist-sized sketches; a sketch too big to ship in a plan belongs
+  * in a join, not a filter.
   *
   * Probe semantics match what `DataFrameStatFunctions.bloomFilter`
   * inserts for STRING columns: UTF-8 bytes (`mightContainBinary` over
@@ -55,30 +53,7 @@ case class BloomMightContain(child: Expression, filter: BloomFilter)
 }
 
 object BloomFunctions {
-
-  /** The builder validates what `ExpectsInputTypes` would have (arity,
-    * a foldable BINARY sketch literal) up front — the function is
-    * visible in the session registry, so a SQL caller with wrong arity
-    * or a per-row second argument must get an IllegalArgumentException
-    * at analysis, not an IndexOutOfBounds/ClassCast per row (ADVICE r6).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_bloom_contains(value, sketch) takes 2 arguments, got ${es.length}")
-        require(es(1).foldable && es(1).dataType == org.apache.spark.sql.types.BinaryType,
-          "graft_bloom_contains sketch must be a BINARY literal (a serialized BloomFilter)")
-        val bytes = es(1).eval().asInstanceOf[Array[Byte]]
-        require(bytes != null, "graft_bloom_contains sketch must not be NULL")
-        BloomMightContain(es(0),
-          BloomFilter.readFrom(new ByteArrayInputStream(bytes)))
-      }, "built-in")
-
-  def mightContain(c: Column, bf: BloomFilter): Column = {
-    val bos = new ByteArrayOutputStream()
-    bf.writeTo(bos)
-    call_function("graft_bloom_contains", c, lit(bos.toByteArray))
-  }
+  /** The plan holds `bf` itself, not a copy: do not add to it afterwards. */
+  def mightContain(c: Column, bf: BloomFilter): Column =
+    column(BloomMightContain(expr(c), bf))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -200,19 +200,9 @@ case class SortedLongJaccardGate(left: Expression, right: Expression,
 }
 
 object NgramJaccardFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard3", (es: Seq[Expression]) => NgramJaccard(es(0), es(1), 3), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted", (es: Seq[Expression]) => SortedLongJaccard(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_gate", (es: Seq[Expression]) =>
-        SortedLongJaccardGate(es(0), es(1),
-          es(2).eval().asInstanceOf[Number].doubleValue()), "built-in")
-  }
-
-  def jaccard3(a: Column, b: Column): Column = call_function("graft_jaccard3", a, b)
-  def jaccardSorted(a: Column, b: Column): Column = call_function("graft_jaccard_sorted", a, b)
+  def jaccard3(a: Column, b: Column): Column = column(NgramJaccard(expr(a), expr(b), 3))
+  def jaccardSorted(a: Column, b: Column): Column =
+    column(SortedLongJaccard(expr(a), expr(b)))
   def jaccardGate(a: Column, b: Column, threshold: Double): Column =
-    call_function("graft_jaccard_gate", a, b, org.apache.spark.sql.functions.lit(threshold))
+    column(SortedLongJaccardGate(expr(a), expr(b), threshold))
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** Space-Saving heavy-hitters state on primitive arrays — no boxing, no
@@ -206,21 +206,9 @@ object SpaceSavingAgg {
     StructField("err", LongType, nullable = false))), containsNull = false)
 }
 
-/** Registration + Column helper for the sketch aggregates. */
+/** Column helper for the sketch aggregates. */
 object SketchFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_space_saving",
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_space_saving(key, capacity) takes 2 arguments, got ${es.length}")
-        require(es(1).foldable,
-          "graft_space_saving capacity must be a literal")
-        SpaceSavingAgg(es(0), es(1).eval().asInstanceOf[Number].intValue())
-      }, "built-in")
-  }
-
   /** Space-Saving top talkers over a LONG key column. */
   def spaceSaving(key: Column, capacity: Int): Column =
-    call_function("graft_space_saving", key.cast("long"), lit(capacity))
+    column(SpaceSavingAgg(expr(key.cast("long")), capacity).toAggregateExpression())
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
@@ -426,7 +426,7 @@ case class MinhashSignature(child: Expression, h: Int) extends UnaryExpression {
 
 /** ARRAY<STRING> of words → ARRAY<INT> of hashed-bigram buckets
   * ([[GramHash.bigramBuckets]]), one fused pass inside whole-stage
-  * codegen. `dim` is a plan literal (the DSIR feature dimensionality).
+  * codegen. `dim` is a constructor constant (the DSIR feature dimensionality).
   */
 case class BigramBuckets(child: Expression, dim: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -465,7 +465,7 @@ case class TopBigramCount(child: Expression) extends UnaryExpression {
 }
 
 /** text → ARRAY<INT> of space-anchored shingle start positions
-  * ([[GramHash.spaceAnchors]]). `spanLen` is a plan literal.
+  * ([[GramHash.spaceAnchors]]). `spanLen` is a constructor constant.
   */
 case class SpaceAnchors(child: Expression, spanLen: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -545,7 +545,7 @@ case class Poly31Bucket(child: Expression, dim: Int) extends UnaryExpression {
 }
 
 /** ARRAY<STRING> of words → ARRAY<STRING> of space-joined word n-grams
-  * ([[GramHash.wordNGrams]]). `n` is a plan literal.
+  * ([[GramHash.wordNGrams]]). `n` is a constructor constant.
   */
 case class WordNGrams(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -604,54 +604,17 @@ case class GramSet(child: Expression) extends UnaryExpression {
 }
 
 object TextHashFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", (es: Seq[Expression]) => SimHash(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sigs", (es: Seq[Expression]) =>
-        MinhashSignature(es(0), es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_set", (es: Seq[Expression]) => GramSet(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bigram_buckets", (es: Seq[Expression]) =>
-        BigramBuckets(es(0), es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_bigram_count", (es: Seq[Expression]) => TopBigramCount(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_space_anchors", (es: Seq[Expression]) =>
-        SpaceAnchors(es(0), es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_ngrams", (es: Seq[Expression]) =>
-        WordNGrams(es(0), es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pmi_pair_rows", (es: Seq[Expression]) => PmiPairRows(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_split_words", (es: Seq[Expression]) => SplitWords(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_keep", (es: Seq[Expression]) => RepetitionKeep(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_poly31_bucket", (es: Seq[Expression]) =>
-        Poly31Bucket(es(0), es(1).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
-
-  def simhash(tokens: Column): Column = call_function("graft_simhash", tokens)
-  def minhashSigs(text: Column, h: Int): Column =
-    call_function("graft_minhash_sigs", text, lit(h))
-  def gramSet(text: Column): Column = call_function("graft_gram_set", text)
+  def simhash(tokens: Column): Column = column(SimHash(expr(tokens)))
+  def minhashSigs(text: Column, h: Int): Column = column(MinhashSignature(expr(text), h))
+  def gramSet(text: Column): Column = column(GramSet(expr(text)))
   def bigramBuckets(words: Column, dim: Int): Column =
-    call_function("graft_bigram_buckets", words, lit(dim))
-  def topBigramCount(words: Column): Column =
-    call_function("graft_top_bigram_count", words)
+    column(BigramBuckets(expr(words), dim))
+  def topBigramCount(words: Column): Column = column(TopBigramCount(expr(words)))
   def spaceAnchors(text: Column, spanLen: Int): Column =
-    call_function("graft_space_anchors", text, lit(spanLen))
-  def wordNGrams(words: Column, n: Int): Column =
-    call_function("graft_word_ngrams", words, lit(n))
-  def pmiPairRows(words: Column): Column =
-    call_function("graft_pmi_pair_rows", words)
-  def splitWords(text: Column): Column =
-    call_function("graft_split_words", text)
-  def repetitionKeep(text: Column): Column =
-    call_function("graft_repetition_keep", text)
-  def poly31Bucket(word: Column, dim: Int): Column =
-    call_function("graft_poly31_bucket", word, lit(dim))
+    column(SpaceAnchors(expr(text), spanLen))
+  def wordNGrams(words: Column, n: Int): Column = column(WordNGrams(expr(words), n))
+  def pmiPairRows(words: Column): Column = column(PmiPairRows(expr(words)))
+  def splitWords(text: Column): Column = column(SplitWords(expr(text)))
+  def repetitionKeep(text: Column): Column = column(RepetitionKeep(expr(text)))
+  def poly31Bucket(word: Column, dim: Int): Column = column(Poly31Bucket(expr(word), dim))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expressions for vector math over ARRAY<DOUBLE>.
@@ -210,26 +210,28 @@ case class LshBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
   * Per reference row the loop is [[CosineSimilarity]]'s fused
   * dot/|a|²/|b|² accumulation in the same ascending-j order, keeping
   * the arithmetic identical to the oracle's `list_sum` formulation.
-  * The matrix rides the plan as a reference object
-  * (`ctx.addReferenceObj`), not a literal — no giant array literal in
-  * the plan tree, and the whole probe stays inside whole-stage codegen
-  * with zero joins and zero shuffle on the corpus side. The
-  * [[MaxCosineSimBc]] variant additionally ships the matrix ONCE per
-  * executor via torrent broadcast instead of once per task closure —
-  * the form every driver-side caller should use (VERDICT r11 #1).
+  * The matrix ships ONCE per executor via torrent broadcast; only the
+  * (tiny) `Broadcast` handle rides the task closure and the plan
+  * reference array (`ctx.addReferenceObj`) — no giant array literal in
+  * the plan tree, no full matrix in every task binary, and the whole
+  * probe stays inside whole-stage codegen with zero joins and zero
+  * shuffle on the corpus side. The matrix is dereferenced once per
+  * codegen object (lazily, in a mutable-state init) — never per row.
   *
-  * Equality is reference-based on the matrix (like any
+  * Equality is reference-based on the broadcast (like any
   * constructor-object expression) — worst case a missed common-subexpr
   * elimination, never a wrong result.
   */
-abstract class MaxCosineBase extends UnaryExpression {
-  /** Interpreted-path matrix; codegen resolves its own reference. */
-  protected def matrix: Array[Array[Double]]
+case class MaxCosineSimBc(child: Expression,
+    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
+    extends UnaryExpression {
   override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_max_cosine_bc"
+  @transient private lazy val localMat: Array[Array[Double]] = bc.value
 
   override def nullSafeEval(input: Any): Any = {
     val buf = input.asInstanceOf[ArrayData].toDoubleArray()
-    val mat = matrix
+    val mat = localMat
     var best = Double.NegativeInfinity
     var r = 0
     while (r < mat.length) {
@@ -251,134 +253,62 @@ abstract class MaxCosineBase extends UnaryExpression {
     best
   }
 
-  /** Shared codegen loop; `matVar` must be a double[][] variable in
-    * scope. Kept textually parallel to [[nullSafeEval]] — same
-    * accumulation order, same NaN-before-round check.
-    */
-  protected final def genLoop(ctx: CodegenContext, a: String, matVar: String,
-      ev: ExprCode): String = {
-    val buf = ctx.freshName("buf")
-    val best = ctx.freshName("best")
-    val r = ctx.freshName("r")
-    val t = ctx.freshName("t")
-    val j = ctx.freshName("j")
-    val n = ctx.freshName("n")
-    val dot = ctx.freshName("dot")
-    val na = ctx.freshName("na")
-    val nb = ctx.freshName("nb")
-    val xv = ctx.freshName("xv")
-    val yv = ctx.freshName("yv")
-    val raw = ctx.freshName("raw")
-    val c = ctx.freshName("c")
-    s"""double[] $buf = $a.toDoubleArray();
-       |double $best = Double.NEGATIVE_INFINITY;
-       |for (int $r = 0; $r < $matVar.length; $r++) {
-       |  double[] $t = $matVar[$r];
-       |  int $n = java.lang.Math.min($buf.length, $t.length);
-       |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-       |  for (int $j = 0; $j < $n; $j++) {
-       |    double $xv = $buf[$j]; double $yv = $t[$j];
-       |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-       |  }
-       |  double $raw = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       |  if (java.lang.Double.isNaN($raw)) { $best = Double.NaN; break; }
-       |  double $c = java.lang.Math.round($raw * 1e6) / 1e6;
-       |  if ($c > $best) $best = $c;
-       |}
-       |${ev.value} = $best;""".stripMargin
-  }
-}
-
-/** Literal-matrix form, reachable through the `graft_max_cosine` SQL
-  * function (the matrix arrives as a foldable nested-array literal).
-  * The matrix serializes inside every task closure — fine for the
-  * SQL-surface's small inline matrices; driver-side callers with a
-  * collected matrix must use [[MaxCosineSimBc]] instead.
-  */
-case class MaxCosineSim(child: Expression, mat: Array[Array[Double]])
-    extends MaxCosineBase {
-  require(mat.nonEmpty, "reference matrix must be non-empty")
-  override def prettyName: String = "graft_max_cosine"
-  override protected def matrix: Array[Array[Double]] = mat
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      genLoop(ctx, a, ctx.addReferenceObj("testMat", mat, "double[][]"), ev))
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Broadcast-matrix form: the reference matrix ships ONCE per executor
-  * via torrent broadcast; only the (tiny) `Broadcast` handle rides the
-  * task closure and the plan reference array. This is the scale-safe
-  * form for a driver-collected benchmark matrix — the literal form
-  * re-serializes the full matrix into EVERY task binary (the r11
-  * round-close bench showed 1.2 MiB tasks from exactly that).
-  * Dereferenced once per codegen object (lazily, in a mutable-state
-  * init) — never per row.
-  */
-case class MaxCosineSimBc(child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
-    extends MaxCosineBase {
-  override def prettyName: String = "graft_max_cosine_bc"
-  @transient private lazy val localMat: Array[Array[Double]] = bc.value
-  override protected def matrix: Array[Array[Double]] = localMat
-
+  // kept textually parallel to nullSafeEval: same accumulation order,
+  // same NaN-before-round check
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val bcRef = ctx.addReferenceObj("testMatBc", bc,
         classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
       val matVar = ctx.addMutableState("double[][]", "maxCosMat",
         v => s"$v = (double[][]) $bcRef.value();")
-      genLoop(ctx, a, matVar, ev)
+      val buf = ctx.freshName("buf")
+      val best = ctx.freshName("best")
+      val r = ctx.freshName("r")
+      val t = ctx.freshName("t")
+      val j = ctx.freshName("j")
+      val n = ctx.freshName("n")
+      val dot = ctx.freshName("dot")
+      val na = ctx.freshName("na")
+      val nb = ctx.freshName("nb")
+      val xv = ctx.freshName("xv")
+      val yv = ctx.freshName("yv")
+      val raw = ctx.freshName("raw")
+      val c = ctx.freshName("c")
+      s"""double[] $buf = $a.toDoubleArray();
+         |double $best = Double.NEGATIVE_INFINITY;
+         |for (int $r = 0; $r < $matVar.length; $r++) {
+         |  double[] $t = $matVar[$r];
+         |  int $n = java.lang.Math.min($buf.length, $t.length);
+         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
+         |  for (int $j = 0; $j < $n; $j++) {
+         |    double $xv = $buf[$j]; double $yv = $t[$j];
+         |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
+         |  }
+         |  double $raw = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |  if (java.lang.Double.isNaN($raw)) { $best = Double.NaN; break; }
+         |  double $c = java.lang.Math.round($raw * 1e6) / 1e6;
+         |  if ($c > $best) $best = $c;
+         |}
+         |${ev.value} = $best;""".stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Session registration + Column helpers. Registration is idempotent and
-  * per-session (temp functions), so builders call [[register]] before
-  * using the helpers.
+/** Column wrappers: each builds its expression directly, constants as
+  * Scala values (see [[org.apache.spark.sql.GraftColumnBridge]]).
   */
 object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      (es: Seq[Expression]) => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bands",
-      (es: Seq[Expression]) => LshBandKeys(es(0),
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    // the matrix argument must be a foldable nested-array literal; it is
-    // evaluated once at resolution and carried as a plan object, so the
-    // per-row loop never touches Catalyst array accessors for it
-    reg.createOrReplaceTempFunction("graft_max_cosine",
-      (es: Seq[Expression]) => {
-        val ad = es(1).eval().asInstanceOf[ArrayData]
-        val mat = Array.tabulate(ad.numElements())(i => ad.getArray(i).toDoubleArray())
-        MaxCosineSim(es(0), mat)
-      }, "built-in")
-  }
-
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
+  def dot(a: Column, b: Column): Column = column(DotProduct(expr(a), expr(b)))
+  def cosine(a: Column, b: Column): Column = column(CosineSimilarity(expr(a), expr(b)))
   def lshBandKeys(v: Column, bands: Int, bitsPerBand: Int): Column =
-    call_function("graft_lsh_bands", v, lit(bands), lit(bitsPerBand))
-  def maxCosine(v: Column, mat: Array[Array[Double]]): Column =
-    call_function("graft_max_cosine", v,
-      org.apache.spark.sql.functions.typedlit(mat.map(_.toSeq).toSeq))
+    column(LshBandKeys(expr(v), bands, bitsPerBand))
 
-  /** Broadcast form — the only form driver-side callers with a
-    * collected matrix should use; see [[MaxCosineSimBc]]. Built via
-    * [[org.apache.spark.sql.GraftColumnBridge]] because a `Broadcast`
-    * handle cannot ride a SQL function argument.
+  /** Max round-6 cosine of `v` against a driver-collected matrix that
+    * ships once per executor; see [[MaxCosineSimBc]].
     */
   def maxCosineBc(v: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      MaxCosineSimBc(org.apache.spark.sql.GraftColumnBridge.expr(v), bc))
+    column(MaxCosineSimBc(expr(v), bc))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Z-order (Morton) curve value: interleaves the low 32 bits of two
@@ -53,9 +53,5 @@ object ZOrderValue {
 }
 
 object ZOrderFunctions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder", (es: Seq[Expression]) => ZOrderValue(es(0), es(1)), "built-in")
-
-  def zorder(a: Column, b: Column): Column = call_function("graft_zorder", a, b)
+  def zorder(a: Column, b: Column): Column = column(ZOrderValue(expr(a), expr(b)))
 }

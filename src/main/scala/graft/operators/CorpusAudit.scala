@@ -228,7 +228,6 @@ object CorpusAudit {
     * below the candidate count to exercise the sampled path at tiny SF).
     */
   def dsirSelect(s: SparkSession, d: String, cutSample: Int): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val words = expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
     // The bucketed-bigram expansion (regex + per-char polynomial hash,
     // by far the expensive scan) is consumed by BOTH distribution fits

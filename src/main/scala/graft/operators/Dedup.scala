@@ -229,7 +229,6 @@ object Dedup {
     * (doc_id, text) frame — the table-agnostic core of [[minhashIndex]].
     */
   private[graft] def minhashIndexOf(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     graft.Tables.scanSpread(docs, col("doc_id"))
       .select(col("doc_id"),
         graft.functions.TextHashFunctions.minhashSigs(col("text"), MinhashH).as("sigs"),
@@ -360,7 +359,6 @@ object Dedup {
     }
 
   def minhashDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     // one checkpointed per-doc index (signatures + sorted gram hashes)
     // serves band keys, the degree rollup, AND edge verification; the
     // per-doc band-key array + gram set are ALSO materialized to
@@ -464,7 +462,6 @@ object Dedup {
     * the label with NO additional shuffle or join.
     */
   def splitLeakageFree(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     nearDupLabels(Tables.documents(s, d).select(col("doc_id").as("id")), index)
@@ -524,7 +521,6 @@ object Dedup {
     * broadcast joins of batch-component-bounded frames.
     */
   def splitAssignDelta(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
     val docs = Tables.documents(s, d)
     val index = minhashIndex(s, d)
@@ -602,7 +598,6 @@ object Dedup {
     * amortization class as every index rebuild here.
     */
   def splitDrift(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val fresh = splitLeakageFree(s, d)
       .select(col("doc_id"), col("cluster_id").as("new_cluster"),
         col("split").as("new_split"))
@@ -687,7 +682,6 @@ object Dedup {
     * (at-rest val cluster → A near-dup → B near-dup of A).
     */
   def splitAssignDelta2(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d)
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
@@ -753,7 +747,6 @@ object Dedup {
   private val decontBroadcastFits = graft.Pins.session[String, Boolean]()
 
   def minhashDecontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     val isTest = graft.GoldenHash.isTestDoc(col("doc_id"))
@@ -854,7 +847,6 @@ object Dedup {
   val SimhashSigsPath: String = graft.Pins.artifact("simhash_sigs")
 
   def simhashDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val bands = 4
     val tokens = TextAnalysis.words
     // engine consumes the in-memory checkpointed signatures and pins the
@@ -962,7 +954,6 @@ object Dedup {
     * identical code-point substrings).
     */
   def substringSpans(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d).filter(length(col("text")) >= SpanLen)
     // scanSpread (r8 A/B: the AQE single-partition trap cost 1.42 vs
     // 0.42 s on this stage), then the anchored positions come out of ONE
@@ -1025,7 +1016,6 @@ object Dedup {
     * gram arrays never cross the wire.
     */
   def ngramJaccardEdges(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     // docs with no 3-grams have no rows in the gram-set oracle, but
     // two empty gram sets score 1.0 — exclude them so both
     // formulations agree if the corpus ever has texts < 3 chars

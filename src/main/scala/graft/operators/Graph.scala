@@ -305,10 +305,11 @@ object Graph {
     // settings only work as a pair. AQE stays on for every surrounding
     // plan, including the edge-list prep above.
     val spark = vertices.sparkSession
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
+    val loopConf = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopParts.toString)
+    val explicit = spark.conf.getAll // set keys only; getOption answers defaults too
+    val was = loopConf.map { case (k, _) => k -> explicit.get(k) }
+    loopConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
     while (changed > 0 && rounds < maxRounds) {
       rounds += 1
@@ -355,8 +356,12 @@ object Graph {
     labels.unpersist(false)
     labels = out
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partsWas)
+      // a setting the caller never set is unset again, not written back
+      // as its default
+      was.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
     (labels, changed, rounds)
   }

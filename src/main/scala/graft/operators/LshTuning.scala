@@ -89,7 +89,6 @@ object LshTuning {
   }
 
   def lshTuning(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     // deterministic golden-stride sample of the production index, capped
     val keyed = Dedup.minhashIndex(s, d)
       .filter(graft.GoldenHash.bucket(col("doc_id"), 5) === 0)

@@ -522,7 +522,6 @@ object Retrieval {
     * consumer is a partition-order-agnostic aggregate.
     */
   def pmiPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val width = s.conf.get("spark.sql.shuffle.partitions").toInt
     val counted = Tables.documents(s, d)
       .select(TextAnalysis.words.as("ws"))

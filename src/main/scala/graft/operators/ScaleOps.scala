@@ -39,7 +39,6 @@ object ScaleOps {
     * against the full corpus, top-3 each.
     */
   def mipsTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val v = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = v.filter(col("vec_id") < 5)
@@ -82,7 +81,6 @@ object ScaleOps {
     * whole-stage codegen, no per-row String materialization.
     */
   def bloomDecontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"),
         md5(col("text")).as("fp"), isTest.as("is_test"))
@@ -165,7 +163,6 @@ object ScaleOps {
     * (users/IPs at 100 TB) dwarfs executor memory.
     */
   def heavyHitters(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     Tables.events(s, d)
       .agg(graft.functions.SketchFunctions.spaceSaving(col("user_id"), HhCapacity).as("summary"))
       .select(explode(col("summary")).as("h"))
@@ -193,7 +190,6 @@ object ScaleOps {
     * order-dependent sketch must).
     */
   def heavyHittersExact(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val ev = Tables.events(s, d)
     val total = ev.agg(count(lit(1)).as("total"))
     // the sketch keys on xxhash64(event_type): the primitive-array
@@ -229,7 +225,6 @@ object ScaleOps {
     * merge-order-dependent output must.
     */
   def heavyHittersSound(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val ev = Tables.events(s, d)
     val sk = ev
       .agg(graft.functions.SketchFunctions.spaceSaving(col("user_id"), HhCapacity)
@@ -342,7 +337,6 @@ object ScaleOps {
     * admission gate ([[graft.streaming.StreamPipelines.streamingDecontaminate]]).
     */
   private[graft] def wordGramsOf(df: DataFrame, n: Int = 5): DataFrame = {
-    graft.functions.Registry.ensure(df.sparkSession)
     // r20: one fused codegen pass ([[graft.functions.WordNGrams]]) —
     // the transform/sequence/slice HOF chain was CodegenFallback and
     // allocated an intermediate slice array per gram
@@ -413,7 +407,6 @@ object ScaleOps {
     // size — scan-local, where the earlier form re-exploded the corpus a
     // third time and hash-aggregated it back to a number the array
     // already knew (r20: 3 gram explodes → 2, one doc_id exchange gone)
-    graft.functions.Registry.ensure(docs.sparkSession)
     val perDoc = docs
       .withColumn("ws", TextAnalysis.words)
       .filter(size(col("ws")) >= n)

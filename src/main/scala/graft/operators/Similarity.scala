@@ -26,10 +26,8 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
-  /** embeddings with the vector cast to array<double> once; registers
-    * the native vector expressions on the session. */
+  /** embeddings with the vector cast to array<double> once. */
   private[operators] def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
   }
@@ -974,8 +972,8 @@ object Similarity {
       .filter(col("crank") <= nprobe)
       .select(col("vec_id"), col("v"), col("cell"))
     val sims = probes.join(broadcast(bench), Seq("cell"), "left")
-      .withColumn("cell_max", expr(
-        "array_max(transform(bvs, b -> round(graft_cosine(v, b), 6)))"))
+      .withColumn("cell_max",
+        array_max(transform(col("bvs"), b => round(cosine(col("v"), b), 6))))
       .groupBy(col("vec_id"))
       .agg(max(col("cell_max")).as("max_test_sim"))
     sims.filter(col("max_test_sim").isNull ||

@@ -31,8 +31,7 @@ object TextAnalysis {
     // r20: one fused codegen pass ([[graft.functions.SplitWords]] —
     // byte-identical to `filter(split(text, ' '), w -> w != '')`,
     // whose filter HOF was CodegenFallback and materialized the empty
-    // strings between consecutive spaces only to drop them). Session
-    // registration rides [[graft.Tables.documents]].
+    // strings between consecutive spaces only to drop them).
     graft.functions.TextHashFunctions.splitWords(col("text"))
 
   /** Whitespace token count: len(text) - len(text without spaces) + 1.
@@ -453,7 +452,6 @@ object TextAnalysis {
     * stage (array algebra, no explode).
     */
   def repetitionFilter(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     // r20: the bigram stats are SCAN-LOCAL ([[graft.functions
     // .TopBigramCount]] — max bigram multiplicity per row inside
     // whole-stage codegen; n_grams is just size(ws) − 1). The earlier

@@ -349,7 +349,6 @@ object TrainingPrep {
     * by construction), so no stage ever reshuffles the corpus itself.
     */
   def corpusPrep2(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d)
     // r20: repetition gate as the scan-local predicate and the exact
     // dedup window INLINE (doc_id unique ⇒ rn = 1 ≡ the dedupKeep semi
@@ -499,7 +498,6 @@ object TrainingPrep {
   private def corpusPrepChain(
       s: SparkSession, d: String, extraDrops: Seq[DataFrame],
       extraKeepFilters: Seq[Column] = Nil): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d)
     val rankKey = (col("doc_id") * lit(ScaleOps.CapHashPrime)) % lit(ScaleOps.CapHashMod)
     val cw = Window.partitionBy(col("source")).orderBy(rankKey.asc, col("doc_id"))
@@ -585,7 +583,6 @@ object TrainingPrep {
     * containment 0 via the final left join.
     */
   def decontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Registry.ensure(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.TextHashFunctions.splitWords(col("text")).as("words"))

@@ -28,7 +28,6 @@ object LogParse {
     * row, no materialization.
     */
   def parseJson(raw: Column)(df: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(df.sparkSession)
     val parsed = df.withColumn("data",
       graft.plans.ComputeOnce.computeOnce(from_json(raw.cast("string"), NginxLog.schema)))
     val valid = NginxLog.requiredKeys

@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.DataType
 
 /** Evaluation barrier: a zero-cost pass-through expression that pins its
@@ -17,10 +17,9 @@ import org.apache.spark.sql.types.DataType
   * (`from_json` over a wide schema, a rendered JSON round-trip) the
   * clone re-executes the whole parse once per consuming operator, since
   * whole-stage-codegen subexpression elimination works only *within* an
-  * operator, never across a Filter/Project pair. Round 1 worked around
-  * this with `localCheckpoint(true)` in the ingest query — correct but
-  * it eagerly materialized the whole wire to executor storage inside the
-  * timed path (12.6 s of the 48 s bench, VERDICT r1 item 2).
+  * operator, never across a Filter/Project pair. Materializing the input
+  * first (`localCheckpoint`) would also stop the clone, but it writes
+  * the whole input to executor storage before the query proceeds.
   *
   * The barrier works by declaring itself non-deterministic: both rules
   * above refuse to duplicate or cross non-deterministic expressions, so
@@ -58,9 +57,5 @@ case class ComputeOnce(child: Expression) extends UnaryExpression {
 }
 
 object ComputeOnce {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_compute_once", (es: Seq[Expression]) => ComputeOnce(es.head), "built-in")
-
-  def computeOnce(c: Column): Column = call_function("graft_compute_once", c)
+  def computeOnce(c: Column): Column = column(ComputeOnce(expr(c)))
 }

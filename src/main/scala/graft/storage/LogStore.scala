@@ -86,7 +86,6 @@ object LogStore {
     */
   def writeClustered(df: DataFrame, path: String, keyA: String, keyB: String,
       files: Int = 16): Unit = {
-    graft.functions.Registry.ensure(df.sparkSession)
     val numeric = Seq(keyA, keyB).filter(c => df.schema(c).dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true

@@ -461,7 +461,6 @@ object StreamPipelines {
       docs: DataFrame, threshold: Double = 0.5,
       ttl: Option[java.time.Duration] = None): org.apache.spark.sql.Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    graft.functions.Registry.ensure(docs.sparkSession)
     val h = 32; val bands = 16; val rowsPerBand = h / bands
     val indexed = docs
       .select(col("doc_id"),

@@ -2,13 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge to Spark 4's `Column`-from-`Expression` constructor, which
-  * moved behind `private[sql] classic.ExpressionUtils` when the Column
-  * API was abstracted over ColumnNode. Needed for expressions that
-  * carry non-SQL-expressible constructor state (e.g. a `Broadcast`
-  * handle in [[graft.functions.MaxCosineSimBc]]) and therefore cannot
-  * be routed through `FunctionRegistry` temp-function builders like the
-  * rest of graft's native expressions.
+/** The one way a graft native expression becomes a Column. Spark 4 keeps
+  * the `Column`-from-`Expression` constructor behind `private[sql]
+  * classic.ExpressionUtils`; every Column wrapper in `graft.functions`
+  * (and `graft.plans.ComputeOnce`) builds its Catalyst node directly
+  * through this bridge, with constants passed as Scala values (an `Int`,
+  * a `BloomFilter`, a `Broadcast` handle). Nothing is registered in, or
+  * looked up by name from, the caller's session, and the node prints in
+  * a plan under its own `prettyName`.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

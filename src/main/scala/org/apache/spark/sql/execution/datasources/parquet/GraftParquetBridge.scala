@@ -19,21 +19,26 @@ import org.apache.spark.sql.types.StructType
   */
 object GraftParquetBridge {
 
-  /** The schema `spark.read.parquet(path)` infers, or None where that
-    * inference is not a one-footer read (schema merging is on, or the
-    * path holds no data file) and the caller should let Spark infer.
+  /** The schema `spark.read.parquet(path)` infers with
+    * `spark.sql.parquet.inferTimestampNTZ.enabled=false`, or None where
+    * that inference is not a one-footer read (schema merging is on, or
+    * the path holds no data file) and the caller should let Spark infer.
     *
     * The footer file is picked as `ParquetUtils.inferSchema` picks it
     * without merging: the first `_common_metadata`, else the first
     * `_metadata`, else the first data file, in path order. The converter
-    * takes the five settings `mergeSchemasInParallel` reads from the
-    * session conf and the constructor defaults for the rest; `nanosAsLong`,
-    * when given, replaces the session's
-    * `spark.sql.legacy.parquet.nanosAsLong` (a TIMESTAMP(NANOS) column
-    * converts to LONG under it and fails without it). Nothing is
-    * kept between calls: every call lists the path and reads the footer
-    * afresh, so a table that gains or replaces a file is read as it
-    * stands.
+    * takes the settings `mergeSchemasInParallel` reads from the session
+    * conf and the constructor defaults for the rest, with two
+    * exceptions. A TIMESTAMP(isAdjustedToUTC=false) column always
+    * converts to TIMESTAMP_LTZ, whatever the session's NTZ-inference
+    * setting: the engine standardizes on one timestamp type (session tz
+    * pinned UTC; `unix_micros`, watermarks and `window()` require it),
+    * and the session is left as the caller set it. `nanosAsLong`, when
+    * given, replaces the session's `spark.sql.legacy.parquet.nanosAsLong`
+    * (a TIMESTAMP(NANOS) column converts to LONG under it and fails
+    * without it). Nothing is kept between calls: every call lists the
+    * path and reads the footer afresh, so a table that gains or replaces
+    * a file is read as it stands.
     */
   def footerSchema(spark: SparkSession, path: String,
       nanosAsLong: Option[Boolean] = None): Option[StructType] = {
@@ -52,7 +57,7 @@ object GraftParquetBridge {
         val converter = new ParquetToSparkSchemaConverter(
           assumeBinaryIsString = conf.isParquetBinaryAsString,
           assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
-          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          inferTimestampNTZ = false,
           nanosAsLong = nanosAsLong.getOrElse(conf.legacyParquetNanosAsLong),
           respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
         ParquetFileFormat.readSchemaFromFooter(footer, converter)

@@ -15,7 +15,6 @@ class AnnMaintainSpec extends SparkSpec {
   import spark.implicits._
 
   private def vecs: DataFrame = {
-    VectorFunctions.register(spark)
     Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }

@@ -232,7 +232,6 @@ class DedupSpec extends SparkSpec {
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     // precondition: the chain shape is as intended
-    graft.functions.NgramJaccardFunctions.register(spark)
     def j(x: String, y: String): Double = Seq((x, y)).toDF("a", "b")
       .select(graft.functions.NgramJaccardFunctions.jaccard3(col("a"), col("b")))
       .as[Double].collect().head
@@ -260,7 +259,6 @@ class DedupSpec extends SparkSpec {
 
     // precondition: the chain shape is as intended (adjacent >= 0.5,
     // two-apart < 0.5 — a real path, not a clique)
-    graft.functions.NgramJaccardFunctions.register(spark)
     def j(x: String, y: String): Double = Seq((x, y)).toDF("a", "b")
       .select(graft.functions.NgramJaccardFunctions.jaccard3(col("a"), col("b")))
       .as[Double].collect().head
@@ -306,7 +304,6 @@ class DedupSpec extends SparkSpec {
 
   test("incremental dedup flags new near-dups against the bucketed index, batch-side shuffle only") {
     val d = TestSession.Sf
-    graft.functions.NgramJaccardFunctions.register(spark)
     val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 5 =!= 0)
     val planted = existing.orderBy("doc_id").limit(1)
@@ -390,7 +387,6 @@ class DedupSpec extends SparkSpec {
 
   test("appendDedupIndex: a replayed batch is fully rejected and buckets survive the append") {
     val d = TestSession.Sf
-    graft.functions.NgramJaccardFunctions.register(spark)
     val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 7 =!= 0)
     val batch = docs.filter(col("doc_id") % 7 === 0)
@@ -433,7 +429,6 @@ class DedupSpec extends SparkSpec {
     // tables — a single guard keyed on one table would either lose the
     // later tables' rows forever or duplicate the earlier ones.
     val d = TestSession.Sf
-    graft.functions.NgramJaccardFunctions.register(spark)
     val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 7 =!= 0)
     val batch = docs.filter(col("doc_id") % 7 === 0)
@@ -474,7 +469,6 @@ class DedupSpec extends SparkSpec {
     // near-dups — ground truth must not). 500 docs -> 125k candidate
     // pairs through the native one-pass verifier; test-only cost.
     val d = "/root/testdata/sf0.01"
-    graft.functions.NgramJaccardFunctions.register(spark)
     val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val a = docs.select(col("doc_id").as("doc_a"), col("text").as("text_a"))
     val b = docs.select(col("doc_id").as("doc_b"), col("text").as("text_b"))
@@ -533,7 +527,6 @@ class DedupSpec extends SparkSpec {
     // gram ids (GramSet + SortedLongJaccard); packing is injective over
     // UTF-16 units, so the result must EQUAL the direct string
     // formulation (NgramJaccard) bit-for-bit — no collision tolerance
-    graft.functions.Registry.ensure(spark)
     val rnd = new scala.util.Random(7)
     val texts = (1 to 50).map { _ =>
       (0 until (3 + rnd.nextInt(60)))
@@ -561,7 +554,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical token sets get identical signatures; disjoint ones differ") {
-    TextHashFunctions.register(spark)
     val df = Seq(
       "spark shuffle join window",
       "spark shuffle join window",
@@ -574,7 +566,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash of near-identical docs has small hamming distance") {
-    TextHashFunctions.register(spark)
     val words = (1 to 50).map(i => s"word$i").mkString(" ")
     val df = Seq(words, words + " extraone").toDF("text")
       .select(TextHashFunctions.simhash(split(col("text"), " ")).as("sig"))
@@ -584,7 +575,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash banding catches a planted 1-3-bit near-dup that exact grouping misses") {
-    TextHashFunctions.register(spark)
     // search deterministically for a variant whose signature differs
     // from the base by 1..3 bits — exactly the regime where grouping on
     // the full 64-bit signature finds nothing but >=1 of the 4 16-bit

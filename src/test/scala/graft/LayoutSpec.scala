@@ -53,14 +53,11 @@ class LayoutSpec extends SparkSpec {
     // session object, so every pinned builder and its frame pins re-run)
     // under graft.barrier.mode=reliable with a checkpoint dir:
     // identical rows and at least one reliable checkpoint on disk.
-    graft.functions.NgramJaccardFunctions.register(spark)
     val local = graft.operators.Dedup.minhashDedup(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(local.nonEmpty)
 
     val s2 = spark.newSession()
-    graft.functions.Registry.ensure(s2)
-    graft.functions.NgramJaccardFunctions.register(s2)
     val dir = java.nio.file.Files.createTempDirectory("graft-rb-dedup").toString
     s2.sparkContext.setCheckpointDir(dir)
     s2.conf.set("graft.barrier.mode", "reliable")

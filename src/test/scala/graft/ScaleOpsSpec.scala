@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Registry, SketchFunctions, SpaceSavingState}
+import graft.functions.{SketchFunctions, SpaceSavingState}
 import graft.operators.ScaleOps
 
 class ScaleOpsSpec extends SparkSpec {
@@ -90,7 +90,6 @@ class ScaleOpsSpec extends SparkSpec {
       else if (i % 10 < 4) 2L
       else 1000L + (i % 5000)
     }
-    Registry.ensure(spark)
     val summary = data.toDF("value")
       .agg(SketchFunctions.spaceSaving(col("value"), 64).as("s"))
       .select(explode(col("s")).as("h"))

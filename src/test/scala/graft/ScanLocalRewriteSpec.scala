@@ -35,7 +35,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("repetitionKeepPred filter equals the repetitionFilter keep semi-join") {
-    graft.functions.Registry.ensure(spark)
     val docs = Tables.documents(spark, sf)
     val viaFilter = docs.filter(TextAnalysis.repetitionKeepPred)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -78,7 +77,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("fused repetitionKeep equals the four-conjunct Column form") {
-    graft.functions.Registry.ensure(spark)
     import spark.implicits._
     val ws = expr("filter(split(text, ' '), w -> w != '')")
     val conjunction = size(ws) >= 2 &&
@@ -98,7 +96,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("spaceAnchors equals the explode(sequence)+substring-filter positions") {
-    graft.functions.Registry.ensure(spark)
     val n = 50 // Dedup.SpanLen
     val docs = Tables.documents(spark, sf)
       .filter(length(col("text")) >= n)
@@ -122,7 +119,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("splitWords equals filter(split(text, ' '), w -> w != '')") {
-    graft.functions.Registry.ensure(spark)
     val docs = Tables.documents(spark, sf)
     val viaExpr = docs.select(col("doc_id"),
       graft.functions.TextHashFunctions.splitWords(col("text")).as("ws"))
@@ -146,7 +142,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("poly31Bucket equals the aggregate/transform ascii fold") {
-    graft.functions.Registry.ensure(spark)
     val dim = graft.operators.TextAnalysis.HashDim
     val words = Tables.documents(spark, sf)
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
@@ -163,7 +158,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("wordNGrams equals the transform/slice/concat_ws HOF grams") {
-    graft.functions.Registry.ensure(spark)
     for (n <- Seq(3, 5, 8)) {
       val docs = Tables.documents(spark, sf)
         .select(col("doc_id"), expr("filter(split(text, ' '), w -> w != '')").as("ws"))
@@ -182,7 +176,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("pmiPairRows equals the three-transform HOF pair/unigram rows") {
-    graft.functions.Registry.ensure(spark)
     val docs = Tables.documents(spark, sf)
       .select(expr("filter(split(text, ' '), w -> w != '')").as("ws"))
       .filter(size(col("ws")) >= 3)
@@ -209,7 +202,6 @@ class ScanLocalRewriteSpec extends SparkSpec {
   }
 
   test("jaccardGate agrees with jaccardSorted at every consuming filter") {
-    graft.functions.Registry.ensure(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     def sortedSet(n: Int, range: Int): Array[Long] =

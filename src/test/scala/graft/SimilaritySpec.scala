@@ -8,7 +8,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native dot/cosine match the higher-order-function formulation") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
       (Array(0.5, -1.0, 2.5), Array(-2.0, 0.0, 1.0)))
@@ -27,11 +26,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semantic decontamination drops exactly the above-threshold trainers, scan-stage") {
-    VectorFunctions.register(spark)
     val out = Similarity.semanticDecontaminate(spark, sf).cache()
     // independent quadratic recomputation: per-train max of round-6
     // cosines against the test split (plain DataFrame ops, no native
-    // expression — a bug in MaxCosineSim can't self-verify)
+    // expression — a bug in MaxCosineSimBc can't self-verify)
     val v = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val isTest = GoldenHash.bucket(col("vec_id"), 10) === 0
@@ -87,7 +85,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF-prefiltered decontamination: exact precision, bounded recall vs the exact gate") {
-    VectorFunctions.register(spark)
     val v = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val isTest = GoldenHash.bucket(col("vec_id"), 10) === 0
@@ -109,36 +106,47 @@ class SimilaritySpec extends SparkSpec {
       s"recall=$recall (${ivfFlagged.size} of ${exactFlagged.size})")
   }
 
-  test("max-cosine: broadcast and literal forms agree; zero-norm pairs propagate NaN") {
-    VectorFunctions.register(spark)
+  test("max-cosine: broadcast form matches a Scala round-6 max; zero norms give NaN") {
     val mat = Array(Array(1.0, 0.0), Array(0.6, 0.8))
     val bc = spark.sparkContext.broadcast(mat)
-    val df = Seq((1L, Array(3.0, 4.0)), (2L, Array(-1.0, 1.0)),
-      (3L, Array(0.0, 0.0))).toDF("id", "v")
-    val got = df.select(col("id"),
-      VectorFunctions.maxCosineBc(col("v"), bc).as("m_bc"),
-      VectorFunctions.maxCosine(col("v"), mat).as("m_lit"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    // both forms identical on every row (codegen path)
-    got.values.foreach { case (b, l) =>
-      assert(b == l || (b.isNaN && l.isNaN), s"bc=$b lit=$l") }
+    val vs = Map(1L -> Array(3.0, 4.0), 2L -> Array(-1.0, 1.0), 3L -> Array(0.0, 0.0))
+    val df = vs.toSeq.toDF("id", "v")
+    // independent reference: BigDecimal half-up rounding (the oracle's
+    // convention) of each pair's cosine; any NaN pair makes the row NaN
+    def expected(v: Array[Double], m: Array[Array[Double]]): Double = {
+      val cs = m.map { t =>
+        val dot = v.zip(t).map { case (x, y) => x * y }.sum
+        dot / (math.sqrt(v.map(x => x * x).sum) * math.sqrt(t.map(y => y * y).sum))
+      }
+      if (cs.exists(_.isNaN)) Double.NaN
+      else cs.map(c => BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).max
+    }
+    def same(a: Double, b: Double): Boolean = a == b || (a.isNaN && b.isNaN)
+    val got = df.select(col("id"), VectorFunctions.maxCosineBc(col("v"), bc).as("m"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.keySet == vs.keySet)
+    // codegen path, row by row
+    got.foreach { case (id, m) =>
+      assert(same(m, expected(vs(id), mat)), s"id=$id got=$m want=${expected(vs(id), mat)}") }
     // (3,4)·(0.6,0.8)/5 = 1.0 exactly; zero-norm input → NaN, not
     // Math.round(NaN)=0 masquerading as "orthogonal"
-    assert(got(1L)._1 == 1.0)
-    assert(got(3L)._1.isNaN)
+    assert(got(1L) == 1.0)
+    assert(got(2L) == 0.141421)
+    assert(got(3L).isNaN)
     // a zero-norm REFERENCE row poisons every probe — matches DuckDB's
     // NaN-greatest max() ordering
     val bcBad = spark.sparkContext.broadcast(Array(Array(1.0, 0.0), Array(0.0, 0.0)))
     val gotBad = df.select(VectorFunctions.maxCosineBc(col("v"), bcBad).as("m"))
       .collect().map(_.getDouble(0))
     assert(gotBad.forall(_.isNaN), gotBad.toSeq.toString)
-    // interpreted path (no codegen) agrees with the codegen path
+    // interpreted path (no codegen) agrees with the reference
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     def interp(v: Array[Double], m: Array[Array[Double]]): Double =
-      graft.functions.MaxCosineSim(
-        Literal.create(v, ArrayType(DoubleType)), m)
+      graft.functions.MaxCosineSimBc(
+        Literal.create(v, ArrayType(DoubleType)), spark.sparkContext.broadcast(m))
         .eval(null).asInstanceOf[Double]
+    vs.values.foreach(v => assert(same(interp(v, mat), expected(v, mat)), v.toSeq))
     assert(interp(Array(3.0, 4.0), mat) == 1.0)
     assert(interp(Array(0.0, 0.0), mat).isNaN)
     assert(interp(Array(3.0, 4.0), Array(Array(0.0, 0.0))).isNaN)
@@ -350,7 +358,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("semantic dedup flags within-cell near pairs and only those") {
     import graft.operators.Similarity
-    graft.functions.Registry.ensure(spark)
     // controlled cells: 0/1 share cell A and are near-parallel (must
     // flag 1 as dup of 0); 2 is near-parallel to 0 but in ANOTHER cell
     // (the clustering blind spot — must NOT flag); 3 shares cell A but

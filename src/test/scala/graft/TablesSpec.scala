@@ -12,14 +12,17 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** `Tables.table` resolves the parquet schema from one footer on the
   * driver instead of Spark's schema-inference job. The schema must be
-  * exactly the one `spark.read.parquet(path)` infers, in every fixture
-  * layout, building the frame must run no job, and nothing may be kept
-  * between reads: a table that gains a column is read with it.
+  * exactly the one `spark.read.parquet(path)` infers with NTZ inference
+  * off, in every fixture layout, building the frame must run no job, and
+  * nothing may be kept between reads: a table that gains a column is read
+  * with it. No read, and no engine query, may leave its caller's session
+  * changed.
   */
 class TablesSpec extends SparkSpec {
   /** The sf0.01 fixture, beside the session's default scale factor. */
@@ -85,11 +88,17 @@ class TablesSpec extends SparkSpec {
     dir
   }
 
+  private val InferNtz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
   test("the resolved schema equals spark.read.parquet's for every sf0.01 fixture table") {
-    for (t <- FixtureTables) {
+    // the engine reads fixture timestamps as LTZ without touching the
+    // session; the reference read asks Spark for the same, then restores
+    val was = spark.conf.getAll.get(InferNtz)
+    spark.conf.set(InferNtz, "false")
+    try for (t <- FixtureTables) {
       val got = Tables.table(spark, Sf001, t).schema
       assert(got == spark.read.parquet(s"$Sf001/$t.parquet").schema, t)
-    }
+    } finally was.fold(spark.conf.unset(InferNtz))(spark.conf.set(InferNtz, _))
   }
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
@@ -110,15 +119,68 @@ class TablesSpec extends SparkSpec {
       "nanos not truncated to micros")
   }
 
-  test("reading a MICROS events table leaves the nanos-as-long option as it found it") {
-    for (preset <- Seq(None, Some("true"), Some("false"))) {
-      val s = spark.newSession()
-      preset.foreach(s.conf.set(NanosAsLong, _))
+  /** What an engine call could leave behind in its caller's session. */
+  private def sessionState(s: SparkSession) = (
+    s.conf.getAll,
+    s.experimental.extraOptimizations,
+    s.catalog.listFunctions().collect().map(_.name).filter(_.startsWith("graft_")).toSet)
+
+  /** An engine call, run in a fresh session that holds `preset`. */
+  private case class SessionCase(name: String, run: SparkSession => Unit,
+      preset: Map[String, String] = Map.empty)
+
+  /** Engine calls that must leave their caller's session as they found
+    * it: every fixture read, one query per family of native expressions
+    * (Jaccard gate and minhash, the cosine lambda, space-saving, the
+    * Bloom probe, compute-once, z-order), and both components paths.
+    */
+  private def sessionCases: Seq[SessionCase] = {
+    def query(name: String) = SessionCase(name, s => SparkEntry.queries(name)(s, sf).collect())
+    def microsEvents(s: SparkSession): Unit = {
       val events = Tables.events(s, Sf001)
       assert(events.schema("ts").dataType == TimestampType)
       assert(events.limit(3).collect().length == 3)
-      assert(s.conf.getAll.get(NanosAsLong) == preset, s"preset $preset")
     }
+    FixtureTables.map(t => SessionCase(s"Tables.table($t)", s => Tables.table(s, Sf001, t).collect())) ++
+    Seq(
+      SessionCase("Tables.events", microsEvents),
+      SessionCase("Tables.events, nanos-as-long preset true", microsEvents,
+        Map(NanosAsLong -> "true")),
+      SessionCase("Tables.events, nanos-as-long preset false", microsEvents,
+        Map(NanosAsLong -> "false")),
+      SessionCase("Tables.documents", s => Tables.documents(s, Sf001).collect()),
+      query("q_minhash_dedup"),
+      query("q_semantic_decontaminate_ivf"),
+      query("q_heavy_hitters"),
+      query("q_bloom_decontaminate"),
+      query("q_log_ingest"),
+      SessionCase("LogStore.writeClustered", { s =>
+        val dir = Files.createTempDirectory("graft-session-z").toString
+        graft.storage.LogStore.writeClustered(Tables.events(s, sf), s"$dir/ev",
+          "user_id", "event_type", files = 4)
+        s.read.parquet(s"$dir/ev").collect()
+      }),
+      query("q_doc_components"),
+      SessionCase("Graph.connectedComponents (propagation loop)", { s =>
+        val v = s.range(6).select(col("id"))
+        val e = s.range(3).select((col("id") * 2).as("src"), (col("id") * 2 + 1).as("dst"))
+        graft.operators.Graph.connectedComponents(v, e).collect()
+      }))
+  }
+
+  test("engine reads and queries leave the caller's session as they found it") {
+    val changed = sessionCases.flatMap { c =>
+      val s = spark.newSession()
+      c.preset.foreach { case (k, v) => s.conf.set(k, v) }
+      val before = sessionState(s)
+      c.run(s)
+      val after = sessionState(s)
+      if (after == before) None
+      else Some(s"${c.name}: conf +${after._1.toSet -- before._1.toSet} " +
+        s"-${before._1.toSet -- after._1.toSet}, rules ${before._2} -> ${after._2}, " +
+        s"functions +${after._3 -- before._3}")
+    }
+    assert(changed.isEmpty, changed.mkString("\n"))
   }
 
   test("building a table's DataFrame runs no Spark job") {
