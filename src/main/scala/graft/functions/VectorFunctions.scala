@@ -305,7 +305,7 @@ object VectorFunctions {
   def lshBandKeys(v: Column, bands: Int, bitsPerBand: Int): Column =
     column(LshBandKeys(expr(v), bands, bitsPerBand))
 
-  /** Max round-6 cosine of `v` against a driver-collected matrix that
+  /** Max round-6 cosine of `v` against a collected matrix that
     * ships once per executor; see [[MaxCosineSimBc]].
     */
   def maxCosineBc(v: Column,
