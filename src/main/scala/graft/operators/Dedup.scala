@@ -31,7 +31,7 @@ object Dedup {
     * multiplicity. The group key is `sha2(text, 256)` — a 64-char
     * digest — not the raw text: partial aggregation collapses
     * duplicates map-side either way, but the shuffle key must not be
-    * the full document body at 100 TB (VERDICT r17 finding 2). DuckDB
+    * the full document body at 100 TB. DuckDB
     * replays the identical digest via `sha256(text)`, and identical
     * texts hash identically in both engines, so the grouping — and
     * therefore the output — is unchanged (the at-rest incremental
@@ -194,14 +194,14 @@ object Dedup {
     * lose the member entirely.
     *
     * Texts shorter than 3 chars have no grams, hence no buckets and no
-    * edges (ADVICE r1 semantics) — filtered here; they keep their own
+    * edges — filtered here; they keep their own
     * canonical id through the label initialization in [[minhashDedup]].
     * The repartition spreads the signature map across cores even when
     * the input is one small parquet split (the fixture shape); at 100 TB
     * the scan arrives already split and the repartition is moot-to-cheap
     * relative to the map it parallelizes.
     */
-  private[operators] val MinhashH = 32
+  private[graft] val MinhashH = 32
   private[graft] val MinhashBands = 16
 
   /** The fixture-table index is cached per (session, sfDir) — a dedup
@@ -227,6 +227,16 @@ object Dedup {
 
   /** Per-doc dedup index (signatures + sorted gram hashes) for any
     * (doc_id, text) frame — the table-agnostic core of [[minhashIndex]].
+    *
+    * The caller owns the batch index: whoever owns a batch of documents
+    * (a query's delta slice, one streaming micro-batch) derives its
+    * signature index ONCE — through this function, or by filtering the
+    * cached corpus index to the slice — and hands it to every consumer.
+    * The probe ([[verifiedProbePairs]], [[incrementalNearDups]]), the
+    * split assignment ([[splitAssignDeltaCore]]), the bridge monitor
+    * (through the shared pairs) and the index append
+    * ([[appendDedupIndex]]) all take that index and never derive one,
+    * so a batch pays one signature pass however many of them run.
     */
   private[graft] def minhashIndexOf(docs: DataFrame): DataFrame = {
     graft.Tables.scanSpread(docs, col("doc_id"))
@@ -235,8 +245,8 @@ object Dedup {
         graft.functions.TextHashFunctions.gramSet(col("text")).as("grams"))
       // "no grams" in the SAME unit the gram machinery uses (UTF-16
       // code units, GramHash): sigs is empty ⇔ gram count is zero. A
-      // Spark length() pre-filter counted code points and diverged on
-      // supplementary characters (ADVICE r3); filtering on the computed
+      // Spark length() pre-filter counts code points and would diverge
+      // on supplementary characters; filtering on the computed
       // signature is unit-identical by construction, and gramless rows
       // cost nothing to compute.
       .filter(size(col("sigs")) > 0)
@@ -245,10 +255,11 @@ object Dedup {
 
   /** The 16 band keys as one positional array (band id = position,
     * key = xxhash of the band's `rowsPerBand` signature elements) —
-    * shared by [[minhashBanded]] and the oracle artifact, which unnests
-    * the same array positionally in DuckDB.
+    * shared by [[minhashBanded]], the oracle artifact, which unnests
+    * the same array positionally in DuckDB, and the streaming bucket
+    * keys of [[graft.streaming.StreamPipelines.streamingNearDedup]].
     */
-  private def bandKeyArray: Column = {
+  private[graft] def bandKeyArray: Column = {
     val rowsPerBand = MinhashH / MinhashBands
     array((0 until MinhashBands).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
@@ -259,7 +270,7 @@ object Dedup {
 
   /** (doc, ng, band, bucket-key) assignments derived from
     * [[minhashIndex]]. `ng` — the doc's gram-set cardinality — rides
-    * every banded row so the size-ratio prefilter (VERDICT r14 item 2)
+    * every banded row so the size-ratio prefilter ([[sizeRatioOk]])
     * is available to candidate generation WITHOUT a count-sidecar join:
     * J(A,B) ≥ 0.5 requires min(|A|,|B|)/max(|A|,|B|) ≥ 0.5 (|A∩B| ≤
     * min, |A∪B| ≥ max), so pairs failing the integer test
@@ -324,7 +335,7 @@ object Dedup {
         .distinct()
   }
 
-  /** The size-ratio candidate prefilter (VERDICT r14 item 2): J ≥ 0.5
+  /** The size-ratio candidate prefilter: J ≥ 0.5
     * implies 2·min(|A|,|B|) ≥ max(|A|,|B|), so this integer predicate
     * drops pairs that CANNOT verify before any gram array is attached —
     * result-invariant, mirrored in the oracle CTEs
@@ -415,7 +426,7 @@ object Dedup {
     * convergence, cap, and checkpoint arguments; the star hub keeps
     * real dup clusters at diameter ~2, so the propagation probe
     * converges without escalating here, and DedupSpec plants a
-    * diameter-5 chain to pin full collapse — VERDICT r6 item 5; an
+    * diameter-5 chain to pin full collapse; an
     * adversarially deep cluster would now escalate to the star
     * rewrite instead of paying rounds ∝ diameter). Propagation runs
     * over the FULL vertex set rather than the edge-vertex subgraph:
@@ -429,7 +440,7 @@ object Dedup {
     // rode the candidate window ([[candidateEdges]]' ng carry), so
     // impossible pairs die here without shuffling a single array —
     // on a production-shaped corpus this prunes most of the candidate
-    // tail (VERDICT r14 item 2); dup-dense fixtures mostly pass it.
+    // tail; dup-dense fixtures mostly pass it.
     val cand = candidateEdges(minhashBanded(index))
       .filter(sizeRatioOk(col("na"), col("nb")))
       .select(col("doc_a"), col("doc_b"))
@@ -508,7 +519,7 @@ object Dedup {
     * near-dups of each other must co-assign even when only one of them
     * matches at rest): the ANCHOR is the minimum at-rest doc any member
     * verifies against through the bucketed-index probe
-    * ([[incrementalNearDups]] — candidates ∝ batch, the at-rest side
+    * ([[verifiedProbePairs]] — candidates ∝ batch, the at-rest side
     * never reshuffles); an anchored component inherits the anchor's
     * at-rest cluster split, an unanchored one hashes its own label
     * (which equals what [[splitLeakageFree]] would assign it on the
@@ -518,47 +529,42 @@ object Dedup {
     * Scale shape: the at-rest labels are the frozen stored split
     * ([[atRestSplit]], computed once per corpus version); steady-state
     * per-batch cost is probe ∝ batch + a batch-sized component run +
-    * broadcast joins of batch-component-bounded frames.
+    * broadcast joins of batch-component-bounded frames. The batch's
+    * signature rows already live in the cached corpus index, so the
+    * batch index is that index filtered to the slice.
     */
   def splitAssignDelta(s: SparkSession, d: String): DataFrame = {
     val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
-    val docs = Tables.documents(s, d)
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     TrainingPrep.ensureDeltaArtifacts(s, d)
-    // the batch's signature rows already live in the cached corpus
-    // index — filter them out instead of re-scanning batch text twice
-    // (once for labels, once for the probe)
-    splitAssignDeltaCore(s, docs.filter(isDelta), atRestSplit(s, d),
-      "deltadx", Some(index.filter(isDelta)))
+    val batchIdx = index.filter(isDelta)
+    splitAssignDeltaCore(Tables.documents(s, d).filter(isDelta), batchIdx,
+      verifiedProbePairs(s, batchIdx, "deltadx"), atRestSplit(s, d))
   }
 
   /** Frame-parametric core of [[splitAssignDelta]] (specs plant
-    * batches against their own bucketed index): `atSplit` is the
-    * frozen (doc_id, label, split) at-rest assignment, `prefix` the
-    * bucketed at-rest index the probe runs against. The batch's
-    * signature index is derived here (cost ∝ batch) unless the caller
-    * already holds one.
+    * batches against their own bucketed index): `batchIdx` is the
+    * batch's signature index ([[minhashIndexOf]]; the caller owns it),
+    * `pairs` the verified probe pairs of that index against the
+    * bucketed at-rest index ([[verifiedProbePairs]]), and `atSplit` the
+    * frozen (doc_id, label, split) at-rest assignment. Every batch doc
+    * gets a row, gramless ones as their own singleton component.
     */
-  private[graft] def splitAssignDeltaCore(s: SparkSession, batch: DataFrame,
-      atSplit: DataFrame, prefix: String,
-      batchIdx: Option[DataFrame] = None): DataFrame = {
-    val idx = batchIdx.getOrElse(
-      minhashIndexOf(batch.select(col("doc_id"), col("text"))))
-    val bLabels = nearDupLabels(batch.select(col("doc_id").as("id")), idx)
-    // matches is batch-bounded (one row per matched batch doc) — an
-    // explicit broadcast, or the unknown aggregate estimate falls back
-    // to a sort-merge join of two tiny frames (r21 plan audit)
-    val matches = incrementalNearDupsIdx(s, idx, prefix)
+  private[graft] def splitAssignDeltaCore(batch: DataFrame, batchIdx: DataFrame,
+      pairs: DataFrame, atSplit: DataFrame): DataFrame = {
+    val bLabels = nearDupLabels(batch.select(col("doc_id").as("id")), batchIdx)
     // per batch component: minimum verified at-rest anchor over members.
-    // Pinned once (r21): inh feeds BOTH the anchored lookup and the
-    // at-rest prune semi join, and unpinned the whole incremental-probe
-    // subtree (band join + candidate aggregate + gram verification) was
-    // re-planned and re-run per reference — 2× the probe per query.
+    // The pairs are batch-bounded (≤ ProbeCandPerBucket × bands rows per
+    // batch doc), so the join is an explicit broadcast: the unknown
+    // estimate of a probe frame would otherwise plan a sort-merge join
+    // of two tiny frames. Pinned once: inh feeds BOTH the anchored
+    // lookup and the at-rest prune semi join, and each reference would
+    // otherwise re-run the batch component labelling.
     val inh = bLabels
-      .join(broadcast(matches.select(col("doc_id"), col("dup_of"))),
+      .join(broadcast(pairs.select(col("doc_id"), col("idx_doc"))),
         Seq("doc_id"), "left")
-      .groupBy(col("label")).agg(min(col("dup_of")).as("anchor"))
+      .groupBy(col("label")).agg(min(col("idx_doc")).as("anchor"))
       .pin("one row per batch component")
     // anchors ∝ batch components: prune the at-rest split table by a
     // broadcast semi join, then the lookup join is broadcast-small
@@ -619,10 +625,10 @@ object Dedup {
     * anchored-lookup join index-side-shuffle-free, the
     * [[writeDedupIndex]] stance applied to the split artifact.
     */
-  def writeSplitTable(atSplit: DataFrame, prefix: String, buckets: Int = 8): Unit =
+  def writeSplitTable(atSplit: DataFrame, prefix: String): Unit =
     graft.storage.LogStore.writeBucketed(
       atSplit.select(col("doc_id"), col("label"), col("split")),
-      s"${prefix}_split", "doc_id", buckets)
+      s"${prefix}_split", "doc_id")
 
   /** The fold after one batch's split assignment — the split-table
     * sibling of [[appendDedupIndex]]'s "caller's follow-up write":
@@ -686,6 +692,13 @@ object Dedup {
     val index = minhashIndex(s, d)
     pinMinhashIndex(s, d, index)
     val b20 = graft.GoldenHash.bucket(col("doc_id"), 20)
+    // one slice's assignment against the current split2dx state; its
+    // batch index is the cached corpus index filtered to the slice
+    def assign(slice: Column): DataFrame = {
+      val batchIdx = index.filter(slice)
+      splitAssignDeltaCore(docs.filter(slice), batchIdx,
+        verifiedProbePairs(s, batchIdx, "split2dx"), s.table("split2dx_split"))
+    }
     graft.Pins.writeArtifact(s, d, "split2_index") {
       val atRest = b20 =!= 7 && b20 =!= 11
       writeDedupIndex(docs.filter(atRest), "split2dx")
@@ -695,18 +708,15 @@ object Dedup {
         .select(col("doc_id"), col("label"), splitOfLabel(col("label")).as("split")),
         "split2dx")
       // generation 1: assign A against the frozen state, then fold its
-      // rows into the stored split table and append its index rows.
-      // The assignment materializes (localCheckpoint) BEFORE either
-      // write, so A's probe sees the pre-append (at-rest only) index.
-      val aAssign = splitAssignDeltaCore(s, docs.filter(b20 === 7),
-        s.table("split2dx_split"), "split2dx", Some(index.filter(b20 === 7)))
-        .pin("one row per batch-A doc")
+      // rows into the stored split table and append its index rows
+      // (absent from the at-rest slice by construction, so the append's
+      // replay guard keeps them all). The assignment materializes
+      // BEFORE either write, so A's probe sees the pre-append index.
+      val aAssign = assign(b20 === 7).pin("one row per batch-A doc")
       foldSplitAssign(s, aAssign, "split2dx")
-      appendDedupIndex(docs.filter(b20 === 7).select(col("doc_id"), col("text")),
-        "split2dx")
+      appendDedupIndex(docs.filter(b20 === 7), index.filter(b20 === 7), "split2dx")
     }
-    splitAssignDeltaCore(s, docs.filter(b20 === 11), s.table("split2dx_split"),
-      "split2dx", Some(index.filter(b20 === 11)))
+    assign(b20 === 11)
   }
 
   /** Fuzzy (MinHash) benchmark decontamination — the near-duplicate
@@ -736,8 +746,7 @@ object Dedup {
     * A held-out suite is fixed-size by construction (the bound that
     * lets ngramDecontaminate broadcast its gram set), but the FIXTURE's
     * test split is a corpus-proportional slice — so the broadcast is
-    * GATED on a cheap count instead of taken unconditionally (ADVICE
-    * r14): past the bound the plan degrades to the shuffle join rather
+    * GATED on a cheap count instead of taken unconditionally: past the bound the plan degrades to the shuffle join rather
     * than growing an O(corpus) driver broadcast. ~200k docs × avg
     * ~150-gram arrays ≈ low hundreds of MB — inside Spark's 8 GB
     * broadcast ceiling with margin.
@@ -755,7 +764,7 @@ object Dedup {
       .partitionBy(col("band"), col("key"))
     val byId = bucket.orderBy(col("doc_id"))
     val testId = when(col("is_t"), col("doc_id"))
-    // size-ratio prefilter (VERDICT r14 item 2): the TRAIN side's gram
+    // size-ratio prefilter ([[sizeRatioOk]]): the TRAIN side's gram
     // count rides the banded row (minhashBanded's ng carry); the TEST
     // side's attaches via a broadcast (test_id, count) sidecar — two
     // ints per held-out doc, bounded by the same argument as the gram
@@ -815,7 +824,7 @@ object Dedup {
     *
     * Round 1 grouped on the full 64-bit signature, so documents whose
     * signatures differ by even 1 bit — the whole point of SimHash —
-    * never became candidates (VERDICT r1 item 4). Banding fixes recall
+    * never became candidates. Banding fixes recall
     * *at the bucket level*: by pigeonhole, any pair within hamming
     * distance 3 agrees on at least one of the 4 16-bit bands — the
     * classic Manku/Jain/Sarma web-dedup construction — so every true
@@ -1038,33 +1047,35 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** Persist the at-rest dedup index for INCREMENTAL admission: two
-    * bucketed tables, `<prefix>_bands` (band, key, doc_id) bucketed on
-    * the band bucket key and `<prefix>_grams` (doc_id, grams) bucketed
-    * on doc_id. Bucketing is the point: when a new batch probes the
-    * index, the INDEX side of each join is already hash-distributed on
-    * the join key, so only the (small) batch shuffles — probe cost
-    * scales with the batch, never with the accumulated corpus. This is
-    * the operational form of dedup at 100 TB: the corpus is indexed
-    * once and each ingest batch is admitted against it, instead of
-    * re-running corpus-wide dedup per ingest.
+  /** Persist the at-rest dedup index for INCREMENTAL admission: three
+    * bucketed tables, `<prefix>_bands` (doc_id, bkey) bucketed on the
+    * fused band key, `<prefix>_grams` (doc_id, grams) bucketed on doc_id
+    * and `<prefix>_digests` (digest) bucketed on the text digest.
+    * Bucketing is the point: when a new batch probes the index, the
+    * INDEX side of each join is already hash-distributed on the join
+    * key, so only the (small) batch shuffles — the at-rest side never
+    * reshuffles, however large it grows. This is the operational form
+    * of dedup at 100 TB: the corpus is indexed once and each ingest
+    * batch is admitted against it, instead of re-running corpus-wide
+    * dedup per ingest. Every table takes
+    * [[graft.storage.LogStore.writeBucketed]]'s bucket count: an append
+    * must repeat the table's bucket spec (Spark rejects one that
+    * differs), so the count is no caller's choice.
     */
-  def writeDedupIndex(docs: DataFrame, prefix: String, buckets: Int = 8): Unit = {
+  def writeDedupIndex(docs: DataFrame, prefix: String): Unit = {
     val index = minhashIndexOf(docs)
+    graft.storage.LogStore.writeBucketed(fusedBandKeys(index), s"${prefix}_bands", "bkey")
     graft.storage.LogStore.writeBucketed(
-      fusedBandKeys(index), s"${prefix}_bands", "bkey", buckets)
-    graft.storage.LogStore.writeBucketed(
-      index.select(col("doc_id"), col("grams")), s"${prefix}_grams", "doc_id", buckets)
+      index.select(col("doc_id"), col("grams")), s"${prefix}_grams", "doc_id")
     // exact-dup sidecar: distinct sha2-256 text digests, bucketed on
     // the digest — the EXACT-duplicate admission probe anti-joins batch
     // digests against this table, so (like the band/gram tables) the
     // index side never reshuffles and, unlike an anti join on raw text,
-    // the at-rest TEXT column never crosses the wire at probe time
-    // (VERDICT r12 item 1: the raw-text anti join shipped the full
-    // corpus text per delta batch — ∝ corpus, not ∝ batch).
+    // the at-rest TEXT column never crosses the wire at probe time (a
+    // raw-text anti join ships the full corpus text per delta batch).
     graft.storage.LogStore.writeBucketed(
       docs.select(sha2(col("text"), 256).as("digest")).distinct(),
-      s"${prefix}_digests", "digest", buckets)
+      s"${prefix}_digests", "digest")
   }
 
   /** (doc_id, bkey) with band id FUSED into one hash key, so the probe
@@ -1077,9 +1088,32 @@ object Dedup {
     minhashBanded(index)
       .select(col("doc_id"), xxhash64(col("band"), col("key")).as("bkey"))
 
-  /** Probe a [[writeDedupIndex]] index with a new batch: near-duplicate
-    * admission control. Candidates come from band-key equality against
-    * the bucketed band table, PRUNED per (new doc, bucket) to at most
+  /** Candidates verified per (new doc, band bucket) by the incremental
+    * probe — the per-id-residue-class minimums ([[probeCandidates]]).
+    */
+  val ProbeCandPerBucket = 8
+
+  /** Near-duplicate admission control against a [[writeDedupIndex]]
+    * index: one row per REJECTED batch doc — its canonical existing
+    * duplicate (`dup_of` = min VERIFIED candidate id) and the best
+    * verified Jaccard — from the [[verifiedProbePairs]] of the caller's
+    * batch index `batchIdx` ([[minhashIndexOf]]). Both are taken over
+    * the pruned candidate set, which is deterministic and replayed
+    * verbatim by the DuckDB oracle. Batch docs absent from the output
+    * are admitted; appending their own index rows is the caller's
+    * follow-up write ([[appendDedupIndex]]).
+    */
+  def incrementalNearDups(s: SparkSession, batchIdx: DataFrame,
+      prefix: String): DataFrame =
+    verifiedProbePairs(s, batchIdx, prefix)
+      .groupBy(col("doc_id"))
+      .agg(min(col("idx_doc")).as("dup_of"),
+        round(max(col("jaccard")), 4).as("max_jaccard"))
+      .orderBy(col("doc_id"))
+
+  /** The pruned (batch doc, at-rest candidate) id pairs of the
+    * incremental probe. Candidates come from band-key equality against
+    * the bucketed band table, PRUNED per (batch doc, bucket) to at most
     * ProbeCandPerBucket members instead of the full bucket membership.
     * On a dup-heavy corpus a colliding bucket IS the new doc's
     * duplicate cluster, so bucket occupancy grows with duplicate
@@ -1087,8 +1121,7 @@ object Dedup {
     * rehearsal measured 231 s for the all-pairs probe vs ~8 s pruned,
     * because every additional candidate ships a multi-KB gram array
     * through the verify joins. Pruning keeps the candidate derivation
-    * ids-only (the heavy arrays attach to ≤ ProbeCandPerBucket·bands
-    * pairs per doc); precision stays exact (every emitted pair is
+    * ids-only; precision stays exact (every emitted pair is
     * gram-verified). The K members kept per bucket are the MINIMUM OF
     * EACH id-residue class mod K: this includes the bucket minimum,
     * spreads picks across a merged bucket's different dup clusters
@@ -1097,75 +1130,39 @@ object Dedup {
     * low, where keep-min-id canonicalization concentrates the cluster
     * originals a fresh copy is most likely to verify against. Recall
     * is spec-bounded ≥ 0.8 against unblocked exact truth.
-    *
-    * Returns one row per REJECTED new doc: its canonical existing
-    * duplicate (`dup_of` = min VERIFIED candidate id) and the best
-    * verified Jaccard — both over the pruned candidate set, which is
-    * deterministic and replayed verbatim by the DuckDB oracle. New
-    * docs absent from the output are admitted; appending their own
-    * index rows is the caller's follow-up write.
     */
-  /** Candidates verified per (new doc, band bucket) by the incremental
-    * probe — the per-id-residue-class minimums (see scaladoc above).
-    */
-  val ProbeCandPerBucket = 8
-
-  def incrementalNearDups(s: SparkSession, newDocs: DataFrame,
-      prefix: String): DataFrame =
-    incrementalNearDupsIdx(s, minhashIndexOf(newDocs), prefix)
-
-  /** [[incrementalNearDups]] over a PRE-BUILT batch signature index —
-    * callers that already hold one (the cached corpus index filtered to
-    * the batch slice, [[splitAssignDelta]]) skip the second signature
-    * scan.
-    */
-  private[graft] def incrementalNearDupsIdx(s: SparkSession, newIdx: DataFrame,
-      prefix: String): DataFrame =
-    verifiedProbePairs(s, newIdx, probeCandidates(s, newIdx, prefix), prefix)
-      .groupBy(col("doc_id"))
-      .agg(min(col("idx_doc")).as("dup_of"),
-        round(max(col("jaccard")), 4).as("max_jaccard"))
-      .orderBy(col("doc_id"))
-
-  /** The pruned (batch doc, at-rest candidate) id pairs of the
-    * incremental probe — shared by [[incrementalNearDupsIdx]] and
-    * [[splitBridgeMonitor]].
-    */
-  private def probeCandidates(s: SparkSession, newIdx: DataFrame,
+  private def probeCandidates(s: SparkSession, batchIdx: DataFrame,
       prefix: String): DataFrame = {
-    // r21: the kept member per (bucket, id-residue class) is a function
-    // of the AT-REST bucket alone, so the minima are aggregated over the
-    // bands table FIRST (one pass over its rows, bucket-local since the
-    // table is bucketed on bkey) and the probe joins the ≤ K-row-per-
-    // bucket minima frame. The r12 form joined every probe key against
-    // the FULL bucket membership and streamed it through the min(when)
-    // aggregates — linear memory but O(Σ bucket occupancy) compute per
-    // batch, which on a dup-dense corpus is quadratic in duplicate
-    // multiplicity: the sf1 rehearsal measured 512M joined rows for a
-    // 2,500-doc batch (~9 s of the probe's ~13 s; the candidate SET is
-    // 188k pairs). Per class the TWO smallest members are kept so the
-    // self-guard (a batch id colliding with an indexed id must not
-    // match ITSELF — ADVICE r6) picks the second-smallest exactly when
-    // the probe doc IS the class minimum: result-identical to the
-    // old per-(probe, bucket) min-excluding-self by the min2 algebra
-    // (min over class∖{doc} = m1 if m1 ≠ doc else m2).
-    val res = pmod(col("doc_id"), lit(ProbeCandPerBucket))
-    val members = s.table(s"${prefix}_bands")
-      .select(col("bkey"), col("doc_id"), res.as("res"))
-    val m1s = members.groupBy(col("bkey"), col("res"))
-      .agg(min(col("doc_id")).as("m1"))
-    val m2s = members.join(m1s, Seq("bkey", "res"))
-      .filter(col("doc_id") > col("m1"))
+    // The kept members of a (bucket, id-residue class) are a function of
+    // the AT-REST bucket alone, so they come from ONE read of the band
+    // rows: the members of the batch's own buckets (a semi join on its
+    // broadcast band keys), then the two smallest distinct ids per class,
+    // all bucket-local since the table is bucketed on bkey; the batch's
+    // keys are broadcast again to pick the candidates. Joining every
+    // probe key against the full bucket membership instead costs
+    // O(Σ bucket occupancy) per batch, quadratic in duplicate
+    // multiplicity on a dup-dense corpus (the sf1 rehearsal: 512M joined
+    // rows for a 2,500-doc batch whose candidate set is 188k pairs).
+    // The TWO smallest are kept so that a batch id colliding with an
+    // indexed id never matches ITSELF: the self-guard takes the second
+    // (`mx`, when it exceeds m1) exactly when the probe doc IS the class
+    // minimum — min over class∖{doc} = m1 if m1 ≠ doc else m2.
+    val batchKeys = fusedBandKeys(batchIdx)
+    val byClass = Window.partitionBy(col("bkey"), col("res")).orderBy(col("doc_id"))
+    val mins = s.table(s"${prefix}_bands")
+      .join(broadcast(batchKeys.select(col("bkey")).distinct()), Seq("bkey"), "left_semi")
+      .select(col("bkey"), col("doc_id"),
+        pmod(col("doc_id"), lit(ProbeCandPerBucket)).as("res"))
+      .withColumn("rank", dense_rank().over(byClass))
+      .filter(col("rank") <= 2)
       .groupBy(col("bkey"), col("res"))
-      .agg(min(col("doc_id")).as("m2"))
-    val mins = m1s.join(m2s, Seq("bkey", "res"), "left")
-    fusedBandKeys(newIdx)
-      .join(mins, Seq("bkey"))
+      .agg(min(col("doc_id")).as("m1"), max(col("doc_id")).as("mx"))
+    broadcast(batchKeys).join(mins, Seq("bkey"))
       .select(col("doc_id"),
         when(col("m1") =!= col("doc_id"), col("m1"))
-          .otherwise(col("m2")).as("idx_doc"))
+          .when(col("mx") > col("m1"), col("mx")).as("idx_doc"))
       .filter(col("idx_doc").isNotNull)
-      .select(col("doc_id"), col("idx_doc")).distinct()
+      .distinct()
   }
 
   /** Per-batch split-BRIDGE monitor — the streaming-side early warning
@@ -1177,14 +1174,13 @@ object Dedup {
     * [[graft.streaming.StreamPipelines.streamingSplitAssign]]'s
     * driftSink: one row per batch doc with ≥1 verified anchor —
     * distinct anchor clusters/splits and the `migrate` flag (spans ≥2
-    * clusters). Probe ∝ batch against the bucketed index + split
-    * table (the same [[verifiedProbePairs]] the admission gate runs);
-    * zero new streaming state.
+    * clusters). It reads the batch's verified probe `pairs`
+    * ([[verifiedProbePairs]]) — the same pairs the split assignment
+    * reads — and the split table; zero new streaming state.
     */
-  def splitBridgeMonitor(s: SparkSession, batch: DataFrame,
-      prefix: String): DataFrame = {
-    val newIdx = minhashIndexOf(batch.select(col("doc_id"), col("text")))
-    verifiedProbePairs(s, newIdx, probeCandidates(s, newIdx, prefix), prefix)
+  def splitBridgeMonitor(s: SparkSession, pairs: DataFrame,
+      prefix: String): DataFrame =
+    pairs
       .join(s.table(s"${prefix}_split")
         .select(col("doc_id").as("idx_doc"), col("label"), col("split")),
         Seq("idx_doc"))
@@ -1193,20 +1189,24 @@ object Dedup {
         countDistinct(col("split")).as("n_anchor_splits"))
       .withColumn("migrate", col("n_anchor_clusters") > 1)
       .orderBy(col("doc_id"))
-  }
 
-  /** The verified (batch doc, at-rest doc, jaccard) pair set of the
-    * incremental probe — the shared tail of [[incrementalNearDupsIdx]]
-    * and [[splitBridgeMonitor]], so the monitor can never disagree with
-    * the admission gate about which anchors verified.
+  /** The verified (batch doc, at-rest doc, jaccard) pairs of the
+    * incremental probe of the caller's batch index `batchIdx` against
+    * the bucketed `prefix` index: the pruned candidates
+    * ([[probeCandidates]]) that reach gram Jaccard ≥ 0.5. The one probe
+    * that the admission verdicts ([[incrementalNearDups]]), the split
+    * assignment ([[splitAssignDeltaCore]]) and the bridge monitor
+    * ([[splitBridgeMonitor]]) read, so the monitor can never disagree
+    * with the assignment about which anchors verified. Batch-bounded:
+    * at most ProbeCandPerBucket × bands rows per batch doc.
     */
-  private def verifiedProbePairs(s: SparkSession, newIdx: DataFrame,
-      cand: DataFrame, prefix: String): DataFrame =
-    cand
-      .join(newIdx.select(col("doc_id"), col("grams").as("gn")), Seq("doc_id"))
+  private[graft] def verifiedProbePairs(s: SparkSession, batchIdx: DataFrame,
+      prefix: String): DataFrame =
+    probeCandidates(s, batchIdx, prefix)
+      .join(batchIdx.select(col("doc_id"), col("grams").as("gn")), Seq("doc_id"))
       .join(s.table(s"${prefix}_grams")
         .select(col("doc_id").as("idx_doc"), col("grams").as("gi")), Seq("idx_doc"))
-      // size-ratio prefilter (VERDICT r14 item 2): the at-rest side is
+      // size-ratio prefilter ([[sizeRatioOk]]): the at-rest side is
       // bucketed (no shuffle to save), so the win here is skipping the
       // merge-intersect eval on pairs the cardinality bound already
       // refutes — size() is O(1) on the deserialized array
@@ -1216,50 +1216,43 @@ object Dedup {
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_id"), col("idx_doc"), col("jaccard"))
 
-  /** The caller's follow-up write after admission: append the admitted
-    * batch's OWN index rows — fused band keys, gram sets, and text
-    * digests — to the bucketed at-rest index, so the NEXT batch probes
-    * against a corpus that includes this one. Cost ∝ batch (the batch
-    * re-derives its signatures and appends into the existing hash
-    * buckets; the at-rest rows are untouched — [[graft.storage.LogStore
-    * .appendBucketed]]). Appending the batch's distinct digests may
-    * duplicate a digest row only if the caller appends docs the exact
-    * gate rejected; anti-join semantics are unaffected by duplicates
-    * either way. DedupSpec pins the replay property: after the append,
-    * re-probing the same batch rejects every document.
+  /** The caller's follow-up write after admission: append a batch's OWN
+    * index rows — the fused band keys and gram sets of the caller's
+    * batch index `index` ([[minhashIndexOf]] of `docs`) and the text
+    * digests of `docs` — to the bucketed at-rest index, so the NEXT
+    * batch probes against a corpus that includes this one. The at-rest
+    * rows are untouched ([[graft.storage.LogStore.appendBucketed]]).
+    * DedupSpec pins the replay property: after the append, re-probing
+    * the same batch rejects every document.
     *
-    * `replayGuarded` is the at-least-once delivery stance (ADVICE r15):
-    * each of the THREE appends is anti-joined on ITS OWN target table's
-    * membership — a retried fold whose prior attempt died between any
-    * two of the appends re-appends exactly the tables that missed the
-    * write and no-ops the rest. A single batch-level guard on one table
-    * cannot give that: keyed on grams, a crash between the grams and
-    * digests appends plus redelivery would filter the docs out (already
-    * in grams) and permanently lose their digest rows. The grams and
-    * digests guards scan their target's BUCKET key column (bucket-
-    * prunable); the bands guard anti-joins on doc_id while the bands
-    * table is bucketed on bkey, so that one pays a full single-column
-    * scan per batch — semantics identical, and the column stays the
-    * narrow key either way. Batch callers that own their delivery
-    * (run-once jobs) keep the unguarded default.
+    * Every append is replay-guarded, since a batch may arrive more than
+    * once (Structured Streaming delivers at least once, and a crash
+    * between a sink and the appends re-delivers the batch): each of the
+    * THREE appends is anti-joined on ITS OWN target table's membership,
+    * so a retry whose prior attempt died between any two of the appends
+    * re-appends exactly the tables that missed the write and no-ops the
+    * rest. A single batch-level guard on one table cannot give that:
+    * keyed on grams, a crash between the grams and digests appends plus
+    * redelivery would filter the docs out (already in grams) and
+    * permanently lose their digest rows. The grams and digests guards
+    * scan their target's bucket key column; the bands guard anti-joins
+    * on doc_id while the bands table is bucketed on bkey, so it scans
+    * that table's whole doc_id column per batch. Rows absent from the
+    * index by construction (the batch queries' generation-1 appends)
+    * are all appended, as an unguarded write would; a digest already at
+    * rest is not appended a second time, which no anti join on the
+    * digest table can tell apart.
     */
-  def appendDedupIndex(docs: DataFrame, prefix: String, buckets: Int = 8,
-      replayGuarded: Boolean = false): Unit = {
+  def appendDedupIndex(docs: DataFrame, index: DataFrame, prefix: String): Unit = {
     val s = docs.sparkSession
-    def fresh(df: DataFrame, table: String, key: String): DataFrame =
-      if (!replayGuarded) df
-      else df.join(s.table(table).select(col(key)), Seq(key), "left_anti")
-    val index = minhashIndexOf(docs)
-    graft.storage.LogStore.appendBucketed(
-      fresh(fusedBandKeys(index), s"${prefix}_bands", "doc_id"),
-      s"${prefix}_bands", "bkey", buckets)
-    graft.storage.LogStore.appendBucketed(
-      fresh(index.select(col("doc_id"), col("grams")), s"${prefix}_grams", "doc_id"),
-      s"${prefix}_grams", "doc_id", buckets)
-    graft.storage.LogStore.appendBucketed(
-      fresh(docs.select(sha2(col("text"), 256).as("digest")).distinct(),
-        s"${prefix}_digests", "digest"),
-      s"${prefix}_digests", "digest", buckets)
+    def append(rows: DataFrame, table: String, key: String, bucketKey: String): Unit =
+      graft.storage.LogStore.appendBucketed(
+        rows.join(s.table(s"${prefix}_$table").select(col(key)), Seq(key), "left_anti"),
+        s"${prefix}_$table", bucketKey)
+    append(fusedBandKeys(index), "bands", "doc_id", "bkey")
+    append(index.select(col("doc_id"), col("grams")), "grams", "doc_id", "doc_id")
+    append(docs.select(sha2(col("text"), 256).as("digest")).distinct(),
+      "digests", "digest", "digest")
   }
 
   /** Exact-duplicate admission against a [[writeDedupIndex]] digest
@@ -1267,9 +1260,9 @@ object Dedup {
     * exists in the at-rest corpus. The anti join keys on the 64-char
     * digest, and the index side is bucketed on it — so only the batch
     * shuffles (into the bucket layout) and the scan of the index reads
-    * one 64-byte column, never the corpus text. This replaces the raw
-    * `text`-keyed anti join that reshuffled the FULL at-rest text
-    * column per delta batch (VERDICT r12 finding 1).
+    * one 64-byte column, never the corpus text: a raw `text`-keyed
+    * anti join would reshuffle the FULL at-rest text column per delta
+    * batch.
     */
   def incrementalExactClean(s: SparkSession, batch: DataFrame,
       prefix: String): DataFrame =
@@ -1344,7 +1337,7 @@ object Dedup {
       Some(DedupOracles.splitLeakageFree), headline = false),
     // verified-not-benched since round 14: single-generation prefix of
     // benched q_split_assign_delta2 (the corpus_prep_delta → delta2
-    // precedent, VERDICT r13 item 1)
+    // precedent: one bench slot per shared chain)
     "q_split_assign_delta" -> QueryDef(splitAssignDelta,
       Some(DedupOracles.splitAssignDelta), headline = false),
     "q_split_assign_delta2" -> QueryDef(splitAssignDelta2,
@@ -1366,8 +1359,7 @@ object DedupOracles {
   /** SQL mirror of [[Dedup.sizeRatioOk]] — the result-invariant
     * size-ratio prefilter (J ≥ 0.5 ⟹ 2·min ≥ max over gram-set
     * cardinalities), replicated in every verify-replaying CTE so the
-    * oracle stays a full replay of the engine's candidate pipeline
-    * (VERDICT r14 item 2).
+    * oracle stays a full replay of the engine's candidate pipeline.
     */
   private[operators] def sizeRatioSql(a: String, b: String): String =
     s"least(len($a), len($b)) * 2 >= greatest(len($a), len($b))"
@@ -1634,7 +1626,7 @@ object DedupOracles {
     * from an engine-written labels artifact), the batch-internal
     * components through a second closure, and the probe through the
     * same banded / residue-class-pruned / gram-verified stages the
-    * engine's [[incrementalNearDups]] runs — then the identical
+    * engine's [[Dedup.verifiedProbePairs]] runs — then the identical
     * component-level anchor-inheritance CASE. The same SCALE NOTE as
     * [[minhashDedup]] applies: closure cost is |component|², fine at
     * the gate scales; large-SF rehearsals use
@@ -1652,7 +1644,7 @@ object DedupOracles {
        |  SELECT doc_id, i AS band, bands[i + 1] AS key
        |  FROM art, (SELECT unnest(generate_series(0, ${Dedup.MinhashBands - 1})) AS i))""".stripMargin
 
-  /** `$tag`-prefixed replay of [[Dedup.incrementalNearDupsIdx]]'s probe
+  /** `$tag`-prefixed replay of [[Dedup.verifiedProbePairs]]' probe
     * + the component-level anchor-inheritance tail: band hits of
     * `${batchTag}b` against the `idxPred` slice of `banded`,
     * residue-class candidate pruning, gram verification, then per

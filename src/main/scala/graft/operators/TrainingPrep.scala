@@ -623,7 +623,8 @@ object TrainingPrep {
     *   3. near-duplicate admission via the BUCKETED at-rest minhash
     *      index ([[Dedup.writeDedupIndex]] built once per corpus
     *      version, [[Dedup.incrementalNearDups]] probe ∝ batch — the
-    *      index side never reshuffles);
+    *      index side never reshuffles); the batch's signature rows are
+    *      the cached corpus index filtered to the slice;
     *   4. benchmark 5-gram decontamination (benchmark gram set is
     *      fixed-size → broadcast; batch side streams);
     *   5. token accounting under the FROZEN learned BPE merges
@@ -647,7 +648,8 @@ object TrainingPrep {
   def corpusPrepDelta(s: SparkSession, d: String): DataFrame = {
     ensureDeltaArtifacts(s, d)
     val isDelta = graft.GoldenHash.bucket(col("doc_id"), 20) === 7
-    deltaAdmissionChain(s, d, Tables.documents(s, d).filter(isDelta))
+    deltaAdmissionChain(s, d, Tables.documents(s, d).filter(isDelta),
+      Dedup.minhashIndex(s, d).filter(isDelta))
   }
 
   /** Build/pin the frozen at-rest artifacts the admission gates probe:
@@ -697,6 +699,12 @@ object TrainingPrep {
     * frozen), so verdicts are independent of how ingest is batched —
     * StreamingSpec pins that batch-boundary invariance adversarially.
     *
+    * `batchIdx` is the batch's signature index, owned by the caller
+    * ([[Dedup.minhashIndexOf]]): it may cover more documents than
+    * `batch` (the ingest derives one index for its whole micro-batch
+    * and shares it with the split stage), and the near-dup gate probes
+    * its rows semi-joined to the exact-clean ids.
+    *
     * Every probe of the `<prefix>_*` dedup-index tables runs before this
     * returns: both probe verdicts are eager frame pins, and the rest of
     * the chain reads only frozen state (benchmark grams, BPE merges). So
@@ -706,7 +714,7 @@ object TrainingPrep {
     * this.
     */
   private[graft] def deltaAdmissionChain(
-      s: SparkSession, d: String, batch: DataFrame,
+      s: SparkSession, d: String, batch: DataFrame, batchIdx: DataFrame,
       prefix: String = "deltadx"): DataFrame = {
     // Each gate references its predecessor twice (the keep side and the
     // probe side), so an unpinned chain re-plans the whole prefix per
@@ -720,8 +728,9 @@ object TrainingPrep {
     val qualityOk = batch.filter(TextAnalysis.qualityOkPred)
     val exactClean = Dedup.incrementalExactClean(s, qualityOk, prefix)
       .pin("quality+exact-clean batch rows (cost ∝ batch)")
+    val cleanIdx = batchIdx.join(exactClean.select(col("doc_id")), Seq("doc_id"), "left_semi")
     val nearClean = exactClean.join(
-      Dedup.incrementalNearDups(s, exactClean, prefix).select(col("doc_id")),
+      Dedup.incrementalNearDups(s, cleanIdx, prefix).select(col("doc_id")),
       Seq("doc_id"), "left_anti")
       .pin("near-clean batch rows (cost ∝ batch)")
     val admitted = nearClean.join(
@@ -764,18 +773,22 @@ object TrainingPrep {
     val batchB = docs.filter(bucket === 11)
     Dedup.ensureMinhashPinned(s, d)
     BpeTrain.ensureMergesPinned(s, d)
+    val index = Dedup.minhashIndex(s, d)
     graft.Pins.writeArtifact(s, d, "delta2_index") {
       Dedup.writeDedupIndex(docs.filter(bucket =!= 7 && bucket =!= 11), "delta2dx")
       // admit A against the fresh index, then append the admitted docs'
-      // own rows; checkpoint first — the admitted set is DERIVED from
-      // probes of the very tables the append writes to
+      // own rows (absent from the at-rest slice by construction, so the
+      // append's replay guard keeps them all); pin first — the admitted
+      // set is DERIVED from probes of the very tables the append writes to
       val admittedA = batchA.join(
-        deltaAdmissionChain(s, d, batchA, "delta2dx").select(col("doc_id")),
+        deltaAdmissionChain(s, d, batchA, index.filter(bucket === 7), "delta2dx")
+          .select(col("doc_id")),
         Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("text")).pin("admitted batch-A docs")
-      Dedup.appendDedupIndex(admittedA, "delta2dx")
+      Dedup.appendDedupIndex(admittedA,
+        index.join(admittedA.select(col("doc_id")), Seq("doc_id"), "left_semi"), "delta2dx")
     }
-    deltaAdmissionChain(s, d, batchB, "delta2dx")
+    deltaAdmissionChain(s, d, batchB, index.filter(bucket === 11), "delta2dx")
   }
 
   /** Output shards for [[tokenShards]]. */

@@ -433,7 +433,8 @@ object StreamPipelines {
     *
     * Per document (stateless, the same fused native expressions as the
     * batch index): 32 minhash signatures + the exact sorted gram set,
-    * banded 16×2 into bucket keys. Then one stateful stage keyed by
+    * banded 16×2 into `band:key` bucket keys by the batch index's own
+    * [[graft.operators.Dedup.bandKeyArray]]. Then one stateful stage keyed by
     * bucket: each bucket's ValueState holds the FIRST document seen
     * there (its id + gram set); every later arrival in the bucket is
     * verified by exact merge-intersect Jaccard against that
@@ -461,20 +462,16 @@ object StreamPipelines {
       docs: DataFrame, threshold: Double = 0.5,
       ttl: Option[java.time.Duration] = None): org.apache.spark.sql.Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    val h = 32; val bands = 16; val rowsPerBand = h / bands
-    val indexed = docs
+    docs
       .select(col("doc_id"),
-        graft.functions.TextHashFunctions.minhashSigs(col("text"), h).as("sigs"),
+        graft.functions.TextHashFunctions.minhashSigs(col("text"),
+          graft.operators.Dedup.MinhashH).as("sigs"),
         graft.functions.TextHashFunctions.gramSet(col("text")).as("grams"))
       .filter(size(col("sigs")) > 0)
-    val bucketKeys = (0 until bands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => element_at(col("sigs"), i + 1))
-      concat_ws(":", lit(b), xxhash64(cols: _*))
-    }
-    indexed
+      // the batch index's banding; "band:key" is the state key
       .select(col("doc_id"), col("grams"),
-        explode(array(bucketKeys: _*)).as("bucket"))
+        posexplode(graft.operators.Dedup.bandKeyArray).as(Seq("band", "key")))
+      .select(col("doc_id"), col("grams"), concat_ws(":", col("band"), col("key")).as("bucket"))
       .as[(Long, Array[Long], String)]
       .groupByKey(_._3)
       .transformWithState(new BucketRepProcessor(threshold, ttl),
@@ -512,32 +509,37 @@ object StreamPipelines {
 
   /** Admission stage of one corpus micro-batch: the admitted rows of
     * `admitIn` with their token accounting
-    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]], whose rows
-    * are fixed before the caller appends to the index) go to `sink`. Then the
+    * ([[graft.operators.TrainingPrep.deltaAdmissionChain]] over the
+    * batch's signature index `idx`, whose rows are fixed before the
+    * caller appends to the index) go to `sink`. Then the
     * per-lang tokenizer-drift flags of `docs` under the frozen BPE
     * merges and unigram pieces — the same drift bodies and retrain
     * rules as the batch audits. Every artifact is frozen, so the stage
     * holds no state and its cost is ∝ batch words.
     */
   private def admissionStage(sfDir: String, admitIn: DataFrame, docs: DataFrame,
-      id: Long, sink: Sink, driftSink: Option[Sink], uniDriftSink: Option[Sink]): Unit = {
+      idx: DataFrame, id: Long, sink: Sink, driftSink: Option[Sink],
+      uniDriftSink: Option[Sink]): Unit = {
     val s = docs.sparkSession
-    sink(graft.operators.TrainingPrep.deltaAdmissionChain(s, sfDir, admitIn), id)
+    sink(graft.operators.TrainingPrep.deltaAdmissionChain(s, sfDir, admitIn, idx), id)
     driftSink.foreach(ds =>
       ds(graft.operators.BpeTrain.vocabDriftOf(s, sfDir, docs), id))
     uniDriftSink.foreach(ds =>
       ds(graft.operators.UnigramLm.unigramDriftOf(s, sfDir, docs), id))
   }
 
-  /** Split stage of one corpus micro-batch of (doc_id, text) `docs`:
+  /** Split stage of one corpus micro-batch of (doc_id, text) `docs`
+    * with its signature index `idx` (the caller derives it once and
+    * shares it): the verified probe pairs of `idx` against the bucketed
+    * index are pinned once, then
     *   1. split-bridge flags — batch docs whose verified anchors span
-    *      ≥2 at-rest clusters — computed BEFORE the fold grows the
-    *      state, from the same bucketed index and split table the
-    *      assignment probes;
+    *      ≥2 at-rest clusters — computed from those pairs BEFORE the
+    *      fold grows the state;
     *   2. the assignment ([[graft.operators.Dedup.splitAssignDeltaCore]])
-    *      against the current split table, pinned once and sunk;
+    *      from the same pairs against the current split table, pinned
+    *      once and sunk;
     *   3. the fold of the assignments into the split table and the
-    *      append of the batch's dedup-index rows.
+    *      append of the batch's dedup-index rows from `idx`.
     * Replay guard: Structured Streaming delivers a micro-batch at least
     * once, and a crash between the sink and the appends re-delivers it
     * too, so every at-rest append is guarded by the target table's own
@@ -545,21 +547,21 @@ object StreamPipelines {
     * of the index's three tables inside `appendDedupIndex` — and a
     * redelivery re-appends exactly the tables it missed.
     */
-  private def splitStage(docs: DataFrame, prefix: String, id: Long,
+  private def splitStage(docs: DataFrame, idx: DataFrame, prefix: String, id: Long,
       sink: Sink, driftSink: Option[Sink]): Unit = {
     val s = docs.sparkSession
+    val pairs = graft.operators.Dedup.verifiedProbePairs(s, idx, prefix)
+      .pin("verified probe pairs of one micro-batch")
     driftSink.foreach(ds =>
-      ds(graft.operators.Dedup.splitBridgeMonitor(s, docs, prefix), id))
+      ds(graft.operators.Dedup.splitBridgeMonitor(s, pairs, prefix), id))
     val assigned = graft.operators.Dedup.splitAssignDeltaCore(
-        s, docs, s.table(s"${prefix}_split"), prefix)
+        docs, idx, pairs, s.table(s"${prefix}_split"))
       .pin("one row per micro-batch doc")
     sink(assigned, id)
     val seenSplit = s.table(s"${prefix}_split").select(col("doc_id"))
     graft.operators.Dedup.foldSplitAssign(s,
       assigned.join(seenSplit, Seq("doc_id"), "left_anti"), prefix)
-    graft.operators.Dedup.appendDedupIndex(
-      docs.select(col("doc_id"), col("text")), prefix,
-      replayGuarded = true)
+    graft.operators.Dedup.appendDedupIndex(docs, idx, prefix)
   }
 
   /** ANN stage of one micro-batch of (vec_id, v) `vecs`: the rows
@@ -631,7 +633,8 @@ object StreamPipelines {
       uniDriftSink: Option[(DataFrame, Long) => Unit] = None): StreamingQuery =
     appendStream(docs, checkpoint, trigger) { (batch, id) =>
       if (!batch.isEmpty)
-        admissionStage(sfDir, batch, batch, id, sink, driftSink, uniDriftSink)
+        admissionStage(sfDir, batch, batch, graft.operators.Dedup.minhashIndexOf(batch),
+          id, sink, driftSink, uniDriftSink)
     }
 
   /** Streaming twin of [[graft.operators.Dedup.splitAssignDelta2]] —
@@ -666,7 +669,11 @@ object StreamPipelines {
       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
       driftSink: Option[(DataFrame, Long) => Unit] = None): StreamingQuery =
     appendStream(docs, checkpoint, trigger) { (batch, id) =>
-      if (!batch.isEmpty) splitStage(batch, prefix, id, sink, driftSink)
+      if (!batch.isEmpty) {
+        val docsB = batch.select(col("doc_id"), col("text"))
+        splitStage(docsB, graft.operators.Dedup.minhashIndexOf(docsB), prefix, id,
+          sink, driftSink)
+      }
     }
 
   /** ONE production ingest: each micro-batch of (doc_id, text, lang, v)
@@ -679,7 +686,9 @@ object StreamPipelines {
     * split-bridge, ANN cell, and — when the gate is wired — the
     * Moore-Lewis n_oov share). The standalone streams call the SAME
     * stage functions, so unified-vs-separate equality is structural
-    * (StreamingSpec pins it on identical slices); one append
+    * (StreamingSpec pins it on identical slices); one signature index
+    * per batch, derived here from the pinned batch and shared by the
+    * admission probe, the split probe and the index append; one append
     * transaction per at-rest table per batch; split-bridge flags are
     * computed BEFORE the fold grows the state; the index appends keep
     * their per-table replay guards, so at-least-once redelivery is a
@@ -780,9 +789,11 @@ object StreamPipelines {
       if (!batch.isEmpty) {
         val s = batch.sparkSession
         // one materialization of the batch — the stages and up to
-        // five drift flags all re-read it (bound: micro-batch rows)
+        // five drift flags all re-read it (bound: micro-batch rows) —
+        // and one signature index of it, which admission and split share
         val b = batch.pin("one micro-batch of ingest docs")
         val docsB = b.select(col("doc_id"), col("text"), col("lang"))
+        val idx = graft.operators.Dedup.minhashIndexOf(docsB)
         // 0. frozen-LM admission gate (optional; stateless — frozen
         //    artifacts, so a replayed batch re-derives identical
         //    verdicts): score candidates against the pinned sidecar,
@@ -808,8 +819,9 @@ object StreamPipelines {
           else docsB.join(scored.filter(!col("keep")).select(col("doc_id")),
             Seq("doc_id"), "left_anti")
         }
-        admissionStage(sfDir, admitIn, docsB, id, admitSink, vocabDriftSink, uniDriftSink)
-        splitStage(b.select(col("doc_id"), col("text")), prefix, id,
+        admissionStage(sfDir, admitIn, docsB, idx, id, admitSink, vocabDriftSink,
+          uniDriftSink)
+        splitStage(b.select(col("doc_id"), col("text")), idx, prefix, id,
           splitSink, splitDriftSink)
         annStage(b.select(col("doc_id").as("vec_id"), col("v")),
           centroids, codebooks, id, annSink, annDrift)

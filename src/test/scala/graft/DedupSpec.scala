@@ -94,7 +94,9 @@ class DedupSpec extends SparkSpec {
     val atSplit = Seq((20L, 20L, "val"), (41L, 41L, "train"))
       .toDF("doc_id", "label", "split")
     Dedup.writeDedupIndex(atRest, "splitspec")
-    val out = Dedup.splitAssignDeltaCore(spark, batch, atSplit, "splitspec")
+    val idx = Dedup.minhashIndexOf(batch)
+    val out = Dedup.splitAssignDeltaCore(batch, idx,
+        Dedup.verifiedProbePairs(spark, idx, "splitspec"), atSplit)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getString(3)))
@@ -312,7 +314,7 @@ class DedupSpec extends SparkSpec {
     val newDocs = fresh.unionByName(planted)
 
     Dedup.writeDedupIndex(existing, "incdx")
-    val flagged = Dedup.incrementalNearDups(spark, newDocs, "incdx")
+    val flagged = Dedup.incrementalNearDups(spark, Dedup.minhashIndexOf(newDocs), "incdx")
     val got = flagged.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -395,7 +397,7 @@ class DedupSpec extends SparkSpec {
 
     // admit, then the follow-up write: append the batch's own rows
     assert(Dedup.incrementalExactClean(spark, batch, "apdx").count() > 0)
-    Dedup.appendDedupIndex(batch, "apdx")
+    Dedup.appendDedupIndex(batch, Dedup.minhashIndexOf(batch), "apdx")
 
     // replay: every batch doc now hits its own digest — zero admitted
     assert(Dedup.incrementalExactClean(spark, batch, "apdx").count() == 0)
@@ -416,7 +418,7 @@ class DedupSpec extends SparkSpec {
     // is near-dup-flagged against the appended rows
     val src = batch.orderBy("doc_id").limit(1)
     val copy = src.select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-    val flagged = Dedup.incrementalNearDups(spark, copy, "apdx")
+    val flagged = Dedup.incrementalNearDups(spark, Dedup.minhashIndexOf(copy), "apdx")
       .collect().map(_.getLong(0)).toSet
     val copyId = copy.select("doc_id").as[Long].head()
     assert(flagged.contains(copyId), s"re-ingested copy $copyId not flagged")
@@ -447,7 +449,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.table("apgx_grams").count() == grams0)
 
     // redelivery with per-table guards: bands no-op, grams + digests backfilled
-    Dedup.appendDedupIndex(batch, "apgx", replayGuarded = true)
+    Dedup.appendDedupIndex(batch, Dedup.minhashIndexOf(batch), "apgx")
     assert(spark.table("apgx_bands").count() == bands0 + nBatch * Dedup.MinhashBands,
       "guarded retry duplicated band rows")
     assert(spark.table("apgx_grams").count() == grams0 + nBatch,
@@ -456,7 +458,7 @@ class DedupSpec extends SparkSpec {
       "guarded retry failed to backfill digest rows")
 
     // a full second redelivery is a no-op on every table
-    Dedup.appendDedupIndex(batch, "apgx", replayGuarded = true)
+    Dedup.appendDedupIndex(batch, Dedup.minhashIndexOf(batch), "apgx")
     assert(spark.table("apgx_bands").count() == bands0 + nBatch * Dedup.MinhashBands)
     assert(spark.table("apgx_grams").count() == grams0 + nBatch)
     assert(spark.table("apgx_digests").count() == digests0 + nDigests)

@@ -540,7 +540,9 @@ class StreamingSpec extends SparkSpec {
     val batchDf = Seq((30L, T3),
       (40L, "wholly unrelated content about brokers and offsets and lag"))
       .toDF("doc_id", "text")
-    val direct = Dedup.splitBridgeMonitor(spark, batchDf, "streambridge")
+    val direct = Dedup.splitBridgeMonitor(spark,
+        Dedup.verifiedProbePairs(spark, Dedup.minhashIndexOf(batchDf), "streambridge"),
+        "streambridge")
       .collect().map(_.toSeq).toSet
 
     val assignedRows = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
@@ -591,6 +593,78 @@ class StreamingSpec extends SparkSpec {
       "replayed batch re-folded into the split table")
     assert(spark.table("streambridge_grams").count() == gramsN,
       "replayed batch re-appended index rows")
+  }
+
+  test("a split micro-batch evaluates its signatures in one plan and reads the bands once per probe") {
+    import graft.operators.Dedup
+    import graft.functions.MinhashSignature
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val T  = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val T2 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu"
+    val T3 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda xi"
+    Dedup.writeDedupIndex(Seq((20L, T), (22L, T2)).toDF("doc_id", "text"), "streamshape")
+    Dedup.writeSplitTable(
+      Seq((20L, 20L, "val"), (22L, 22L, "train")).toDF("doc_id", "label", "split"),
+      "streamshape")
+
+    // every executed plan's node list, through AQE's final plan and its
+    // stages; a reused exchange is a leaf, so nothing is counted twice
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    }) ++ p.subqueries.flatMap(nodes))
+    // per executed plan: (evaluates the signature, `_bands` scans)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Int)]()
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.analyzed.output.exists(_.name == "shape_marker")) markerSeen = true
+        val ns = nodes(qe.executedPlan)
+        plans.add((
+          ns.exists(_.expressions.exists(_.exists(_.isInstanceOf[MinhashSignature]))),
+          ns.count {
+            case s: FileSourceScanExec => s.tableIdentifier.exists(_.table == "streamshape_bands")
+            case _ => false
+          }))
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the start, so the stream's cloned session has it
+    spark.listenerManager.register(listener)
+    val assigned = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val bridged = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try {
+      val mem = MemoryStream[(Long, String)](spark)
+      val cp = java.nio.file.Files.createTempDirectory("graft-shape-cp").toString
+      val q = StreamPipelines.streamingSplitAssign(
+        mem.toDF().toDF("doc_id", "text"), "streamshape",
+        (df, _) => assigned.synchronized { assigned ++= df.collect().map(_.getLong(0)) }, cp,
+        driftSink = Some((df, _) => bridged.synchronized {
+          bridged ++= df.filter(col("migrate")).collect().map(_.getLong(0))
+        }))
+      mem.addData((30L, T3), (40L, "wholly unrelated content about brokers and offsets and lag"))
+      q.processAllAvailable()
+      q.stop()
+      // listener events arrive asynchronously and in order: once the
+      // marker query is seen, every plan of the micro-batch has been
+      spark.range(1).toDF("shape_marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "marker query never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+
+    assert(assigned.sorted == Seq(30L, 40L), assigned.toString)
+    assert(bridged == Seq(30L), s"doc 30 bridges two at-rest clusters: $bridged")
+    val all = plans.toArray(Array.empty[(Boolean, Int)]).toSeq
+    assert(all.count(_._1) == 1,
+      s"${all.count(_._1)} executed plans evaluate the signature; the batch owns one index")
+    // one probe (the monitor and the assignment share its pairs) plus
+    // the replay guard of the bands append
+    val bandScans = all.map(_._2).sum
+    assert(bandScans <= 2, s"$bandScans scans of streamshape_bands in one micro-batch")
   }
 
   test("unified corpus ingest equals the three standalone loops on the same slices") {

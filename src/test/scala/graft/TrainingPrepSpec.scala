@@ -288,14 +288,16 @@ class TrainingPrepSpec extends SparkSpec {
     val atRest = docs.filter(bucket =!= 7 && bucket =!= 11)
     graft.operators.Dedup.writeDedupIndex(atRest, "d2chk")
     val admittedA = docs.filter(bucket === 7).join(
-      TrainingPrep.deltaAdmissionChain(spark, sf, docs.filter(bucket === 7), "d2chk")
+      TrainingPrep.deltaAdmissionChain(spark, sf, docs.filter(bucket === 7),
+        Dedup.minhashIndexOf(docs.filter(bucket === 7)), "d2chk")
         .select(col("doc_id")),
       Seq("doc_id"), "left_semi")
     graft.operators.Dedup.writeDedupIndex(
       atRest.select(col("doc_id"), col("text"))
         .unionByName(admittedA.select(col("doc_id"), col("text"))), "d2chk2")
     val expected = TrainingPrep.deltaAdmissionChain(
-        spark, sf, docs.filter(bucket === 11), "d2chk2")
+        spark, sf, docs.filter(bucket === 11), Dedup.minhashIndexOf(docs.filter(bucket === 11)),
+        "d2chk2")
       .collect().map(_.toSeq).toSeq
     assert(out2 == expected,
       s"append-then-probe ${out2.size} rows != rebuild-then-probe ${expected.size}")
@@ -310,16 +312,18 @@ class TrainingPrepSpec extends SparkSpec {
     val bucket = GoldenHash.bucket(col("doc_id"), 20)
     val batch = docs.filter(bucket === 7)
     Dedup.writeDedupIndex(docs.filter(bucket =!= 7), "racechk")
-    val before = TrainingPrep.deltaAdmissionChain(spark, sf, batch, "racechk")
+    val before = TrainingPrep.deltaAdmissionChain(spark, sf, batch,
+        Dedup.minhashIndexOf(batch), "racechk")
       .collect().map(_.toSeq).toSeq
     assert(before.nonEmpty, "degenerate: the batch admitted nothing at spec SF")
     // the append's input must not run the chain: its first action would
     // materialize any lazy pin before the append
     val admitted = before.map(_.head.asInstanceOf[Long])
-    val chain = TrainingPrep.deltaAdmissionChain(spark, sf, batch, "racechk")
-    Dedup.appendDedupIndex(
-      batch.filter(col("doc_id").isin(admitted: _*)).select(col("doc_id"), col("text")),
-      "racechk")
+    val chain = TrainingPrep.deltaAdmissionChain(spark, sf, batch,
+      Dedup.minhashIndexOf(batch), "racechk")
+    val admittedDocs = batch.filter(col("doc_id").isin(admitted: _*))
+      .select(col("doc_id"), col("text"))
+    Dedup.appendDedupIndex(admittedDocs, Dedup.minhashIndexOf(admittedDocs), "racechk")
     val after = chain.collect().map(_.toSeq).toSeq
     assert(after == before,
       s"collected after the append: ${after.size} rows, before it: ${before.size}")
