@@ -153,6 +153,21 @@ object BpeTrain {
   private def learnDriverSide(s: SparkSession, d: String, rounds: Int): Seq[Merge] =
     induceMerges(collectVocabCapped(vocab(s, d), DriverVocabCap), rounds)
 
+  /** Strict variant for consumers whose math is cap-SENSITIVE: the
+    * unigram EM — a pruned hapax tail changes substring
+    * counts and the Laplace total/nPieces denominators, so BPE's
+    * "hapax words cannot change merges" argument does not transfer.
+    * Collect the full vocab or fail loudly; never prune.
+    */
+  private[graft] def collectVocabAll(v: DataFrame,
+      cap: Int): Array[(String, Long)] = {
+    val head = v.select(col("seq"), col("freq")).limit(cap + 1).collect()
+    require(head.length <= cap,
+      s"vocab exceeds the driver cap $cap and this consumer cannot prune " +
+        "without changing its result (unigram EM denominators); raise the cap")
+    head.map(r => (r.getString(0), r.getLong(1)))
+  }
+
   /** Collect a (seq, freq) vocab frame under a driver-size cap. Fits →
     * plain collect. Over the cap → the MIN-FREQUENCY PRUNE the
     * [[DriverVocabCap]] scaladoc names (standard BPE practice): keep
@@ -167,26 +182,12 @@ object BpeTrain {
     * merges on the surviving vocab unchanged (BpeTrainSpec pins this).
     * When the cap would force dropping REPEATED words — whose pair
     * counts can move an argmax and silently change learned merges
-    * (ADVICE r13) — the method fails loudly instead: raise the cap or
-    * use the distributed [[learn]] path, which has no driver collect.
+    * — the method fails loudly instead: raise the cap, or learn at most
+    * [[DistributedRoundsMax]] rounds, which [[learnMerges]] runs as
+    * distributed aggregations with no driver collect.
     * The frequency histogram collected to choose the threshold is
     * distinct-FREQUENCY-bound (≪ vocab), never vocab-bound.
     */
-  /** Strict variant for consumers whose math is cap-SENSITIVE: the
-    * unigram EM (ADVICE r15) — a pruned hapax tail changes substring
-    * counts and the Laplace total/nPieces denominators, so BPE's
-    * "hapax words cannot change merges" argument does not transfer.
-    * Collect the full vocab or fail loudly; never prune.
-    */
-  private[graft] def collectVocabAll(v: DataFrame,
-      cap: Int): Array[(String, Long)] = {
-    val head = v.select(col("seq"), col("freq")).limit(cap + 1).collect()
-    require(head.length <= cap,
-      s"vocab exceeds the driver cap $cap and this consumer cannot prune " +
-        "without changing its result (unigram EM denominators); raise the cap")
-    head.map(r => (r.getString(0), r.getLong(1)))
-  }
-
   private[graft] def collectVocabCapped(v: DataFrame,
       cap: Int): Array[(String, Long)] = {
     val vf = v.select(col("seq"), col("freq"))
@@ -210,7 +211,8 @@ object BpeTrain {
       require(maxDroppedFreq <= 1L,
         s"BPE vocab cap $cap would prune REPEATED words (dropped band " +
           s"frequency $maxDroppedFreq > 1), which can change learned merges; " +
-          s"raise the cap or use the distributed learn() path")
+          s"raise the cap, or learn at most $DistributedRoundsMax merge rounds " +
+          "(that path aggregates on the cluster and collects no vocab)")
       val droppedWords = hist.drop(i).map(_._2).sum
       val droppedMass = hist.drop(i).map { case (f, n) => f * n }.sum
       val totalMass = hist.map { case (f, n) => f * n }.sum

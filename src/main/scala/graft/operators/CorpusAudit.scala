@@ -528,9 +528,9 @@ object CorpusAudit {
     * constant. Wiring-time step of the unified ingest's optional
     * frozen-LM admission gate.
     */
-  def writeMooreLewisLm(atRest: DataFrame, prefix: String, buckets: Int = 8): Unit = {
+  def writeMooreLewisLm(atRest: DataFrame, prefix: String): Unit = {
     val (llr, unk) = mooreLewisFit(atRest)
-    graft.storage.LogStore.writeBucketed(llr, s"${prefix}_ml_llr", "word", buckets)
+    graft.storage.LogStore.writeBucketed(llr, s"${prefix}_ml_llr", "word")
     graft.storage.LogStore.writeBucketed(unk, s"${prefix}_ml_unk", "unk_q", 1)
     // the frozen BUDGET cutpoint (VERDICT r18 item 3): the 0.8 score
     // quantile over the at-rest candidates under the just-frozen LM,

@@ -1270,23 +1270,6 @@ object Dedup {
       .join(s.table(s"${prefix}_digests"), Seq("digest"), "left_anti")
       .drop("digest")
 
-  // lazy: oracle objects reference operator constants (e.g. DedupOracles
-  // .spanCtes -> Dedup.SpanLen), so an eager defs -- which reads the oracle
-  // object back -- would deadlock-null mid-initialization when a composed
-  // oracle (TrainingOracles.corpusPrep4) initializes the oracle object first
-  /** Quality-aware canonical selection — the refinement a production
-    * dedup pass runs instead of keep-min-id: within each near-dup
-    * cluster ([[minhashDedup]]'s connected components), keep the copy
-    * with the HIGHEST model-quality logit
-    * ([[TextAnalysis.modelQuality]]), doc_id ascending as the
-    * tie-break. Rank runs on the round-6 quantized logit both engines
-    * already emit, so canonical choice cannot flip on fit-side ulp
-    * drift; docs the quality gate never scored (empty after
-    * tokenization) rank at a -1e9 sentinel. Composition of two cached
-    * builders + one join + one cluster-partitioned window;
-    * verified-not-benched (both constituents hold bench slots —
-    * the corpusPrep-prefix precedent).
-    */
   /** Near-dup cluster-size histogram: how many clusters of each size
     * the minhash pass found and how many docs they hold — the corpus-
     * health rollup a dedup run reports (a fat tail of large clusters
@@ -1303,6 +1286,19 @@ object Dedup {
         (col("cluster_size") * col("n_clusters")).as("n_docs"))
       .orderBy(col("cluster_size"))
 
+  /** Quality-aware canonical selection — the refinement a production
+    * dedup pass runs instead of keep-min-id: within each near-dup
+    * cluster ([[minhashDedup]]'s connected components), keep the copy
+    * with the HIGHEST model-quality logit
+    * ([[TextAnalysis.modelQuality]]), doc_id ascending as the
+    * tie-break. Rank runs on the round-6 quantized logit both engines
+    * already emit, so canonical choice cannot flip on fit-side ulp
+    * drift; docs the quality gate never scored (empty after
+    * tokenization) rank at a -1e9 sentinel. Composition of two cached
+    * builders + one join + one cluster-partitioned window;
+    * verified-not-benched (both constituents hold bench slots —
+    * the corpusPrep-prefix precedent).
+    */
   def dedupCanonical(s: SparkSession, d: String): DataFrame = {
     val clusters = minhashDedup(s, d)
       .select(col("doc_id"), col("kept_doc_id").as("cluster_id"))
@@ -1319,6 +1315,10 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  // lazy: oracle objects reference operator constants (e.g. DedupOracles
+  // .spanCtes -> Dedup.SpanLen), so an eager defs -- which reads the oracle
+  // object back -- would deadlock-null mid-initialization when a composed
+  // oracle (TrainingOracles.corpusPrep4) initializes the oracle object first
   lazy val defs: Map[String, QueryDef] = Map(
     "q_dedup_canonical" -> QueryDef(dedupCanonical, Some(DedupOracles.dedupCanonical), headline = false),
     "q_dedup_cluster_stats" -> QueryDef(dedupClusterStats,

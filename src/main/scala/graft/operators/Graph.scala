@@ -13,19 +13,20 @@ import graft.Pins.FramePin
   *
   * Algorithm: every vertex starts as its own label; each round applies
   * TWO propagation hops (vertex := min over itself and neighbors) and
-  * the loop stops when a round changes zero labels (delta-counted on
-  * the round's checkpoint — a cheap second job), capped to bound
+  * the loop stops when a round changes zero labels (delta-counted
+  * against the previous round's cached labels), capped to bound
   * adversarial diameters. Rounds therefore cover component RADIUS/2;
   * the two-hop step exists because at propagation data volumes the
-  * round cost is job latency, not join work. At convergence every vertex holds its component's global
-  * minimum vertex id — exact connected components, which is what lets a
-  * recursive-CTE transitive closure in DuckDB serve as the oracle.
+  * round cost is job latency, not join work. At convergence every
+  * vertex holds its component's global minimum vertex id — exact
+  * connected components, which is what lets a recursive-CTE transitive
+  * closure in DuckDB serve as the oracle.
   *
   * Scale shape: per round, one join of the edge list against the
   * current labels (both sides hash-partitioned on the join key — at
   * 100 TB both would be bucketed on vertex id so rounds reuse one
   * partitioning) + one min-aggregate per vertex; the edge list is
-  * checkpointed once and reused every round. Rounds scale with
+  * pinned once and reused every round. Rounds scale with
   * component DIAMETER, not size — dup-cluster graphs with star/hub
   * shapes converge in 2-3 rounds. (For adversarially long chains the
   * structural alternative is large-star/small-star, which squares the
@@ -39,27 +40,18 @@ object Graph {
     * symmetrized here). Vertices with no edges keep their own id.
     * Returns ("id", "component").
     *
-    * CONCURRENCY: the fixpoint loop pins session-global conf
-    * (`spark.sql.adaptive.enabled`=false, `spark.sql.shuffle
-    * .partitions`=loop width) for its duration and restores it in a
-    * finally. Concurrent `connectedComponents` calls on the same
-    * session serialize on a per-session lock, but OTHER planning on
-    * the same SparkSession concurrent with this call (including a
-    * first build of a session cache such as the minhash/LSH index)
-    * would compile against the loop's pinned conf — drive this
-    * operator from the session's single planning thread, or isolate
-    * it on its own SparkSession. (Hosting the loop in a cloned
-    * `newSession` internally was measured and rejected r8: the RDD
-    * hand-off boundary breaks cached-plan reuse, 3× the loop cost.)
+    * CONCURRENCY: the loop reads its caller's session settings and
+    * never changes them, so other threads may plan on the same session
+    * while it runs (GraphSpec plans an aggregate beside a deep chain).
     */
   def connectedComponents(
       vertices: DataFrame, edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val (labels, changed, _) = propagate(vertices, edges, maxRounds)
+    val (labels, changed) = propagate(vertices, edges, maxRounds)
     // the loop always converges in <= component-diameter rounds, so the
     // cap is a runaway backstop, not an expected exit: hitting it means
     // TRUNCATED (wrong) labels. This is a public operator — a caller
     // without an oracle behind it would silently consume wrong component
-    // ids off a WARN, so exhaustion throws instead (ADVICE r7)
+    // ids off a WARN, so exhaustion throws instead
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents hit maxRounds=$maxRounds before convergence " +
@@ -78,12 +70,12 @@ object Graph {
 
   /** Row bound (per frame: vertices, then edges) under which
     * [[components]] solves the graph with a driver-local union-find
-    * instead of the distributed loop. The loop's floor is ~1.4 s of
-    * pure job-scheduling latency at ANY small size (two materialized
-    * rounds × per-hop shuffles — see [[propagateLoop]]'s profiling
-    * notes); a bounded collect + path-compressed union-find answers
-    * the same graph in ~0.1 s. The regime this serves is exactly the
-    * steady state of the incremental operators: batch-internal
+    * instead of the distributed loop. The loop's floor is about a
+    * second of pure job-scheduling latency at ANY small size (two
+    * materialized rounds, each a stack of per-hop shuffles — see
+    * [[propagate]]); a bounded collect + path-compressed union-find
+    * answers the same graph in ~0.1 s. The regime this serves is
+    * exactly the steady state of the incremental operators: batch-internal
     * closures ([[Dedup.splitAssignDelta]]'s per-ingest components) are
     * candidate-bounded ∝ batch, not corpus. The bound is enforced by
     * `limit(cutoff + 1)` BEFORE the collect — an over-bound graph
@@ -98,15 +90,15 @@ object Graph {
   val DriverUfMaxRows: Int = 262144
 
   /** Exact components via driver union-find, or None if either frame
-    * exceeds `cutoff` rows. Mirrors [[propagateLoop]]'s semantics
-    * EXACTLY (ADVICE r14): labels are vertex-seeded — the component
+    * exceeds `cutoff` rows. Mirrors [[propagate]]'s semantics
+    * EXACTLY: labels are vertex-seeded — the component
     * label is the minimum VERTEX id reachable, never a bare edge
     * endpoint's id — and the output row set is the loop's fixpoint row
     * set: all vertices, plus every edge endpoint whose component
     * contains at least one vertex (endpoints in vertex-free components
     * never acquire a label in the loop and are likewise absent here).
     * Ids are cast to long before collect so IntegerType frames take
-    * this tier as safely as the loop (ADVICE r14).
+    * this tier as safely as the loop.
     */
   private def driverComponents(vertices: DataFrame, edges: DataFrame,
       cutoff: Int): Option[DataFrame] = {
@@ -148,39 +140,36 @@ object Graph {
     Some(out.toSeq.map { case (id, c) => (id, c) }.toDF("id", "component"))
   }
 
-  /** Auto-selecting exact connected components — the plan choice the
-    * r11 verdict asked the OPERATOR to own instead of its callers:
-    * propagation rounds scale with component diameter (best plan for
-    * the hub-shaped graphs dedup actually produces; each round moves
-    * only |V| labels over a pinned edge list), while large-star/
-    * small-star converges in O(log² n) rounds regardless of diameter
-    * but rewrites the full edge multiset every round. No cheap static
-    * stat predicts diameter, so the most predictive graph stat is
-    * measured directly: the probe RUNS propagation under a
-    * [[ComponentsProbeRounds]] budget, and its convergence IS the
-    * decision. If the budget exhausts, nothing is thrown away — the
-    * partial labels are a valid contraction (every vertex already
-    * holds the min id of its ≤k-hop neighborhood, and each true
-    * component minimum m keeps label m), so the escalation runs
-    * large-star/small-star on the CONTRACTED residual graph (one
+  /** Auto-selecting exact connected components — the operator, not its
+    * callers, owns the plan choice: propagation rounds scale with
+    * component diameter (best plan for the hub-shaped graphs dedup
+    * actually produces; each round moves only |V| labels over a pinned
+    * edge list), while large-star/small-star converges in O(log² n)
+    * rounds regardless of diameter but rewrites the full edge multiset
+    * every round. No cheap static stat predicts diameter, so the most
+    * predictive graph stat is measured directly: the probe RUNS
+    * propagation under a [[ComponentsProbeRounds]] budget, and its
+    * convergence IS the decision. If the budget exhausts, nothing is
+    * thrown away — the partial labels are a valid contraction (every
+    * vertex already holds the min id of its ≤k-hop neighborhood, and
+    * each true component minimum m keeps label m), so the escalation
+    * runs large-star/small-star on the CONTRACTED residual graph (one
     * label-join per endpoint + distinct — typically far smaller than
     * the input edge list, since the probe has already collapsed every
     * shallow component to a point) and composes the result through the
-    * probe labels. Measured r12 on the sf1 rehearsal graph (50k
-    * vertices / 823k edges, hub-shaped): all plans land in 5–10 s —
-    * propagation 6.9 s, star rewrite 9.3 s, auto 5–10 s — so on the
-    * graphs this engine actually produces the probe converges and auto
-    * ≈ propagation; the escalation exists for the deep-component
-    * regime (GraphSpec plants diameter-59 chains), where the probe's
-    * bounded waste buys an O(log² n)-round finish instead of rounds ∝
-    * diameter. A THIRD tier sits in front of both since round 14:
-    * graphs whose vertex and edge frames each fit under
-    * [[DriverUfMaxRows]] rows are solved exactly by a driver-local
-    * union-find (see the constant's scaladoc for the regime and the
-    * bound-by-construction argument).
+    * probe labels. On the sf1 rehearsal graph (50k vertices / 823k
+    * edges, hub-shaped) the probe converges, so on the graphs this
+    * engine actually produces auto ≈ propagation (run medians 2.1–4.0 s
+    * on `local[4]` at shuffle widths 4 and 32, either plan); the
+    * escalation exists for the deep-component regime (GraphSpec plants
+    * diameter-59 chains), where the probe's bounded waste buys an
+    * O(log² n)-round finish instead of rounds ∝ diameter. A THIRD tier
+    * sits in front of both: graphs whose vertex and edge frames each
+    * fit under [[DriverUfMaxRows]] rows are solved exactly by a
+    * driver-local union-find (see the constant's scaladoc for the
+    * regime and the bound-by-construction argument).
     */
   def components(vertices: DataFrame, edges: DataFrame,
-      probeRounds: Int = ComponentsProbeRounds, maxRounds: Int = 50,
       driverCutoff: Int = DriverUfMaxRows): DataFrame = {
     if (driverCutoff > 0) {
       driverComponents(vertices, edges, driverCutoff) match {
@@ -188,7 +177,7 @@ object Graph {
         case None =>
       }
     }
-    val (labels, changed, _) = propagate(vertices, edges, probeRounds)
+    val (labels, changed) = propagate(vertices, edges, ComponentsProbeRounds)
     if (changed == 0) labels
     else {
       // contract: rewrite each edge endpoint to its probe label; edges
@@ -200,7 +189,7 @@ object Graph {
         .select(col("cu").as("src"), col("cv").as("dst"))
         .filter(col("src") =!= col("dst"))
       val contractedVerts = lbl.select(col("component").as("id")).distinct()
-      val roots = largeSmallStarComponents(contractedVerts, contracted, maxRounds)
+      val roots = largeSmallStarComponents(contractedVerts, contracted)
       lbl.select(col("id"), col("component").as("probe_component"))
         .join(roots.select(col("id").as("probe_component"), col("component")),
           Seq("probe_component"))
@@ -208,66 +197,39 @@ object Graph {
     }
   }
 
-  /** One lock per session guarding the conf-pinned loop region, so two
-    * concurrent component builds cannot interleave their conf pins.
-    */
-  private val confLocks = graft.Pins.session[Unit, Object]()
-
   /** The budgeted propagation loop shared by [[connectedComponents]]
     * (which throws on budget exhaustion) and [[components]] (which
-    * escalates). Returns (labels, stillChanging, roundsRun) — labels
-    * are EXACT iff stillChanging == 0, otherwise a valid contraction.
+    * escalates). Returns (labels, stillChanging) — labels are EXACT iff
+    * stillChanging == 0, otherwise a valid contraction.
+    *
+    * The loop plans under its caller's session settings and never
+    * changes them: AQE re-plans each round's shuffles from their
+    * observed sizes, and the pinned edge list and the initial labels
+    * take the session's `spark.sql.shuffle.partitions` as their width.
     */
   private def propagate(vertices: DataFrame, edges: DataFrame,
-      maxRounds: Int): (DataFrame, Long, Int) = {
-    val lock = confLocks.getOrBuild(vertices.sparkSession, ())(new Object)
-    lock.synchronized { propagateLoop(vertices, edges, maxRounds) }
-  }
-
-  private def propagateLoop(
-      vertices: DataFrame, edges: DataFrame, maxRounds: Int): (DataFrame, Long, Int) = {
-    // symmetrized edges PLUS a self-loop per vertex. The self-loops are
-    // the load-bearing trick (profiled r8): they make one propagation
-    // hop a single join + min-aggregate that references the label frame
-    // ONCE — `component := min over in-neighbors∪self of component` —
-    // so k hops stack into one linear plan. The earlier least/left-join
-    // hop referenced its input twice, so stacking k hops grew the plan
-    // (and the recomputation) 2^k-fold; measured at 4 stacked hops it
-    // DOUBLED the loop's wall clock instead of halving it. Self-loops
-    // add |V| rows to a 2|E| edge list — linear, and they also carry
-    // isolated vertices through the aggregate (no null-extending join
-    // needed).
-    // hash-partitioned by the join key BEFORE the checkpoint pins it:
-    // every hop joins this list against a label frame that is itself the
-    // output of a groupBy(src)-as-id aggregate (hash-partitioned on id),
-    // so the per-hop join needs NO exchange on either side — one
-    // partitioning bought once, reused every round (the bucketed-join
-    // stance applied to the loop; at 100 TB both sides would be bucketed
-    // tables). Profiled r8: the unpartitioned form re-shuffled both
-    // sides every hop, and the loop is job-latency-bound.
-    // SIZE-PROPORTIONAL parallelism for the loop: every hop is a shuffle
-    // whose cost at small graph sizes is pure per-partition scheduling
-    // latency × rounds — a 17k-row edge list gains nothing from 32-way
-    // shuffles but pays their latency every hop (profiled r8). Target
-    // ~64k rows per partition, capped at the session default so a
-    // 100 TB edge list keeps full cluster parallelism; the label frames
-    // inherit the same width through the hop aggregate below. Setup is
-    // two jobs: the count materializes the cached union, the checkpoint
-    // pins it at the chosen width with hashpartitioning(dst) intact so
-    // every hop's join runs exchange-free. (Measured and rejected r8:
-    // one AQE-sized repartition(dst)+checkpoint — the coalesced
-    // partitioning does not survive the checkpoint, and the per-hop
-    // re-exchange gave back the saved setup job.)
-    val undirectedRaw = edges.select(col("src"), col("dst"))
+      maxRounds: Int): (DataFrame, Long) = {
+    // symmetrized edges PLUS a self-loop per vertex. The self-loops make
+    // one propagation hop a single join + min-aggregate that references
+    // the label frame ONCE — `component := min over in-neighbors∪self
+    // of component` — so k hops stack into one linear plan (a hop that
+    // references its input twice grows a k-hop plan, and its
+    // recomputation, 2^k-fold). Self-loops add |V| rows to a 2|E| edge
+    // list — linear, and they also carry isolated vertices through the
+    // aggregate (no null-extending join needed).
+    // hash-partitioned by the join key BEFORE the pin: every hop joins
+    // this list against a label frame that is itself the output of a
+    // groupBy(src)-as-id aggregate (hash-partitioned on id), so the
+    // partitioning is bought once and reused every round (the
+    // bucketed-join stance applied to the loop; at 100 TB both sides
+    // would be bucketed tables). The width is the session's, the same
+    // width the hop aggregate's shuffle plans at.
+    val width = vertices.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val undirected = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .union(vertices.select(col("id").as("src"), col("id").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val loopParts = math.max(1L, math.min(
-      vertices.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
-      undirectedRaw.count() / 65536L + 1L)).toInt
-    val undirected = undirectedRaw.repartition(loopParts, col("dst"))
+      .repartition(width, col("dst"))
       .pin("2|E|+|V| loop-pinned edge rows")
-    undirectedRaw.unpersist(false)
 
     // one hop, label frame referenced once (linear stacking)
     def hop(lbl: DataFrame): DataFrame = undirected
@@ -278,61 +240,26 @@ object Graph {
     // initial labels co-partitioned with the edge list (subsequent label
     // frames inherit id-partitioning from the hop aggregate)
     var labels = vertices.select(col("id"), col("id").as("component"))
-      .repartition(loopParts, col("id"))
+      .repartition(width, col("id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var changed = 1L
     var rounds = 0
-    // CONCURRENCY CONTRACT: the conf pin below mutates the CALLER'S
-    // session conf for the duration of the loop (restored in the
-    // finally). Do not run this operator concurrently with other
-    // planning on the same SparkSession — a sibling thread that plans
-    // (or first-builds a session cache like the minhash/LSH index)
-    // mid-loop would compile against the loop's 1-partition width/AQE-
-    // off state. (Measured and rejected r8: hosting the loop in a
-    // cloned `newSession` with its own conf — the RDD hand-off
-    // boundary breaks cached-plan reuse and cost 3× the whole loop.)
-    // The fixpoint loop runs with AQE OFF and shuffle.partitions =
-    // loopParts (both restored in the finally): with AQE on, every
-    // shuffle inside every stacked hop materializes as its own
-    // query-stage JOB — profiled r8 at 42 jobs / 2.7 s for a 2-round
-    // fixpoint over a 5k-vertex graph whose actual join work is
-    // milliseconds. AQE's only contribution here is coalescing the
-    // in-loop shuffles down to ~loopParts partitions, which the loop
-    // now sets directly; with the width pinned, static planning does
-    // the identical data movement in ONE job per action (profiled r8:
-    // 2.7 s → ~0.9 s). AQE off WITHOUT pinning the width is the worst
-    // of both (32-task stages per hop, profiled 12 s) — the two
-    // settings only work as a pair. AQE stays on for every surrounding
-    // plan, including the edge-list prep above.
-    val spark = vertices.sparkSession
-    val loopConf = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> loopParts.toString)
-    val explicit = spark.conf.getAll // set keys only; getOption answers defaults too
-    val was = loopConf.map { case (k, _) => k -> explicit.get(k) }
-    loopConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
     while (changed > 0 && rounds < maxRounds) {
       rounds += 1
-      // At propagation data volumes the cost of a round is JOB LATENCY,
-      // not the tiny joins (profiled r8), so:
-      //   - hop SCHEDULE: the first round stacks 4 hops — LSH bucket
-      //     graphs (star hub + id-adjacent path chains) have diameter
-      //     ≤ ~4 in practice, so one materialization usually reaches the
-      //     fixpoint and the second round merely confirms; later rounds
-      //     drop to 2 hops (adversarially deep components pay extra
-      //     rounds, not extra per-round latency). Convergence detection
-      //     is unaffected: a k-hop fixpoint is a one-hop fixpoint
-      //     (labels are monotone non-increasing). (Measured and
-      //     rejected: folding the convergence test into the working
-      //     round by delta-counting hop⁴ against hop³ — the comparison
-      //     side duplicates the 3-hop subtree inside the job and cost
-      //     MORE than the separate cheap confirming round.)
-      //   - ONE job per round: persist() + the delta count (a join of
-      //     two cached label frames) materializes the round in a single
-      //     action, where the earlier eager localCheckpoint spent a
-      //     separate job per round before the count. Lineage grows
-      //     across cached rounds (analysis cost, not execution), so it
-      //     is truncated every 4th round.
+      // Hop schedule: the first round stacks 4 hops — LSH bucket graphs
+      // (star hub + id-adjacent path chains) have diameter ≤ ~4 in
+      // practice, so one materialization usually reaches the fixpoint
+      // and the second round merely confirms; later rounds drop to 2
+      // hops, so adversarially deep components pay extra rounds, not a
+      // deeper plan per round. Convergence detection is unaffected: a
+      // k-hop fixpoint is a one-hop fixpoint (labels are monotone
+      // non-increasing). (Measured and rejected: folding the test into
+      // the working round by delta-counting hop⁴ against hop³ — the
+      // comparison side duplicates the 3-hop subtree and cost MORE than
+      // the separate confirming round.) The round is materialized by
+      // its delta count (a join of two cached label frames); lineage
+      // grows across cached rounds (analysis cost, not execution), so
+      // it is cut every 4th round.
       val hops = if (rounds == 1) 4 else 2
       var cur = labels
       (1 to hops).foreach(_ => cur = hop(cur))
@@ -350,20 +277,10 @@ object Graph {
     }
     // pin the result and release the loop cache: callers compose this
     // frame into larger plans, which must not depend on loop-scoped
-    // cache entries (checkpointed inside the pinned-width scope so the
-    // pinning job is also one job)
+    // cache entries
     val out = labels.pin("|V| label rows")
     labels.unpersist(false)
-    labels = out
-    } finally {
-      // a setting the caller never set is unset again, not written back
-      // as its default
-      was.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    (labels, changed, rounds)
+    (out, changed)
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR edge

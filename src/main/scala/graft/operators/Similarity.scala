@@ -800,10 +800,6 @@ object Similarity {
         round(col("maxabs") / lit(127.0), 6).as("scale"))
       .orderBy(col("vec_id"))
 
-  // lazy: oracle objects reference operator constants (e.g. DedupOracles
-  // .spanCtes -> Dedup.SpanLen), so an eager defs -- which reads the oracle
-  // object back -- would deadlock-null mid-initialization when a composed
-  // oracle (TrainingOracles.corpusPrep4) initializes the oracle object first
   /** Similarity threshold for [[semanticDecontaminate]]. 0.35 is tuned
     * to the synthetic fixture (isotropic vectors: cross-split max-sim
     * spans ~0.15–0.49, so the gate drops a real minority and keeps a
@@ -983,6 +979,10 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  // lazy: oracle objects reference operator constants (e.g. DedupOracles
+  // .spanCtes -> Dedup.SpanLen), so an eager defs -- which reads the oracle
+  // object back -- would deadlock-null mid-initialization when a composed
+  // oracle (TrainingOracles.corpusPrep4) initializes the oracle object first
   lazy val defs: Map[String, QueryDef] = Map(
     // verified-not-benched since r14: the brute-force exact top-k
     // baseline of the four benched ANN paths (lsh / ivfpq families)

@@ -155,12 +155,17 @@ object LogStore {
           .as("distinct_users"))
       .orderBy(col("event_type"))
 
+  /** Bucket count of every table an append targets: an append must
+    * repeat its table's spec, so [[appendBucketed]] takes no count.
+    */
+  private val Buckets = 8
+
   /** Persist as a bucketed+sorted managed table (in-session catalog).
     * Joins/aggregations on `bucketCol` against co-bucketed tables need
     * no exchange.
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int = 8): Unit = {
+      buckets: Int = Buckets): Unit = {
     // a managed table written by a PREVIOUS JVM leaves its warehouse
     // directory behind while the fresh session's catalog has no entry —
     // saveAsTable then refuses with LOCATION_ALREADY_EXISTS. Drop both
@@ -178,17 +183,16 @@ object LogStore {
       .saveAsTable(table)
   }
 
-  /** Append to an existing [[writeBucketed]] table with the SAME bucket
-    * spec — Spark validates the spec against the catalog entry, and the
-    * appended files land in their hash buckets, so co-bucketed joins
+  /** Append to an existing [[writeBucketed]] table of the default
+    * bucket count — Spark validates the spec against the catalog entry,
+    * and the appended files land in their hash buckets, so co-bucketed joins
     * stay exchange-free across appends. This is the at-rest side of
     * every incremental index in the engine: the index GROWS by batch-
     * sized appends and is never rewritten.
     */
-  def appendBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int = 8): Unit =
+  def appendBucketed(df: DataFrame, table: String, bucketCol: String): Unit =
     df.write.mode(SaveMode.Append)
-      .bucketBy(buckets, bucketCol)
+      .bucketBy(Buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)

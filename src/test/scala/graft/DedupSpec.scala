@@ -444,7 +444,7 @@ class DedupSpec extends SparkSpec {
     // simulate the prior attempt dying between the bands and grams
     // appends: bands written, grams and digests missing
     graft.storage.LogStore.appendBucketed(
-      Dedup.fusedBandKeys(Dedup.minhashIndexOf(batch)), "apgx_bands", "bkey", 8)
+      Dedup.fusedBandKeys(Dedup.minhashIndexOf(batch)), "apgx_bands", "bkey")
     assert(spark.table("apgx_bands").count() == bands0 + nBatch * Dedup.MinhashBands)
     assert(spark.table("apgx_grams").count() == grams0)
 

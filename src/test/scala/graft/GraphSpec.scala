@@ -49,6 +49,41 @@ class GraphSpec extends SparkSpec {
     assert(e.getMessage.contains("maxRounds"), e.getMessage)
   }
 
+  test("connectedComponents leaves concurrent planning on its session untouched") {
+    // a 64-vertex chain keeps the loop busy for ~30 rounds while this
+    // thread plans aggregates on the same session: every plan must see
+    // the session's own settings and come out adaptive
+    val n = 64L
+    val vertices = (0L until n).toDF("id")
+    val edges = (1L until n).map(i => (i, i - 1)).toDF("src", "dst")
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = keys.map(k => k -> spark.conf.get(k)).toMap
+    val loop = scala.concurrent.Future(
+      Graph.connectedComponents(vertices, edges).as[(Long, Long)].collect())(
+      scala.concurrent.ExecutionContext.global)
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    var plans = 0
+    var bad = 0
+    while (!loop.isCompleted) {
+      val conf = keys.map(k => k -> spark.conf.get(k)).toMap
+      val plan = spark.range(100).groupBy(col("id") % 3).count()
+        .queryExecution.executedPlan
+      val wrong = Seq(
+        Option.when(conf != before)(s"conf $conf"),
+        Option.when(!plan.isInstanceOf[
+          org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])(
+          s"plan root ${plan.nodeName}")).flatten
+      plans += 1
+      if (wrong.nonEmpty) bad += 1
+      seen ++= wrong
+      Thread.sleep(10)
+    }
+    val got = scala.concurrent.Await.result(loop, scala.concurrent.duration.Duration.Zero)
+    assert(plans > 0)
+    assert(bad == 0, s"$bad of $plans plans saw: ${seen.mkString("; ")}")
+    assert(got.length == n.toInt && got.forall(_._2 == 0L))
+  }
+
   test("large-star/small-star labels ring, chain, and singletons exactly") {
     val vertices = (0L to 9L).toDF("id")
     val edges = Seq(
@@ -82,7 +117,7 @@ class GraphSpec extends SparkSpec {
     val n = 64L
     val vertices = (0L until n).toDF("id")
     val edges = (1L until n).map(i => (i, i - 1)).toDF("src", "dst")
-    val got = Graph.components(vertices, edges, probeRounds = 2, driverCutoff = 0)
+    val got = Graph.components(vertices, edges, driverCutoff = 0)
       .as[(Long, Long)].collect()
     assert(got.length == n.toInt && got.forall(_._2 == 0L),
       got.filter(_._2 != 0L).mkString(","))
@@ -108,7 +143,7 @@ class GraphSpec extends SparkSpec {
     val shallow = Seq.fill(60)((rnd.nextLong(100).abs, rnd.nextLong(100).abs))
       .filter { case (a, b) => a != b }
     val edges = (chain ++ shallow).toDF("src", "dst")
-    val auto = Graph.components(vertices, edges, probeRounds = 2, driverCutoff = 0)
+    val auto = Graph.components(vertices, edges, driverCutoff = 0)
       .as[(Long, Long)].collect().toMap
     val prop = Graph.connectedComponents(vertices, edges)
       .as[(Long, Long)].collect().toMap
@@ -133,7 +168,7 @@ class GraphSpec extends SparkSpec {
     val edges = (chain ++ rand).toDF("src", "dst")
     val driver = Graph.components(vertices, edges)
       .as[(Long, Long)].collect().toMap
-    val dist = Graph.components(vertices, edges, probeRounds = 2, driverCutoff = 0)
+    val dist = Graph.components(vertices, edges, driverCutoff = 0)
       .as[(Long, Long)].collect().toMap
     assert(driver == dist,
       s"disagreements: ${driver.collect { case (k, v) if dist(k) != v => (k, v, dist(k)) }}")
